@@ -19,23 +19,21 @@ import org.apache.spark.sql.functions._
   */
 final class MutableGraph(val spark: SparkSession, vDir: String, eDir: String) {
 
-  def vertices: DataFrame = spark.read.parquet(vDir)
-  def edges: DataFrame = spark.read.parquet(eDir)
+  // both stores infer their schema once per state (graft.Tables.readCached)
+  def vertices: DataFrame = graft.Tables.readCached(spark, vDir)
+  def edges: DataFrame = graft.Tables.readCached(spark, eDir)
   def graph: PropertyGraph = PropertyGraph(vertices, edges)
 
   // Roll back swaps torn by a crash in a previous session, if any.
   graft.sources.Publish.recover(spark, vDir)
   graft.sources.Publish.recover(spark, eDir)
 
-  // r11: staging write + swap instead of localCheckpoint + in-place
-  // overwrite — one distributed materialization per mutation instead of
-  // two (see MutableTable.overwrite); input frames evaluate during the
-  // staging write, while both backing dirs are still intact. r12: the
-  // swap is the shared crash-safe rename-aside protocol in Publish.
-  // r12 (verdict #2): the staging swap beat the r10 checkpoint+in-place
-  // protocol in a same-session interleaved A/B (q_cypher_create med
-  // 2.22 s vs 2.53 s over 5 pairs) — the r11 sweep regression was
-  // environmental. Kept.
+  // Staging write + swap (Publish): input frames evaluate during the
+  // staging write, while both backing dirs are still intact, so a
+  // mutation materializes once instead of checkpointing first and
+  // overwriting in place. In a same-session interleaved A/B the swap was
+  // also the faster of the two (q_cypher_create median 2.22 s vs 2.53 s
+  // over 5 pairs).
   private def overwriteV(next: DataFrame): Unit =
     graft.sources.Publish.overwrite(next, vDir)
   private def overwriteE(next: DataFrame): Unit =

@@ -26,20 +26,26 @@ import org.apache.spark.sql.functions._
   */
 final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String] = None) {
 
-  def df: DataFrame = spark.read.parquet(dir)
+  /** The current table state. Every mutation binds it once, so one
+    * mutation reads one state; the schema comes from the per-state memo
+    * ([[graft.Tables.readCached]]). */
+  def df: DataFrame = graft.Tables.readCached(spark, dir)
 
   // Roll back a swap torn by a crash in a previous session, if any
   // (one driver-side existence check per table open — see Publish).
   Publish.recover(spark, dir)
 
-  /** Publish `next` as the table's new state. r11: write to a staging
-    * directory and swap it into place, instead of localCheckpoint +
-    * in-place overwrite — one distributed materialization per mutation
-    * instead of two (the checkpoint existed only to decouple `next` from
-    * the directory it was about to clobber; writing the new state
-    * elsewhere achieves that with the write itself). r12: the swap is the
-    * shared crash-safe rename-aside protocol in [[Publish]]. */
-  private def overwrite(next: DataFrame): Unit = Publish.overwrite(next, dir)
+  /** Publish `next` as the table's new state through [[Publish]]: the
+    * staging write reads the still-intact current state, so `next` needs
+    * no materialization first. A table with a stats manifest on `keyCol`
+    * is rewritten through [[StatsStore.write]] instead, clustered on the
+    * key into as many files as the manifest tracks, so the manifest
+    * describes the files that replaced the old ones. */
+  private def overwrite(next: DataFrame): Unit = keyCol.filter(_ => hasManifest) match {
+    case Some(k) =>
+      StatsStore.write(next, dir, k, StatsStore.manifest(spark, dir).count().toInt.max(1))
+    case None => Publish.overwrite(next, dir)
+  }
 
   // ---- pruned write path (StatsStore keyed merge): when the table
   // carries a stats manifest built on `keyCol`, UPDATE/DELETE rewrite
@@ -88,14 +94,15 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
     triggers(event).foreach(_(rows))
 
   // BEFORE-timing hooks (reference trigger timing BEFORE|AFTER): fired
-  // with the staged rows before the directory overwrite commits
+  // with the staged rows before the directory overwrite commits. The
+  // mutation has already bound the state it rewrites, so a BEFORE hook
+  // must not write this same table.
   private def fireBefore(event: String, rows: DataFrame): Unit =
     fire(s"before_$event", rows)
 
   /** The feed write evaluates `keys` immediately and runs BEFORE the
-    * table swap, so it may read `dir` safely; the extra localCheckpoint
-    * this used to carry was one redundant materialization per mutation
-    * (r11). */
+    * table swap, so it may read `dir` safely without a materialization of
+    * its own. */
   private def emitChanges(op: String, keys: DataFrame): Unit = keyCol.foreach { k =>
     cdfSeq += 1
     keys.select(lit(cdfSeq).as("seq"), lit(op).as("op"), col(k).cast("long").as("key"))
@@ -103,7 +110,7 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
   }
 
   /** The accumulated change feed: (seq, op, key). */
-  def changeFeed: DataFrame = spark.read.parquet(cdfDir)
+  def changeFeed: DataFrame = graft.Tables.readCached(spark, cdfDir)
 
   /** INSERT … VALUES / FROM SELECT. */
   def insert(rows: DataFrame): Long = {
@@ -123,18 +130,19 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
     * (count, before, after) — the affected rows' pre- and post-images,
     * materialized before the overwrite (RETURN BEFORE | AFTER | COUNT). */
   def update(where: Column, sets: Seq[(String, Column)]): (Long, DataFrame, DataFrame) = {
-    val before = df.filter(where).localCheckpoint(eager = true)
-    // `after` derives only from the checkpointed pre-image — safe to keep
-    // lazy across the swap; checkpointing it was one more job per UPDATE (r11)
+    val cur = df
+    val before = cur.filter(where).localCheckpoint(eager = true)
+    // `after` derives only from the checkpointed pre-image, so it stays
+    // valid across the swap without a materialization of its own
     val after = sets.foldLeft(before)((d, s) => d.withColumn(s._1, s._2))
     fireBefore("update", before)
     emitChanges("update", before)
-    val noNewCols = sets.forall(s => df.columns.contains(s._1))
-    prunedKeys(before).filter(_ => noNewCols) match {
+    val noNewCols = sets.forall(s => before.columns.contains(s._1))
+    (if (noNewCols) prunedKeys(before) else None) match {
       case Some((k, ids)) =>
         StatsStore.mergeSet(spark, dir, k, ids, sets, rowCond = Some(where))
       case None =>
-        val untouched = df.filter(!coalesce(where, lit(false)))
+        val untouched = cur.filter(!coalesce(where, lit(false)))
         // schema-evolving: a SET/MERGE may introduce new property columns
         overwrite(untouched.unionByName(after, allowMissingColumns = true))
     }
@@ -147,15 +155,15 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
     * a null-row (UpsertStep.createNewRecord semantics). */
   def upsert(key: Map[String, Column], sets: Seq[(String, Column)]): Long = {
     val where = key.map { case (c, v) => col(c) === v }.reduce(_ && _)
-    val matched = df.filter(where)
-    if (matched.isEmpty) {
-      val cols = df.columns.map { c =>
-        key.get(c).orElse(sets.find(_._1 == c).map(_._2))
-          .getOrElse(lit(null).cast(df.schema(c).dataType)).as(c)
+    val cur = df
+    if (cur.filter(where).isEmpty) {
+      val cols = cur.schema.map { f =>
+        key.get(f.name).orElse(sets.find(_._1 == f.name).map(_._2))
+          .getOrElse(lit(null).cast(f.dataType)).as(f.name)
       }
-      val newRow = graft.OneRow(spark).select(cols.toIndexedSeq: _*) // literals only
+      val newRow = graft.OneRow(spark).select(cols: _*) // literals only
       emitChanges("insert", newRow)
-      overwrite(df.unionByName(newRow))
+      overwrite(cur.unionByName(newRow))
       fire("insert", newRow)
       1L
     } else {
@@ -176,14 +184,14 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
     val rid = "__rowid"
     val base = df.withColumn(rid, monotonically_increasing_id())
       .localCheckpoint(eager = true)
-    val cols = df.columns.toSeq
+    val cols = base.columns.toSeq.filterNot(_ == rid)
     val hit = base.filter(coalesce(where, lit(false)))
       .orderBy(cols.map(col(_).asc_nulls_first): _*)
       .select(rid).limit(1).collect().headOption
     hit.fold(0L) { r =>
       val chosen = col(rid) === lit(r.getLong(0))
       // before/next/fired all derive from the checkpointed `base` snapshot
-      // only — safe to keep lazy across the swap (r11: was 3 extra jobs)
+      // only, so they stay valid across the swap without materializing
       val before = base.filter(chosen).drop(rid)
       val next = apply(base, chosen)
       // post-image for update triggers; the removed row for delete
@@ -208,7 +216,8 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
 
   /** DELETE … WHERE; returns the deleted-row count (RETURN COUNT). */
   def delete(where: Column): Long = {
-    val deleted = df.filter(where).localCheckpoint(eager = true)
+    val cur = df
+    val deleted = cur.filter(where).localCheckpoint(eager = true)
     val n = deleted.count()
     fireBefore("delete", deleted)
     emitChanges("delete", deleted)
@@ -216,7 +225,7 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
       case Some((k, ids)) =>
         StatsStore.mergeDelete(spark, dir, k, ids, rowCond = Some(where))
       case None =>
-        overwrite(df.filter(!coalesce(where, lit(false))))
+        overwrite(cur.filter(!coalesce(where, lit(false))))
     }
     fire("delete", deleted)
     n
@@ -229,14 +238,16 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
     val src = source.columns.foldLeft(source)((d, c) =>
       if (keys.contains(c)) d else d.withColumnRenamed(c, s"src_$c"))
       .withColumn("src_matched", lit(true))
-    val joined = df.join(src, keys, "left_outer")
+    val cur = df
+    val cols = cur.columns.map(col).toIndexedSeq
+    val joined = cur.join(src, keys, "left_outer")
     val updated = sets.foldLeft(joined)((d, s) =>
       d.withColumn(s._1, when(col("src_matched").isNotNull, s._2).otherwise(col(s._1))))
-      .select(df.columns.map(col).toIndexedSeq: _*)
-    val inserts = source.join(df, keys, "left_anti")
-      .select(df.columns.map(col).toIndexedSeq: _*)
+      .select(cols: _*)
+    val inserts = source.join(cur, keys, "left_anti")
+      .select(cols: _*)
       .localCheckpoint(eager = true)
-    emitChanges("update", source.join(df, keys, "left_semi"))
+    emitChanges("update", source.join(cur, keys, "left_semi"))
     emitChanges("insert", inserts)
     overwrite(updated.unionByName(inserts))
   }

@@ -3,11 +3,11 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-safe directory publish, shared by [[MutableTable]],
-  * [[graft.graph.MutableGraph]] and [[StatsStore]] (r12; ADVICE r11: the
-  * previous delete-then-rename protocol had a window — between
-  * `fs.delete(dir)` and `fs.rename(staging, dir)` — where a crash or a
-  * cross-filesystem rename failure left NO table at `dir` and no recovery
-  * copy, and the protocol was copy-pasted three times).
+  * [[graft.graph.MutableGraph]] and [[StatsStore]]. A delete-then-rename
+  * swap has a window — between `fs.delete(dir)` and
+  * `fs.rename(staging, dir)` — where a crash or a cross-filesystem rename
+  * failure leaves NO table at `dir` and no recovery copy; this protocol
+  * never does.
   *
   * Protocol: rename the live dir aside (`dir` → `dir-old`), rename
   * `staging` → `dir`, delete `dir-old`. Every intermediate state keeps a
@@ -22,10 +22,11 @@ object Publish {
     org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create(dir), spark.sparkContext.hadoopConfiguration)
 
-  /** Publish `next` as the new state of `dir`: write to `dir-staging`
-    * (the write itself still reads the intact current state — one
-    * distributed materialization per mutation, the r11 invariant), then
-    * swap staging into place. */
+  /** Publish `next` as the new state of `dir`: write to `dir-staging`,
+    * then swap staging into place. The write itself still reads the
+    * intact current state, so `next` may derive from `dir` and the
+    * mutation costs one distributed materialization, not two (no
+    * checkpoint to decouple `next` from the directory it replaces). */
   def overwrite(next: DataFrame, dir: String): Unit = {
     val staging = s"$dir-staging"
     next.write.mode("overwrite").parquet(staging)

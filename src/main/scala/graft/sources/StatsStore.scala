@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** File-level data skipping via a min/max manifest — the distributed
   * replacement for the reference's LSM range index (index/lsm/
@@ -17,52 +21,77 @@ import org.apache.spark.sql.functions._
   * ONLY the files whose [min, max] intersects the range. The intersection
   * test runs DISTRIBUTED over the manifest DataFrame; only the surviving
   * file paths (bounded by predicate selectivity, not by table size) cross
-  * to the driver to parameterize the scan — at 100 TB / ~10⁶ files the
-  * driver never materializes the full manifest, it receives the pruned
-  * list the way Delta's log replay emits matching AddFiles. A selective
-  * predicate skips >99% of files instead of scanning every file that
-  * shares a partition. Partition pruning (bucket_date in
-  * [[TimeSeriesStore]]) handles time; this handles any OTHER clustered
-  * key.
+  * to the driver to parameterize the scan, the way Delta's log replay
+  * emits matching AddFiles. A selective predicate skips >99% of files
+  * instead of scanning every file that shares a partition. Partition
+  * pruning (bucket_date in [[TimeSeriesStore]]) handles time; this handles
+  * any OTHER clustered key.
+  *
+  * Keyed writes ([[mergeSet]], [[mergeDelete]], [[mergeUpsert]]) patch the
+  * manifest on the driver: they collect it (one row per file, O(files)
+  * driver state — the size of the file list a table-format commit writes
+  * anyway), pick the hit files there, and write the patched manifest back.
+  * Every Spark job they run carries data: the manifest read, the rewrite
+  * of the hit files, the stats of the new files and the manifest write.
   */
 object StatsStore {
 
   private def manifestDir(dir: String) = s"$dir-manifest"
 
-  /** r11: clustered (re)writes publish via staging + swap, so a caller
-    * re-clustering a directory onto itself needs no full-table
-    * localCheckpoint first — the staging write reads the still-intact
-    * source files. r12: the swap is the shared crash-safe rename-aside
-    * protocol in [[Publish]]. */
-  private def swapIn(spark: SparkSession, staging: String, dir: String): Unit =
-    Publish.swapIn(spark, staging, dir)
+  private def fsFor(spark: SparkSession, dir: String): FileSystem =
+    FileSystem.get(java.net.URI.create(dir), spark.sparkContext.hadoopConfiguration)
+
+  private def baseName(uri: String): String = new Path(new java.net.URI(uri)).getName
+
+  /** The data files of `dir` (the part files Spark writes). */
+  private def partFiles(fs: FileSystem, dir: String): Seq[FileStatus] =
+    fs.listStatus(new Path(dir)).toSeq.filter(_.getPath.getName.startsWith("part-"))
+
+  /** The (file, kmin, kmax, cnt) stats of `key` per file of `df`. */
+  private def keyStats(df: DataFrame, key: String): DataFrame =
+    df.groupBy(col("_metadata.file_path").as("file"))
+      .agg(min(col(key)).as("kmin"), max(col(key)).as("kmax"), count(lit(1)).as("cnt"))
+
+  /** Stats of the few files a keyed write just added, read with the schema
+    * they were written with, in one single-task job (one partition needs no
+    * shuffle before the per-file aggregate). Files holding no rows get no
+    * row. */
+  private def statNew(spark: SparkSession, files: Seq[FileStatus], schema: StructType,
+      key: String): Seq[Row] =
+    if (files.isEmpty) Nil
+    else keyStats(spark.read.schema(schema).parquet(files.map(_.getPath.toString): _*)
+      .coalesce(1), key).collect().toSeq
+
+  /** Publish `rows` as the manifest of `dir`. They live on the driver, so
+    * the write reads nothing from the manifest it replaces. */
+  private def writeManifest(spark: SparkSession, dir: String, schema: StructType,
+      rows: Seq[Row]): Unit =
+    spark.createDataFrame(rows.asJava, schema)
+      .coalesce(1).write.mode("overwrite").parquet(manifestDir(dir))
 
   /** Write `df` clustered by `key` into `numFiles` range-partitioned
-    * files and collect the per-file min/max manifest. */
+    * files and collect the per-file min/max manifest. The clustered files
+    * are written to a staging directory and swapped in ([[Publish]]), so
+    * `df` may read `dir` itself: the write reads the still-intact source
+    * files and needs no materialization first. */
   def write(df: DataFrame, dir: String, key: String, numFiles: Int): Unit = {
     val spark = df.sparkSession
     df.repartitionByRange(numFiles, col(key))
       .write.mode("overwrite").parquet(s"$dir-staging")
-    swapIn(spark, s"$dir-staging", dir)
-    spark.read.parquet(dir)
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(min(col(key)).as("kmin"), max(col(key)).as("kmax"),
-        count(lit(1)).as("cnt"))
+    Publish.swapIn(spark, s"$dir-staging", dir)
+    keyStats(graft.Tables.readCached(spark, dir), key)
       .coalesce(1)
       .write.mode("overwrite").parquet(manifestDir(dir))
   }
 
   /** The (file, kmin, kmax, cnt) manifest. */
   def manifest(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(manifestDir(dir))
+    graft.Tables.readCached(spark, manifestDir(dir))
 
   /** Remove the manifest (DROP INDEX): scans revert to full reads; the
     * clustered data layout stays (harmless — just well-sorted files). */
   def dropManifest(spark: SparkSession, dir: String): Unit = {
-    val md = manifestDir(dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(md), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(md), true)
+    fsFor(spark, dir).delete(new Path(manifestDir(dir)), true)
     ()
   }
 
@@ -85,8 +114,8 @@ object StatsStore {
     val hit = row.getAs[scala.collection.Seq[String]]("hits")
     val total = row.getAs[Long]("total").toInt
     val pruned =
-      if (hit.isEmpty) spark.read.parquet(dir).limit(0)
-      else spark.read.parquet(hit.toIndexedSeq: _*)
+      if (hit.isEmpty) graft.Tables.readCached(spark, dir).limit(0)
+      else graft.Tables.readFiles(spark, dir, hit.toIndexedSeq)
     (pruned.filter(col(key).between(lo, hi)), hit.length, total)
   }
 
@@ -133,8 +162,8 @@ object StatsStore {
       .sortWithinPartitions("__z")
       .drop("__z")
       .write.mode("overwrite").parquet(s"$dir-staging")
-    swapIn(spark, s"$dir-staging", dir)
-    spark.read.parquet(dir)
+    Publish.swapIn(spark, s"$dir-staging", dir)
+    graft.Tables.readCached(spark, dir)
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(min(col(keyA)).as("amin"), max(col(keyA)).as("amax"),
         min(col(keyB)).as("bmin"), max(col(keyB)).as("bmax"),
@@ -159,10 +188,9 @@ object StatsStore {
     * ONLY the files whose [kmin, kmax] manifest range intersects an
     * affected id — the Delta/Iceberg MERGE shape the full-rewrite
     * MutableTable/MutableGraph model documents as its 100 TB derivation
-    * (MutableGraph.scala scaladoc). Protocol: stage the updated rows of
-    * the HIT files (materialized before the directory mutates), append
-    * them as new part files, delete the hit files, and patch the manifest
-    * incrementally (keep rows minus hits, plus stats of the new files) —
+    * (MutableGraph.scala scaladoc). Protocol: append the updated rows of
+    * the HIT files as new part files, delete the hit files, and patch the
+    * manifest (keep rows minus hits, plus stats of the new files) —
     * untouched files are never read, rewritten, or re-statted.
     *
     * `ids` is the broadcast-sized affected set (the same writes-touch-few
@@ -193,16 +221,21 @@ object StatsStore {
 
   /** Keyed UPSERT: rows of `updates` (carrying `key` plus the columns to
     * overwrite) replace their matching rows inside HIT files; keys with
-    * no match append as one new (statted) file. `updates` is
-    * broadcast-sized by the same contract as `ids`. */
+    * no match append as one new (statted) file, null in the columns
+    * `updates` does not carry, so every file keeps the table's schema.
+    * `updates` is broadcast-sized by the same contract as `ids`. */
   def mergeUpsert(spark: SparkSession, dir: String, key: String,
       updates: DataFrame): (Int, Int) = {
+    val table = graft.Tables.readCached(spark, dir)
     val ids = updates.select(col(key).cast("long")).distinct()
       .collect().map(_.getLong(0)).toIndexedSeq
-    val existing = spark.read.parquet(dir)
+    val existing = table
       .select(col(key)).filter(col(key).isin(ids: _*)).distinct()
       .collect().map(_.getAs[Number](0).longValue()).toSet
     val inserts = updates.filter(!col(key).isin(existing.toSeq: _*))
+      .select(table.schema.map(f =>
+        (if (updates.columns.contains(f.name)) col(f.name) else lit(null))
+          .cast(f.dataType).as(f.name)): _*)
       .localCheckpoint(eager = true)
     val matchedIds = ids.filter(existing.contains)
     val r =
@@ -221,17 +254,26 @@ object StatsStore {
       else (0, manifest(spark, dir).count().toInt)
     if (!inserts.isEmpty) {
       inserts.coalesce(1).write.mode("append").parquet(dir)
-      // stat the appended file(s) into the manifest
+      // stat the appended file into the manifest
       val m = manifest(spark, dir)
-      val known = m.select("file").collect().map(_.getString(0)).toIndexedSeq
-      val newStats = spark.read.parquet(dir)
-        .filter(!col("_metadata.file_path").isin(known: _*))
-        .groupBy(col("_metadata.file_path").as("file"))
-        .agg(min(col(key)).as("kmin"), max(col(key)).as("kmax"), count(lit(1)).as("cnt"))
-      m.unionByName(newStats).localCheckpoint(eager = true)
-        .coalesce(1).write.mode("overwrite").parquet(manifestDir(dir))
+      val rows = m.collect().toSeq
+      val known = rows.map(r => baseName(r.getAs[String]("file"))).toSet
+      val added = partFiles(fsFor(spark, dir), dir).filterNot(st => known(st.getPath.getName))
+      writeManifest(spark, dir, m.schema, rows ++ statNew(spark, added, inserts.schema, key))
     }
     r
+  }
+
+  /** Whether any of the sorted `ids` lies in [lo, hi]. Non-integral bounds
+    * truncate toward zero, which only widens the range for integer ids:
+    * a false hit rewrites one more file, a miss would lose the write. */
+  private def anyIn(ids: Array[Long], lo: Any, hi: Any): Boolean = (lo, hi) match {
+    case (l: Number, h: Number) =>
+      val i = java.util.Arrays.binarySearch(ids, l.longValue)
+      val j = if (i >= 0) i else -i - 1
+      j < ids.length && ids(j) <= h.longValue
+    case (null, _) | (_, null) => false // a file with no non-null key
+    case _ => true
   }
 
   /** Shared pruned-rewrite protocol: locate hit files via the manifest,
@@ -243,73 +285,55 @@ object StatsStore {
       transform: (DataFrame, Column) => DataFrame): (Int, Int) = {
     require(ids.nonEmpty, "merge needs a non-empty affected-id set")
     val m = manifest(spark, dir)
-    val idArr = typedlit(ids)
-    val row = m.agg(
-      sort_array(collect_list(when(
-        exists(idArr, i => i.between(col("kmin"), col("kmax"))), col("file")))).as("hits"),
-      count(lit(1)).as("total"), sum(col("cnt")).as("rows")).collect()(0)
-    val hits = row.getAs[scala.collection.Seq[String]]("hits").toIndexedSeq
-    val total = row.getAs[Long]("total").toInt
-    val rowsBefore = row.getAs[Long]("rows")
+    val rows = m.collect().toSeq
+    val sortedIds = ids.distinct.sorted.toArray
+    val (hitRows, keep) = rows.partition(r =>
+      anyIn(sortedIds, r.getAs[Any]("kmin"), r.getAs[Any]("kmax")))
+    val hits = hitRows.map(_.getAs[String]("file")).sorted
+    val total = rows.length
+    val rowsBefore = rows.map(_.getAs[Long]("cnt")).sum
     if (hits.isEmpty) return (0, total)
 
-    val touched = spark.read.parquet(hits: _*)
-    // materialize BEFORE mutating the directory the plan lazily reads
-    val staged = transform(touched, col(key).isin(ids: _*))
-      .localCheckpoint(eager = true)
+    // the append only adds files, so the hit files it reads stay intact
+    // until they are deleted below: `staged` needs no materialization first
+    val staged = transform(graft.Tables.readFiles(spark, dir, hits), col(key).isin(ids: _*))
     staged.write.mode("append").parquet(dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(dir), spark.sparkContext.hadoopConfiguration)
-    val undeleted = hits.filterNot(h =>
-      fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(h)), false))
+    val fs = fsFor(spark, dir)
+    val undeleted = hits.filterNot(h => fs.delete(new Path(new java.net.URI(h)), false))
     if (undeleted.nonEmpty)
       throw new IllegalStateException(
         s"mergeSet torn: appended updated rows but ${undeleted.size} hit file(s) " +
           s"survived deletion (${undeleted.take(3).mkString(", ")}…) — " +
           "the directory now holds duplicates; restore from the manifest or re-run cleanup")
-    // incremental manifest patch: survivors keep their rows; only the NEW
-    // files are re-statted (the file_path predicate prunes the scan to them)
-    val keep = m.filter(!col("file").isin(hits: _*))
-    val keepFiles = keep.select("file").collect().map(_.getString(0)).toIndexedSeq
-    val newStats = spark.read.parquet(dir)
-      .filter(!col("_metadata.file_path").isin(keepFiles: _*))
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(min(col(key)).as("kmin"), max(col(key)).as("kmax"), count(lit(1)).as("cnt"))
-    val next = keep.unionByName(newStats).localCheckpoint(eager = true)
+    // survivors keep their manifest rows; only the files the append added
+    // are statted
+    val keepNames = keep.map(r => baseName(r.getAs[String]("file"))).toSet
+    val added = partFiles(fs, dir).filterNot(st => keepNames(st.getPath.getName))
+    val next = keep ++ statNew(spark, added, staged.schema, key)
     // a staged partition that filtered to zero rows still writes an empty
     // part file; it carries no data and no manifest row — remove it so the
     // manifest-vs-directory guard below stays meaningful
-    locally {
-      def base(uri: String) = new org.apache.hadoop.fs.Path(new java.net.URI(uri)).getName
-      val tracked = next.select("file").collect().map(r => base(r.getString(0))).toSet
-      fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .filter(st => st.getPath.getName.startsWith("part-") &&
-          !tracked.contains(st.getPath.getName))
-        .foreach { st =>
-          require(st.getLen < 16 * 1024,
-            s"untracked non-trivial file ${st.getPath} — refusing to clean")
-          fs.delete(st.getPath, false)
-        }
+    val tracked = next.map(r => baseName(r.getAs[String]("file"))).toSet
+    added.filterNot(st => tracked(st.getPath.getName)).foreach { st =>
+      require(st.getLen < 16 * 1024, s"untracked non-trivial file ${st.getPath} — refusing to clean")
+      fs.delete(st.getPath, false)
     }
     // post-state guard (the append → delete → manifest-overwrite protocol
     // is not atomic without a table-format transaction log): verify row
     // conservation and manifest-vs-directory agreement BEFORE publishing
     // the new manifest, so a torn merge fails loudly instead of being
     // read as clean data
-    val rowsAfter = next.agg(sum(col("cnt"))).collect()(0).getLong(0)
+    val rowsAfter = next.map(_.getAs[Long]("cnt")).sum
     if (if (deletes) rowsAfter > rowsBefore else rowsAfter != rowsBefore)
       throw new IllegalStateException(
         s"merge torn: row count changed $rowsBefore -> $rowsAfter during merge")
-    val manifestFiles = next.select("file").collect()
-      .map(r => new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0))).getName).toSet
-    val dirFiles = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName).filter(_.startsWith("part-")).toSet
-    if (manifestFiles != dirFiles)
+    val dirFiles = partFiles(fs, dir).map(_.getPath.getName).toSet
+    if (tracked != dirFiles)
       throw new IllegalStateException(
-        s"mergeSet torn: manifest lists ${manifestFiles.size} part files but the " +
+        s"mergeSet torn: manifest lists ${tracked.size} part files but the " +
           s"directory holds ${dirFiles.size} (diff: " +
-          s"${(manifestFiles diff dirFiles).take(3)} / ${(dirFiles diff manifestFiles).take(3)})")
-    next.coalesce(1).write.mode("overwrite").parquet(manifestDir(dir))
+          s"${(tracked diff dirFiles).take(3)} / ${(dirFiles diff tracked).take(3)})")
+    writeManifest(spark, dir, m.schema, next)
     (hits.length, total)
   }
 }
