@@ -1,6 +1,6 @@
 package graft.cypher
 
-import graft.graph.PropertyGraph
+import graft.graph.{Fixpoint, PropertyGraph}
 import graft.sql.{Ast, Parser}
 import graft.sql.Ast._
 import graft.sql.Parser.{ParseException, TEof, TId, TOp}
@@ -1107,26 +1107,19 @@ object Cypher {
             else Seq.empty
           // bounded-small ranges unroll into one lazy union (Catalyst sees
           // the whole expansion, ReuseExchange collapses the shared walk
-          // prefixes); open/deep upper bounds walk ADAPTIVELY — extend
-          // depth by depth with an eager checkpoint + emptiness probe, and
-          // stop when the frontier dies (edge-distinct walks are bounded
-          // by |E|, so this terminates on any graph; enumeration at this
-          // depth is a correctness tier — TRAVERSE's frontier-dedup BFS
-          // stays the scale path for deep reachability)
+          // prefixes); open/deep upper bounds walk ADAPTIVELY — a Fixpoint
+          // extends depth by depth until the frontier dies (edge-distinct
+          // walks are bounded by |E|, so this terminates on any graph;
+          // enumeration at this depth is a correctness tier — TRAVERSE's
+          // frontier-dedup BFS stays the scale path for deep reachability)
           val parts: Seq[DataFrame] =
             if (hi <= 8) zero ++ (math.max(lo, 1) to hi).map(compose)
             else {
-              val walks = Seq.newBuilder[DataFrame]
-              walks ++= zero
-              var cur = graft.Materialize.once(firstHop)
-              var depth = 1
-              if (depth >= lo) walks += cur
-              while (depth < hi && !cur.isEmpty) {
-                cur = graft.Materialize.once(extend(cur))
-                depth += 1
-                if (depth >= lo && !cur.isEmpty) walks += cur
-              }
-              walks.result()
+              // pinned: the first hop seeds round 1 and joins the result
+              val first = graft.Materialize.once(firstHop, eager = false)
+              val walks = Fixpoint(first, Fixpoint.Until(hi - 1),
+                Some(Fixpoint.Merge(Some(first), (w, _) => w)))(r => extend(r.prev)).out
+              zero :+ (if (lo > 1) walks.filter(size(col("__rs")) >= lo) else walks)
             }
           // an empty interval (`*2..1`) matches nothing, it is not an error
           val unioned =

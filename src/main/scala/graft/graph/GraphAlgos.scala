@@ -13,22 +13,15 @@ import graft.Materialize
   * clustering coefficient :1252).
   *
   * Each iteration is one join + one aggregation — plain shuffles that
-  * partition by vertex id at any scale; lineage is truncated per iteration
-  * with localCheckpoint so a 20-iteration run doesn't build a 20-deep plan.
+  * partition by vertex id at any scale — run as a [[Fixpoint]] step, whose
+  * pin policy keeps a 20-iteration run from building a 20-deep plan.
   * GraphX remains the scale path for long-running fixpoints (see
   * PropertyGraph.toGraphX); these explicit loops exist where the reference
   * pins exact semantics a DuckDB oracle can replay (deterministic
   * tie-breaks, fixed iteration counts).
   */
 object GraphAlgos {
-
-  /** Iterations between lineage-truncating checkpoints inside the pinned
-    * loops. The rank/label recurrence references its previous value ONCE
-    * per level, so the un-checkpointed plan grows linearly — a ~8-deep
-    * plan is cheaper to analyze than 8 checkpoint-materialization jobs'
-    * worth of scheduler round-trips (the r7 bench showed ~5 tiny stages ×
-    * iteration of pure overhead on a 25-node graph). */
-  private val CheckpointEvery = 8
+  import Fixpoint.{Rounds, Until}
 
   /** Static PageRank, GraphX formulation (rank0 = 1.0; rank' = reset +
     * (1−reset)·Σ rank/outdeg over in-edges), fixed iteration count.
@@ -45,18 +38,17 @@ object GraphAlgos {
     // AQE-planned job and iterations reuse the materialized blocks;
     // ContextCleaner reclaims them once the result drops the reference.
     val e = Materialize.once(edges.join(outDeg, Seq("src")))
-    var rank = vertices.select(col("id"), lit(1.0).as("rank"))
-    for (i <- 1 to iters) {
-      val msgs = e.join(rank.withColumnRenamed("id", "src"), Seq("src"))
+    val rank = Fixpoint(vertices.select(col("id"), lit(1.0).as("rank")),
+        Rounds(iters, readsTwice = false)) { r =>
+      val msgs = e.join(r.prev.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("rank") / col("outdeg")).as("msum"))
-      rank = vertices.select(col("id"))
+      vertices.select(col("id"))
         .join(msgs, Seq("id"), "left_outer")
         .select(col("id"),
           (lit(reset) + lit(1.0 - reset) * coalesce(col("msum"), lit(0.0))).as("rank"))
-      if (i % CheckpointEvery == 0 && i < iters) rank = Materialize.once(rank, eager = false)
     }
-    Materialize.once(rank)
+    Materialize.once(rank.out)
   }
 
   /** Connected components by iterative min-id propagation (HashMin), the
@@ -64,32 +56,18 @@ object GraphAlgos {
     * both directions for undirected graphs. Converges in O(diameter). */
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIters: Int): DataFrame = {
     val e = Materialize.once(edges) // see pageRank: AQE-planned once, not persist()
-    var comp = vertices.select(col("id"), col("id").as("comp"))
-    var changed = true
-    var i = 0
-    // r12 negative result (verdict #7): batching TWO propagation rounds
-    // per convergence probe — lazy localCheckpoint between the rounds,
-    // probe every second round — measured WORSE (q_dedup_clusters
-    // 2.33 → 3.0 s, same-box stash A/B ×2): the unmaterialized checkpoint
-    // between the rounds has unknown stats, so AQE plans round 2's joins
-    // as sort-merge instead of broadcasting the tiny nbrMin aggregate.
-    // The per-round eager checkpoint is what keeps every round broadcast-
-    // shaped; the probe count over its local blocks costs ~nothing.
-    while (changed && i < maxIters) {
-      i += 1
+    // each round carries the previous label as `prev`, so "no row
+    // changed" is a filter over the round's pinned rows, not a self-join
+    Fixpoint(vertices.select(col("id"), col("id").as("comp")),
+        Until(maxIters, col("comp") =!= col("prev"))) { r =>
+      val comp = r.prev.select("id", "comp")
       val nbrMin = e.join(comp.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("comp")).as("nbr"))
-      // carry the previous label through the update so the convergence
-      // sentinel is a filter over the checkpointed rows, not a self-join
-      val next = Materialize.once(comp.join(nbrMin, Seq("id"), "left_outer")
+      comp.join(nbrMin, Seq("id"), "left_outer")
         .select(col("id"), col("comp").as("prev"),
           least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"))
-        ) // eager: also settles `changed` below
-      changed = next.filter(col("comp") =!= col("prev")).limit(1).count() > 0
-      comp = next.select("id", "comp")
-    }
-    comp
+    }.out.select("id", "comp")
   }
 
   /** Synchronous label propagation with a deterministic tie-break (max
@@ -100,21 +78,23 @@ object GraphAlgos {
     val e = Materialize.once(edges) // loop-invariant (often a derived join —
     // e.g. a co-purchase self-join): one AQE-planned materialization instead
     // of `iters` recomputes; see pageRank for why persist() is wrong here
-    var lab = vertices.select(col("id"), col("id").as("lab"))
-    for (i <- 1 to iters) {
-      val byCount = Window.partitionBy(col("id"))
-        .orderBy(col("c").desc, col("lab"))
-      val best = e.join(lab.withColumnRenamed("id", "src"), Seq("src"))
+    val byCount = Window.partitionBy(col("id")).orderBy(col("c").desc, col("lab"))
+    // A round reads the previous labels twice, in the messages and in the
+    // update, so every round before the last is pinned. The pinned rows
+    // lose the join's hash partitioning and the update re-shuffles them;
+    // the result is left unpinned, which saves that job again: its reader
+    // reads it once.
+    Fixpoint(vertices.select(col("id"), col("id").as("lab")),
+        Rounds(iters, readsTwice = true)) { r =>
+      val best = e.join(r.prev.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("id"), col("lab"))
         .agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(byCount))
         .filter(col("rn") === 1)
         .select(col("id"), col("lab").as("best"))
-      lab = lab.join(best, Seq("id"), "left_outer")
+      r.prev.join(best, Seq("id"), "left_outer")
         .select(col("id"), coalesce(col("best"), col("lab")).as("lab"))
-      if (i % CheckpointEvery == 0 && i < iters) lab = Materialize.once(lab, eager = false)
-    }
-    Materialize.once(lab)
+    }.out
   }
 
   /** Local clustering coefficient cc(v) = 2·tri(v) / (deg(v)·(deg(v)−1))
@@ -151,18 +131,14 @@ object GraphAlgos {
     * per depth, counts never materialize individual paths. */
   def walkCounts(edges: DataFrame, sourceFilter: Column, vertices: DataFrame,
       maxDepth: Int): DataFrame = {
-    var front = vertices.filter(sourceFilter)
-      .select(col("id"), lit(1L).as("walks"))
-    var acc: DataFrame = null
-    for (d <- 1 to maxDepth) {
-      front = Materialize.once(
-        front.join(edges.withColumnRenamed("src", "id"), Seq("id"))
-          .groupBy(col("dst").as("id"))
-          .agg(sum(col("walks")).as("walks")), eager = false)
-      val level = front.withColumn("depth", lit(d))
-      acc = if (acc == null) level else acc.unionByName(level)
-    }
-    acc.select("depth", "id", "walks")
+    // each depth feeds both the next depth and the result
+    Fixpoint(vertices.filter(sourceFilter).select(col("id"), lit(1L).as("walks")),
+        Rounds(maxDepth, readsTwice = true),
+        Some(Fixpoint.Merge(None, (front, d) => front.withColumn("depth", lit(d))))) { r =>
+      r.prev.join(edges.withColumnRenamed("src", "id"), Seq("id"))
+        .groupBy(col("dst").as("id"))
+        .agg(sum(col("walks")).as("walks"))
+    }.out.select("depth", "id", "walks")
   }
 
   /** A* single-pair shortest path (reference function/sql/graph/
@@ -176,26 +152,25 @@ object GraphAlgos {
   def aStarPair(edges: DataFrame, source: Long, target: Long,
       h: Column => Column, iters: Int): DataFrame = {
     val spark = edges.sparkSession
-    var dist = graft.OneRow(spark).select(lit(source).as("id"), lit(0.0).as("g"))
     var best = Double.PositiveInfinity
-    for (r <- 1 to iters) {
-      val relaxed = dist.join(edges.withColumnRenamed("src", "id"), Seq("id"))
+    Fixpoint(graft.OneRow(spark).select(lit(source).as("id"), lit(0.0).as("g")),
+        Rounds(iters, readsTwice = true)) { r =>
+      val relaxed = r.prev.join(edges.withColumnRenamed("src", "id"), Seq("id"))
         .select(col("dst").as("id"), (col("g") + col("w")).as("g"))
-      dist = dist.union(relaxed).groupBy("id").agg(min(col("g")).as("g"))
-      // r12 (verdict #7): probe the goal every SECOND round — the probe is
-      // the loop's only driver action (the lazy checkpoints materialize
-      // under it), so halving the probes halves the scheduler round-trips.
-      // Skipping a probe only delays pruning by one round; pruning never
-      // drops a state on an optimal path (h admissible), so the final
-      // min-g at the target after `iters` relaxations is identical.
-      if (r % 2 == 0 || r == iters) {
+      val dist = r.prev.union(relaxed).groupBy("id").agg(min(col("g")).as("g"))
+      // The goal probe is the loop's only driver action (the lazy pins
+      // materialize under it), so it runs every second round: half the
+      // scheduler round-trips (42 → 32 Spark jobs per query). Skipping a
+      // probe only delays pruning by one round; pruning never drops a
+      // state on an optimal path (h admissible), so the final min-g at the
+      // target after `iters` relaxations is identical.
+      if (r.n % 2 == 1 && r.n < iters) dist
+      else {
         val hit = dist.filter(col("id") === target).select("g").limit(2).collect()
         if (hit.nonEmpty) best = math.min(best, hit(0).getDouble(0))
-        if (!best.isInfinite) dist = dist.filter(col("g") + h(col("id")) <= best + 1e-9)
+        if (best.isInfinite) dist else dist.filter(col("g") + h(col("id")) <= best + 1e-9)
       }
-      dist = Materialize.once(dist, eager = false)
-    }
-    dist.filter(col("id") === target)
+    }.out.filter(col("id") === target)
       .select(col("id"), round(col("g"), 6).as("dist"))
   }
 
@@ -205,14 +180,11 @@ object GraphAlgos {
     * a sequential heap walk is a single-node design; relaxation rounds
     * are the set-oriented equivalent). `edges` = (src, dst, w). */
   def weightedSssp(edges: DataFrame, sourceFilter: Column, vertices: DataFrame, iters: Int): DataFrame = {
-    var dist = vertices.filter(sourceFilter)
-      .select(col("id"), lit(0.0).as("dist"))
-    for (_ <- 1 to iters) {
-      val relaxed = dist.join(edges.withColumnRenamed("src", "id"), Seq("id"))
+    Fixpoint(vertices.filter(sourceFilter).select(col("id"), lit(0.0).as("dist")),
+        Rounds(iters, readsTwice = true)) { r =>
+      val relaxed = r.prev.join(edges.withColumnRenamed("src", "id"), Seq("id"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = Materialize.once(dist.union(relaxed)
-        .groupBy("id").agg(min(col("dist")).as("dist")), eager = false)
-    }
-    dist
+      r.prev.union(relaxed).groupBy("id").agg(min(col("dist")).as("dist"))
+    }.out
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.graphx.{Edge => GXEdge, Graph => GXGraph, VertexId}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Property-graph over two DataFrames, the Spark-native re-expression of
   * ArcadeDB's vertex/edge model (reference graph/Vertex.java:33,
@@ -39,100 +38,39 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   /** BFS traversal with per-depth emission, the TRAVERSE … MAXDEPTH n
     * analog (reference executor/DepthFirstTraverseStep.java:36,
     * BreadthFirstTraverseStep.java:34; grammar SQLParser.g4:220-229).
-    * Returns (id, depth) with depth = first (minimum) reach depth —
-    * iterative frontier joins; each iteration is one distributed join,
-    * visited set carried as a DataFrame. For deep traversals the caller
-    * should checkpoint every few iterations; depth here is bounded small.
+    * Returns (id, depth) with depth = first (minimum) reach depth. Each
+    * depth is one [[Fixpoint]] round: `distinct(expand(prev)) ⟕̸ visited`,
+    * one distributed join, with the visited set the merged result.
+    *
+    * Up to [[PropertyGraph.UnrollDepth]] the depths run as fixed rounds:
+    * one lazy DAG with no per-depth action, executed by the caller's job.
+    * An exhausted frontier needs no probe there, it expands to empty, and a
+    * bounded hop count (TRAVERSE … MAXDEPTH n, Cypher `*lo..hi`) is small,
+    * so the scheduler round-trips of a probing round would dominate at
+    * small scale. Deeper walks run until the frontier is empty: the probe
+    * stops work when the frontier dies, and the loop-invariant edge
+    * relation (often a derived join such as co-purchase) is pinned once
+    * instead of recomputed per depth.
     */
   def traverse(seeds: DataFrame, maxDepth: Int, direction: String = "out",
-      edgeLabel: Option[String] = None): DataFrame =
-    if (maxDepth <= UnrollDepth) traverseUnrolled(seeds, maxDepth, direction, edgeLabel)
-    else traverseIterative(seeds, maxDepth, direction, edgeLabel)
-
-  /** Bounded-depth BFS as ONE lazy DAG: each depth's frontier is
-    * `distinct(expand(prev)) ⟕̸ visited` built without any intermediate
-    * action, and the final union executes as a single job. Catalyst sees
-    * the whole traversal, so the repeated frontier subtrees collapse via
-    * ReuseExchange instead of being re-materialized per depth — the
-    * per-depth persist/isEmpty/localCheckpoint protocol of the iterative
-    * loop costs ~4 scheduler round-trips per hop, which dominates at
-    * small scale and buys nothing when the hop count is a compile-time
-    * bound (TRAVERSE … MAXDEPTH n / `*lo..hi` are both bounded small —
-    * reference grammar SQLParser.g4:220-229 and cypher `RangeLiteral`).
-    * Early exhaustion needs no probe: an empty frontier expands to empty.
-    */
-  private def traverseUnrolled(seeds: DataFrame, maxDepth: Int, direction: String,
-      edgeLabel: Option[String]): DataFrame = {
+      edgeLabel: Option[String] = None): DataFrame = {
+    val deep = maxDepth > UnrollDepth
     val e = edgeLabel.fold(edges)(l => edges.filter(col("label") === l))
-    val g = copy(edges = e)
+    val g = copy(edges = if (deep) graft.Materialize.once(e) else e)
     val f0 = seeds.select(col("id")).distinct()
-    var visited = f0.withColumn("depth", lit(0))
-    var frontier = f0
-    for (d <- 1 to maxDepth) {
-      // r11: LAZY pin — still zero per-depth actions, but `visited` and
-      // the next frontier now share ONE per-level RDD instead of
-      // duplicating the level's join subtree into both consumers (the
-      // depth-3 co-purchase BFS compiled to a 236-Exchange plan; each
-      // level's work ran once per downstream copy that ReuseExchange
-      // failed to collapse). The blocks materialize inside the single
-      // final job, once per level.
-      val next = graft.Materialize.once(
-        (direction match {
-          case "in"   => g.expandIn(frontier)
-          case "both" => g.expandOut(frontier).union(g.expandIn(frontier))
-          case _      => g.expandOut(frontier)
-        })
+    // a depth feeds both the next depth and the visited set
+    Fixpoint(f0,
+        if (deep) Fixpoint.Until(maxDepth) else Fixpoint.Rounds(maxDepth, readsTwice = true),
+        Some(Fixpoint.Merge(Some(f0.withColumn("depth", lit(0))),
+          (level, d) => level.withColumn("depth", lit(d))))) { r =>
+      (direction match {
+        case "in"   => g.expandIn(r.prev)
+        case "both" => g.expandOut(r.prev).union(g.expandIn(r.prev))
+        case _      => g.expandOut(r.prev)
+      })
         .distinct()
-        .join(visited.select(col("id").as("vid")), col("id") === col("vid"), "left_anti"),
-        eager = false)
-      visited = visited.union(next.withColumn("depth", lit(d)))
-      frontier = next
-    }
-    visited
-  }
-
-  /** Unbounded/deep traversals keep the materializing frontier loop: the
-    * per-depth persist + early-exit probe that the unrolled form drops is
-    * exactly what bounds lineage and stops work when the frontier dies on
-    * a deep walk. */
-  private def traverseIterative(seeds: DataFrame, maxDepth: Int, direction: String,
-      edgeLabel: Option[String]): DataFrame = {
-    // The edge relation is scanned once per depth — cache it for the loop
-    // (it is often a derived join, e.g. co-purchase, that would otherwise
-    // recompute from source every iteration).
-    val cachedEdges = edgeLabel.fold(edges)(l => edges.filter(col("label") === l))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cachedGraph = copy(edges = cachedEdges)
-    var visited = seeds.select(col("id")).distinct().withColumn("depth", lit(0))
-    var frontier = visited.select("id").persist(StorageLevel.MEMORY_AND_DISK)
-    val live = scala.collection.mutable.Buffer[DataFrame](frontier)
-    var d = 0
-    var exhausted = false
-    while (d < maxDepth && !exhausted) {
-      d += 1
-      // localCheckpoint truncates the per-iteration join lineage (the
-      // BFS-loop growth the reference sidesteps with its in-memory visited
-      // set, GraphAlgorithms.java:411); persisted frontiers are released
-      // as soon as the next one is materialized.
-      val next = (direction match {
-          case "in"   => cachedGraph.expandIn(frontier)
-          case "both" => cachedGraph.expandOut(frontier).union(cachedGraph.expandIn(frontier))
-          case _      => cachedGraph.expandOut(frontier)
-        })
-        .distinct()
-        .join(visited.select(col("id").as("vid")), col("id") === col("vid"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      live += next
-      if (next.isEmpty) exhausted = true
-      else {
-        visited = visited.union(next.withColumn("depth", lit(d)))
-        frontier = next
-      }
-    }
-    val out = graft.Materialize.once(visited) // eager: materialize before unpersist
-    live.foreach(_.unpersist(false))
-    cachedEdges.unpersist(false)
-    out
+        .join(r.acc.get.select(col("id").as("vid")), col("id") === col("vid"), "left_anti")
+    }.out
   }
 
   /** GraphX view for whole-graph analytics (PageRank, components,
@@ -140,7 +78,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * The reference builds a columnar CSR snapshot (CSRBuilder.java:59)
     * for this; GraphX's internal edge partitions play that role here. */
   def toGraphX: GXGraph[String, String] = {
-    // r12 negative result (verdict r11 #5): sizing these RDDs from an
+    // The inherited scan/shuffle layout is kept: sizing these RDDs from an
     // edge COUNT (localCheckpoint + count, then coalesce to ~n/target
     // partitions) measured strictly WORSE on both GraphX queries at
     // sf0.1 — inherited layout 2.7 s cc / 3.9 s pagerank vs 4.2/4.1 at
@@ -148,7 +86,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // same session back-to-back. Pregel's per-superstep work here is
     // compute-bound enough that losing cores costs more than the ~30
     // small tasks per superstep save, and the extra materialize+count
-    // pass is pure overhead. Inherited scan/shuffle layout kept.
+    // pass is pure overhead.
     val vs: RDD[(VertexId, String)] =
       vertices.select(col("id"), col("label")).rdd.map(r => (r.getLong(0), r.getString(1)))
     val es: RDD[GXEdge[String]] =
@@ -159,8 +97,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 }
 
 object PropertyGraph {
-  /** Max depth compiled as one lazy unrolled DAG; deeper walks fall back
-    * to the materializing frontier loop (see [[PropertyGraph.traverse]]). */
+  /** Max depth compiled as one lazy unrolled DAG; deeper walks probe the
+    * frontier every depth (see [[PropertyGraph.traverse]]). */
   val UnrollDepth = 8
   /** Vertex-id encoding for the TPC-H-derived demo graph: the natural keys
     * of customer/order/part/supplier live in disjoint id spaces via
@@ -221,9 +159,8 @@ object PropertyGraph {
   /** @param maxPart both-endpoints bound (`a < maxPart AND b < maxPart`),
     *                 pushed into the lineitem scan — a post-hoc filter on
     *                 the pair stream cannot reach the scan through the
-    *                 groupBy+explode shape (r11; the old self-join form got
-    *                 this pushdown for free, so filtered consumers must
-    *                 pass the bound here). */
+    *                 groupBy+explode shape, so filtered consumers must
+    *                 pass the bound here. */
   def coPurchase(spark: SparkSession, dir: String,
       maxPart: Option[Long] = None): DataFrame = {
     val l0 = graft.Tables.lineitem(spark, dir)
@@ -231,22 +168,22 @@ object PropertyGraph {
     coPairs(l.select(col("l_orderkey").as("gid"), col("l_partkey").as("item")))
   }
 
-  /** Per-group distinct-item width bound for [[coPairs]] (r12, verdict r11
-    * #5/#9): `collect_set` is bounded only by group width, so on a skewed
-    * co-occurrence corpus one hot group would build an O(width) array row
-    * and an O(width²) pair fan-out — the classic hot-key blowup. Groups
-    * wider than this keep their `MaxGroupWidth` smallest items
-    * (deterministic). TPC-H orders have ≤ 7 lineitems at every scale
-    * factor, so the cap is unreachable on the declared queries (pair set
-    * identical, oracle-checked); it exists so the operator has a declared
-    * bound instead of an implicit precondition. */
+  /** Per-group distinct-item width bound for [[coPairs]]: `collect_set`
+    * is bounded only by group width, so on a skewed co-occurrence corpus
+    * one hot group would build an O(width) array row and an O(width²)
+    * pair fan-out — the classic hot-key blowup. Groups wider than this
+    * keep their `MaxGroupWidth` smallest items (deterministic). TPC-H
+    * orders have ≤ 7 lineitems at every scale factor, so the cap is
+    * unreachable on the declared queries (pair set identical,
+    * oracle-checked); it exists so the operator has a declared bound
+    * instead of an implicit precondition. */
   val MaxGroupWidth = 1024
 
   /** Co-occurrence pair generator over (gid, item): canonical a < b pairs
     * of items sharing a gid. One shuffle on gid (collect_set dedups items
     * within the group) + a narrow explode² pair generator, instead of the
     * previous distinct + self-join (three exchanges over the pair
-    * fan-out). Same (a, b) pair set — r11 A/B: 2.4 s vs 3.8 s at sf0.1,
+    * fan-out). Same (a, b) pair set, 2.4 s vs 3.8 s at sf0.1,
     * and the per-group fan-out never crosses the wire un-deduplicated.
     * The final distinct is still the only pair-sized exchange, as before. */
   private[graft] def coPairs(items: DataFrame): DataFrame =

@@ -1,6 +1,6 @@
 package graft.gremlin
 
-import graft.graph.PropertyGraph
+import graft.graph.{Fixpoint, PropertyGraph}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -30,12 +30,9 @@ import org.apache.spark.sql.functions._
   *                                         unrolled n times into the one plan
   *   repeat(body).until(cond)           — do-while: after each body pass,
   *                                         traversers satisfying cond emit,
-  *                                         the rest loop (bounded unroll —
-  *                                         MaxRepeatLoops — same lazy-DAG
-  *                                         shape as PropertyGraph's
-  *                                         traverseUnrolled: an exhausted
-  *                                         frontier expands to empty rows,
-  *                                         costing nothing)
+  *                                         the rest loop until none is
+  *                                         left (a graph.Fixpoint run,
+  *                                         at most MaxRepeatLoops passes)
   *   path().by('k'?)                    — per-traverser visited-element list
   *                                         (vertex hops; value = by-key or id),
   *                                         accumulated AT HOP TIME into an
@@ -77,10 +74,9 @@ import org.apache.spark.sql.functions._
   */
 object Gremlin {
 
-  /** until()-loop unroll bound. Gremlin repeats in analytic queries are
-    * shallow (the reference's TinkerPop tests stay ≤ 5); the unroll is
-    * lazy (no per-depth action), so unused depth costs one empty join
-    * subtree, not a job. */
+  /** Pass bound of the until()/emit() loops. Gremlin repeats in analytic
+    * queries are shallow (the reference's TinkerPop tests stay ≤ 5); a
+    * frontier still live at the bound fails loudly. */
   private val MaxRepeatLoops = 12
 
   // ---------- token model ----------
@@ -220,15 +216,15 @@ object Gremlin {
     val steps = parse(text)
     require(steps.nonEmpty, "empty traversal")
 
-    // r11: iterative traversals (repeat/until/emit) reference the edge
+    // Iterative traversals (repeat/until/emit) reference the edge
     // relation once per pass AND once per emitted branch of the final
     // union — with a derived edge table (fromTpch's `contains` carries a
     // full groupBy over lineitem) that shuffle re-ran 4-6× per query.
     // Materialize the edges ONCE for the loop forms; single-pass chains
     // keep the lazy relation (one evaluation either way, and the scan
-    // prunes better inside the full plan). r12 (ADVICE r11): the probe
-    // recurses into sub-traversal arguments — a repeat nested inside
-    // union(repeat(...)) must trigger the materialization too.
+    // prunes better inside the full plan). The check recurses into
+    // sub-traversal arguments: a repeat nested inside union(repeat(...))
+    // needs the materialization too.
     def argHasRepeat(a: Arg): Boolean = a match {
       case PArg(n, as) => n == "repeat" || as.exists(argHasRepeat)
       case CArg(cs)    => cs.exists { case (n, as) => n == "repeat" || as.exists(argHasRepeat) }
@@ -341,11 +337,6 @@ object Gremlin {
       case s => throw new IllegalArgumentException(s"traversal must start with V()/E(), got ${s.name}")
     }
 
-    def strArg(s: Step, i: Int): String = s.args(i) match {
-      case SArg(v) => v
-      case other   => throw new IllegalArgumentException(s"${s.name}: expected string arg, got $other")
-    }
-
     // repeat(body) binds at the FOLLOWING times(n)/until(cond) modulator
     var pendingRepeat: Option[List[(String, List[Arg])]] = None
     var pendingEmit = false
@@ -355,36 +346,34 @@ object Gremlin {
       pendingRepeat = None
       b
     }
-    /** `repeat(body).emit()` with no times/until: loop while the frontier
-      * is non-empty, emitting every post-pass frontier (TinkerPop's
-      * unbounded emit form) — same probe-bounded unroll as until(), same
-      * loud failure at the bound. */
-    def runEmitLoop(s0: State, body: List[(String, List[Arg])]): State = {
-      var frontier = s0
-      var emitted: Option[DataFrame] = None
-      var done = false
-      var it = 0
-      while (it < MaxRepeatLoops && !done) {
-        val next = applyCalls(frontier, body)
-        it += 1
-        val f = if (it % 2 == 0 || it == MaxRepeatLoops)
-          graft.Materialize.once(next.df) else next.df
-        emitted = Some(emitted.fold(f: DataFrame)(_.unionByName(f)))
-        if (it % 2 == 0 || it == MaxRepeatLoops) {
-          if (f.isEmpty) done = true
-        }
-        frontier = next.copy(df = f)
+    /** `repeat(body)` closed by until(cond) and/or emit(): a do-while over
+      * the frontier. After each pass the traversers satisfying `until`
+      * emit and leave, the rest loop; with `emitAll` every post-pass
+      * traverser emits (TinkerPop emit+until composition). Without
+      * `until` (a trailing emit()) the loop runs until the frontier
+      * drains. A frontier still live after MaxRepeatLoops passes fails
+      * loudly rather than return an incomplete answer (TinkerPop loops
+      * until satisfied; times(n) on the same bound fails loudly too —
+      * TRAVERSE's MAXDEPTH error behavior). */
+    def repeatUntil(s0: State, body: List[(String, List[Arg])], until: Option[Column],
+        emitAll: Boolean): State = {
+      val stop = until.getOrElse(lit(false))
+      val loop = Fixpoint(s0.df, Fixpoint.Until(MaxRepeatLoops, !stop),
+          Some(Fixpoint.Merge(None, (pass, _) => if (emitAll) pass else pass.filter(stop)))) { r =>
+        applyCalls(s0.copy(df = if (r.n == 1) r.prev else r.prev.filter(!stop)), body).df
       }
-      if (!done && !frontier.df.isEmpty)
-        throw new IllegalStateException(
-          s"repeat().emit() exceeded $MaxRepeatLoops passes with a non-empty frontier")
-      s0.copy(df = emitted.get)
+      if (loop.cutOff)
+        throw new IllegalStateException(until.fold(
+          s"repeat().emit() exceeded $MaxRepeatLoops passes with a non-empty frontier")(_ =>
+          s"until() exceeded $MaxRepeatLoops passes with a non-empty frontier; " +
+            "deepen the traversal with times(n) over explicit hops or reshape the predicate"))
+      State(loop.out, vertexLike = true, None)
     }
     /** Any step other than times/until arriving while repeat().emit() is
       * pending closes the unbounded-emit loop first. */
     def flushPendingEmit(): Unit =
       if (pendingRepeat.isDefined && pendingEmit) {
-        st = runEmitLoop(st, takeRepeat("emit"))
+        st = repeatUntil(st, takeRepeat("emit"), None, emitAll = true)
         pendingEmit = false
       }
 
@@ -443,49 +432,12 @@ object Gremlin {
         } else
           st = (1 to n.toInt).foldLeft(st)((s, _) => applyCalls(s, body))
 
-      // repeat(body).until(cond): do-while — after each pass, traversers
-      // satisfying cond emit, the rest loop. Bounded lazy unroll: an
-      // exhausted frontier expands to zero rows through the remaining
-      // depths for free (no per-depth action, same shape as
-      // PropertyGraph.traverseUnrolled).
+      // repeat(body).until(cond), with emit(): every post-pass frontier
+      // joins the output, not just the until-satisfiers
       case Step("until", List(cond), _) =>
         val body = takeRepeat("until")
-        // with emit(): EVERY post-pass frontier joins the output, not just
-        // the until-satisfiers (TinkerPop emit+until composition)
-        val withEmit = pendingEmit
+        st = repeatUntil(st, body, Some(argPred(cond)), emitAll = pendingEmit)
         pendingEmit = false
-        val pred = argPred(cond)
-        var frontier = st
-        var emitted: Option[DataFrame] = None
-        var done = false
-        var it = 0
-        while (it < MaxRepeatLoops && !done) {
-          val next = applyCalls(frontier, body)
-          val hit = if (withEmit) next.df else next.df.filter(pred)
-          emitted = Some(emitted.fold(hit)(_.unionByName(hit)))
-          frontier = next.copy(df = next.df.filter(!pred))
-          it += 1
-          // every 2 levels (r11: was 4 — a frontier that dies at pass 2,
-          // the common until(hasLabel) shape, stops immediately instead of
-          // running two more empty passes): materialize the (shrinking)
-          // frontier and probe emptiness — one cheap action that stops the
-          // unroll and bounds plan depth/lineage, instead of stacking join
-          // subtrees for loops the data exhausted levels ago
-          if (it % 2 == 0 && it < MaxRepeatLoops) {
-            val f = graft.Materialize.once(frontier.df)
-            if (f.isEmpty) done = true else frontier = frontier.copy(df = f)
-          }
-        }
-        // loop exhausted its unroll bound with traversers possibly still
-        // looping: probe the residual frontier and FAIL LOUDLY rather than
-        // silently return an incomplete answer (TinkerPop loops until
-        // satisfied; times(n) on the same bound already fails loudly —
-        // mirror TRAVERSE's MAXDEPTH error behavior)
-        if (!done && !frontier.df.isEmpty)
-          throw new IllegalStateException(
-            s"until() exceeded $MaxRepeatLoops passes with a non-empty frontier; " +
-              "deepen the traversal with times(n) over explicit hops or reshape the predicate")
-        st = State(emitted.get, vertexLike = true, None)
 
       case Step("path", Nil, _) =>
         st = State(st.df.select(col("__path").as("path")), vertexLike = false, Some("path"))

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 /** Full backup / restore of a set of tables (reference
@@ -30,46 +32,51 @@ object Backup {
     * BACKUP DATABASE statement: that one stays a distributed job with a
     * row-count manifest, [[backup]]). A tx snapshot copies the parquet
     * files as files: no Spark jobs, no schema pass — byte-identical
-    * restore. State dirs are single-FS by construction here; on a
-    * cluster the same operation is a DFS directory copy. */
+    * restore. A table's stats manifest ([[StatsStore]]) names its files,
+    * so it is part of the table's state: it is copied to
+    * `snapDir/<name>-manifest` when present. State dirs are single-FS by
+    * construction here; on a cluster the same operation is a DFS
+    * directory copy. */
   def snapshotFiles(tables: Map[String, String], snapDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(snapDir)
+    val root = Paths.get(snapDir)
     deleteRecursive(root)
     tables.foreach { case (name, dir) =>
-      val src = java.nio.file.Paths.get(dir)
-      val dst = root.resolve(name)
-      java.nio.file.Files.createDirectories(dst)
-      java.nio.file.Files.list(src).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .foreach(f => java.nio.file.Files.copy(f, dst.resolve(f.getFileName.toString)))
+      mirror(Paths.get(dir), root.resolve(name))
+      mirror(Paths.get(StatsStore.manifestDir(dir)), root.resolve(s"$name-manifest"))
     }
   }
 
-  /** Inverse of [[snapshotFiles]]: clear each target dir, copy the
-    * snapshot's files back, and drop Spark's cached file listings for the
-    * restored paths. */
+  /** Inverse of [[snapshotFiles]]: replace each target dir and its stats
+    * manifest with the snapshot's copies (a manifest the snapshot lacks is
+    * removed, since it names files the restore took away), and drop
+    * Spark's cached file listings for the restored paths. */
   def restoreFiles(spark: SparkSession, snapDir: String,
-      targets: Map[String, String]): Unit = {
-    import scala.jdk.CollectionConverters._
+      targets: Map[String, String]): Unit =
     targets.foreach { case (name, dir) =>
-      val src = java.nio.file.Paths.get(snapDir).resolve(name)
-      require(java.nio.file.Files.isDirectory(src), s"table $name not in tx snapshot")
-      val dst = java.nio.file.Paths.get(dir)
-      deleteRecursive(dst)
-      java.nio.file.Files.createDirectories(dst)
-      java.nio.file.Files.list(src).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .foreach(f => java.nio.file.Files.copy(f, dst.resolve(f.getFileName.toString)))
+      val src = Paths.get(snapDir).resolve(name)
+      require(Files.isDirectory(src), s"table $name not in tx snapshot")
+      mirror(src, Paths.get(dir))
+      mirror(Paths.get(snapDir).resolve(s"$name-manifest"), Paths.get(StatsStore.manifestDir(dir)))
       spark.catalog.refreshByPath(dir)
     }
+
+  /** Make `dst` hold exactly the regular files of `src`, or remove it when
+    * `src` is not a directory. */
+  private def mirror(src: Path, dst: Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    deleteRecursive(dst)
+    if (Files.isDirectory(src)) {
+      Files.createDirectories(dst)
+      Files.list(src).iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .foreach(f => Files.copy(f, dst.resolve(f.getFileName.toString)))
+    }
   }
 
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
+  private def deleteRecursive(p: Path): Unit =
+    if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
+      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
     }
 
   /** The backup's manifest: (table, rows). */

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** DML semantics over a writable parquet table (SURVEY.md §2.11).
   *
@@ -23,8 +24,12 @@ import org.apache.spark.sql.functions._
   * pruning — the derivation logic below (predicate → touched subset →
   * rewrite) is exactly what those table formats execute under the hood;
   * plain parquet keeps this library dependency-free.
+  *
+  * `keyCol` is the key a stats manifest on the table is built on, and the
+  * key the change feed records unless `recordChanges` is false.
   */
-final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String] = None) {
+final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String] = None,
+    recordChanges: Boolean = true) {
 
   /** The current table state. Every mutation binds it once, so one
     * mutation reads one state; the schema comes from the per-state memo
@@ -57,15 +62,20 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
   private val MaxPrunedKeys = 10000
 
   private def hasManifest: Boolean = {
-    val md = s"$dir-manifest"
+    val md = StatsStore.manifestDir(dir)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create(md), spark.sparkContext.hadoopConfiguration)
     fs.exists(new org.apache.hadoop.fs.Path(md))
   }
 
-  /** The affected keys when the pruned path applies, else None. */
+  /** The affected keys when the pruned path applies, else None. The
+    * manifest's file ranges are matched against long ids, so the key must
+    * be integral. */
   private def prunedKeys(affected: DataFrame): Option[(String, Seq[Long])] =
-    keyCol.filter(_ => hasManifest).flatMap { k =>
+    keyCol.filter(k => hasManifest && (affected.schema(k).dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    })).flatMap { k =>
       val ids = affected.select(col(k).cast("long")).distinct()
         .limit(MaxPrunedKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
       if (ids.nonEmpty && ids.length <= MaxPrunedKeys) Some((k, ids)) else None
@@ -103,11 +113,12 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
   /** The feed write evaluates `keys` immediately and runs BEFORE the
     * table swap, so it may read `dir` safely without a materialization of
     * its own. */
-  private def emitChanges(op: String, keys: DataFrame): Unit = keyCol.foreach { k =>
-    cdfSeq += 1
-    keys.select(lit(cdfSeq).as("seq"), lit(op).as("op"), col(k).cast("long").as("key"))
-      .write.mode(if (cdfSeq == 1) "overwrite" else "append").parquet(cdfDir)
-  }
+  private def emitChanges(op: String, keys: DataFrame): Unit =
+    keyCol.filter(_ => recordChanges).foreach { k =>
+      cdfSeq += 1
+      keys.select(lit(cdfSeq).as("seq"), lit(op).as("op"), col(k).cast("long").as("key"))
+        .write.mode(if (cdfSeq == 1) "overwrite" else "append").parquet(cdfDir)
+    }
 
   /** The accumulated change feed: (seq, op, key). */
   def changeFeed: DataFrame = graft.Tables.readCached(spark, cdfDir)

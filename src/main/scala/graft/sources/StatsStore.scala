@@ -36,7 +36,8 @@ import org.apache.spark.sql.types.StructType
   */
 object StatsStore {
 
-  private def manifestDir(dir: String) = s"$dir-manifest"
+  /** Where the manifest of `dir` lives. */
+  private[sources] def manifestDir(dir: String) = s"$dir-manifest"
 
   private def fsFor(spark: SparkSession, dir: String): FileSystem =
     FileSystem.get(java.net.URI.create(dir), spark.sparkContext.hadoopConfiguration)

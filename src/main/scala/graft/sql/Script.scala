@@ -254,7 +254,8 @@ object Script {
         }
         val path = cat(srcType).path.getOrElse(
           throw Translator.TranslateException(s"type $srcType has no storage"))(dir)
-        val tab = new graft.sources.MutableTable(spark, path)
+        val tab = new graft.sources.MutableTable(spark, path, cat.manifestKey(srcType),
+          recordChanges = false)
         val cols = rows.collectFirst { case StructLit(fs) =>
           fs.map(_._1).filterNot(_.startsWith("@")) }.getOrElse(Seq.empty)
         if (cols.nonEmpty) {

@@ -1,6 +1,6 @@
 package graft.sql
 
-import graft.graph.PropertyGraph
+import graft.graph.{Fixpoint, PropertyGraph}
 import graft.sql.Ast.Expr
 import graft.sql.Parser.{ParseException, TEof, TStr}
 import org.apache.spark.sql.DataFrame
@@ -103,9 +103,11 @@ object Traverse {
     * lexicographically-least id-path that first reaches it; sorting by
     * that path IS pre-order on a tree (the contract the reference's
     * depthFirstOrder test pins — sibling order is unspecified there, ours
-    * is by id). Set-oriented: one distinct-join expansion per level, the
-    * path array doing the ordering work a traversal stack does on a
-    * single node — no driver-side iteration over rows. */
+    * is by id). Set-oriented: one distinct-join expansion per level, a
+    * [[Fixpoint]] round run until the frontier dies, the path array doing
+    * the ordering work a traversal stack does on a single node — no
+    * driver-side iteration over rows. The visited set is the union of the
+    * pinned levels. */
   private def depthFirst(g: PropertyGraph, seeds: DataFrame, st: TraverseStmt): DataFrame = {
     val e0 = st.edgeLabel.foldLeft(g.edges)((d, l) => d.filter(col("label") === l))
     val edges = (st.direction match {
@@ -114,30 +116,21 @@ object Traverse {
       case _      => e0.select(col("src"), col("dst"))
         .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
     }).alias("e")
-    var visited = graft.Materialize.once(
-      seeds.select(col("id"), array(col("id")).as("__path")))
-    var frontier = visited
-    var d = 0
     val MaxPasses = 64
-    var done = false
-    while (!done && d < st.maxDepth) {
-      if (d >= MaxPasses)
-        throw new IllegalStateException(
-          s"TRAVERSE DEPTH_FIRST exceeded $MaxPasses levels; bound it with MAXDEPTH/WHILE")
-      val next = frontier.alias("f")
+    val seed = seeds.select(col("id"), array(col("id")).as("__path"))
+    val walk = Fixpoint(seed, Fixpoint.Until(math.min(st.maxDepth, MaxPasses)),
+        Some(Fixpoint.Merge(Some(seed), (level, _) => level))) { r =>
+      r.prev.alias("f")
         .join(edges, col("f.id") === col("e.src"))
         .select(col("e.dst").as("id"),
           concat(col("f.__path"), array(col("e.dst"))).as("__path"))
-        .join(visited.select(col("id").as("__vid")), col("id") === col("__vid"), "left_anti")
+        .join(r.acc.get.select(col("id").as("__vid")), col("id") === col("__vid"), "left_anti")
         .groupBy("id").agg(min(col("__path")).as("__path"))
-      val nextP = graft.Materialize.once(next)
-      if (nextP.isEmpty) done = true
-      else {
-        visited = graft.Materialize.once(visited.unionByName(nextP))
-        frontier = nextP; d += 1
-      }
     }
-    visited
+    if (walk.cutOff && st.maxDepth > MaxPasses)
+      throw new IllegalStateException(
+        s"TRAVERSE DEPTH_FIRST exceeded $MaxPasses levels; bound it with MAXDEPTH/WHILE")
+    walk.out
       .join(g.vertices, "id")
       .select(col("key"), col("label"), (size(col("__path")) - 1).as("depth"), col("__path"))
       .orderBy("__path")

@@ -1,5 +1,8 @@
 package graft.streaming
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Scoped state-partition sizing for the bounded streaming queries
@@ -10,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * per-partition commit for EACH stateful operator (a stream-stream join
   * keeps four stores per partition), and the AvailableNow no-data
   * finalize batch runs those commits again over zero rows — measured
-  * ~0.8 s of pure state machinery per batch at 8 partitions (r12 probe).
+  * ~0.8 s of pure state machinery per batch at 8 partitions.
   *
   * Sizing: one state partition per source file, capped at the session's
   * shuffle default — for a file-stream source the file count is the
@@ -21,16 +24,21 @@ import org.apache.spark.sql.SparkSession
   */
 object StateScope {
 
-  /** Parquet file count in a staged stream-source directory. */
-  def sourceFiles(srcDir: String): Int = {
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(srcDir))
-    try s.filter(p => p.getFileName.toString.endsWith(".parquet")).count().toInt
-    finally s.close()
-  }
+  /** Parquet file count in a staged stream-source directory, listed
+    * through the Hadoop FileSystem of the dir's scheme (local, hdfs://,
+    * s3a://); None when the listing fails, e.g. on a missing dir. */
+  def sourceFiles(spark: SparkSession, srcDir: String): Option[Int] = Try {
+    val dir = new Path(srcDir)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+      .count(_.getPath.getName.endsWith(".parquet"))
+  }.toOption
 
-  def statePartitionsFor(spark: SparkSession, srcDir: String): Int =
-    math.max(1, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, sourceFiles(srcDir)))
+  /** One state partition per source file, capped at the session's shuffle
+    * default; the default itself when the source cannot be listed. */
+  def statePartitionsFor(spark: SparkSession, srcDir: String): Int = {
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    sourceFiles(spark, srcDir).fold(shuffle)(n => math.max(1, math.min(shuffle, n)))
+  }
 
   /** Run `body` (which must START its stream inside) with the session's
     * shuffle-partition count scoped down; restored afterwards so

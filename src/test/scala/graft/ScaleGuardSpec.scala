@@ -33,11 +33,21 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(viaSets.exceptAll(viaJoin).isEmpty && viaJoin.exceptAll(viaSets).isEmpty)
   }
 
-  test("Materialize.once: reliable checkpoint when a checkpoint dir is set") {
+  /** Runs `body` with a fresh checkpoint dir set, then restores the shared
+    * session's local-checkpoint behavior. */
+  private def withCheckpointDir(body: String => Unit): Unit = {
     val sc = spark.sparkContext
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     sc.setCheckpointDir(dir)
-    try {
+    try body(dir)
+    finally {
+      val f = sc.getClass.getDeclaredMethods.find(_.getName == "checkpointDir_$eq")
+      f.foreach { m => m.setAccessible(true); m.invoke(sc, None) }
+    }
+  }
+
+  test("Materialize.once: reliable checkpoint when a checkpoint dir is set") {
+    withCheckpointDir { dir =>
       val df = spark.range(100).select(col("id"), (col("id") * 2).as("v"))
       val pinned = Materialize.once(df)
       assert(pinned.count() === 100L)
@@ -46,10 +56,18 @@ class ScaleGuardSpec extends AnyFunSuite {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(wrote > 0, "expected reliable checkpoint files under the checkpoint dir")
-    } finally {
-      // restore local-checkpoint behavior for the shared session
-      val f = sc.getClass.getDeclaredMethods.find(_.getName == "checkpointDir_$eq")
-      f.foreach { m => m.setAccessible(true); m.invoke(sc, None) }
+    }
+  }
+
+  test("Materialize.once: a lazy pin on the reliable path computes its source once for two readers") {
+    withCheckpointDir { _ =>
+      val rows = spark.sparkContext.longAccumulator("lazy_pin_source_rows")
+      val counted = udf((x: Long) => { rows.add(1); x })
+      val pinned = Materialize.once(
+        spark.range(0, 50, 1, 2).select(counted(col("id")).as("id")), eager = false)
+      assert(pinned.count() === 50L)
+      assert(pinned.agg(sum("id")).head().getLong(0) === 1225L)
+      assert(rows.value === 50L, "the pinned source was computed more than once")
     }
   }
 }

@@ -181,4 +181,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch,
       s"streaming sessions != batch session_window (${streamed.length} vs ${batch.length})")
   }
+
+  test("StateScope: a missing source dir sizes state at the shuffle default") {
+    val dflt = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val missing = s"/tmp/graft_state/streamspec_missing_${System.nanoTime()}"
+    assert(graft.streaming.StateScope.statePartitionsFor(spark, missing) === dflt)
+  }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{MutableTable, Publish, StatsStore}
+import graft.sql.GraftSql
 
 /** The write path's table-state contract: a read sees the state (schema
   * included) the last write published, a stats manifest describes the
@@ -103,5 +104,52 @@ class WritePathSpec extends AnyFunSuite {
     assert(n == 20)
     assert(jobs <= 10, s"$jobs Spark jobs")
     assertRangeScanAgrees(dir, 5000)
+  }
+
+  /** A 2,000-row type `tdml` on a fresh directory, an SQL statement
+    * runner on it, and a check that an index-pruned SELECT over `k` in
+    * [lo, hi] agrees with a plain filter over the files. */
+  private def sqlTable(name: String): (String, String => Unit, (Long, Long) => Unit,
+      graft.schema.TypeCatalog) = {
+    val dir = freshDir(name)
+    spark.range(2000).select(col("id").as("k"), (col("id") % 7).as("v")).write.parquet(dir)
+    val cat = graft.schema.TypeCatalog.fresh()
+    cat.createType("tdml", "DOCUMENT", path = Some(_ => dir))
+    def sql(text: String): Unit = { GraftSql.statement(spark, sfDir, text, cat).collect(); () }
+    def agrees(lo: Long, hi: Long): Unit = {
+      val pruned = GraftSql.query(spark, sfDir, s"SELECT k, v FROM tdml WHERE k >= $lo AND k <= $hi", cat)
+      val plain = spark.read.parquet(dir).filter(col("k").between(lo, hi)).select("k", "v")
+      assert(pruned.exceptAll(plain).isEmpty && plain.exceptAll(pruned).isEmpty, s"k in [$lo, $hi]")
+    }
+    (dir, sql, agrees, cat)
+  }
+
+  test("SQL DML on an indexed type keeps its manifest in step with the files") {
+    val (dir, sql, agrees, _) = sqlTable("wp_sqldml")
+    sql("CREATE INDEX ON tdml (k) UNIQUE")
+    sql("INSERT INTO tdml (k, v) VALUES (5000, 1)")
+    agrees(4990, 5010)
+    agrees(0, 99)
+    sql("UPDATE tdml SET v = 100 WHERE k < 50")
+    agrees(0, 99)
+    sql("DELETE FROM tdml WHERE k >= 1990")
+    agrees(1900, 5010)
+    assert(spark.read.parquet(dir).count() === 1990L) // 2,000 + 1 inserted - 11 deleted
+    // the index key does not turn on the change feed
+    assert(!Files.exists(Paths.get(s"$dir-cdf")))
+  }
+
+  test("a ROLLBACK restores an indexed type's manifest with its files") {
+    val (dir, sql, agrees, cat) = sqlTable("wp_sqlrollback")
+    sql("CREATE INDEX ON tdml (k) UNIQUE")
+    graft.sql.Script.run(spark, sfDir,
+      """BEGIN;
+        |UPDATE tdml SET v = 100 WHERE k < 50;
+        |INSERT INTO tdml (k, v) VALUES (5000, 1);
+        |DELETE FROM tdml WHERE k >= 1990;
+        |ROLLBACK;""".stripMargin, cat).collect()
+    assert(spark.read.parquet(dir).count() === 2000L)
+    agrees(0, 99)
+    agrees(1900, 5010)
   }
 }
