@@ -28,16 +28,16 @@ final class MutableGraph(val spark: SparkSession, vDir: String, eDir: String) {
   graft.sources.Publish.recover(spark, vDir)
   graft.sources.Publish.recover(spark, eDir)
 
-  // Staging write + swap (Publish): input frames evaluate during the
-  // staging write, while both backing dirs are still intact, so a
-  // mutation materializes once instead of checkpointing first and
-  // overwriting in place. In a same-session interleaved A/B the swap was
-  // also the faster of the two (q_cypher_create median 2.22 s vs 2.53 s
-  // over 5 pairs).
+  // The one table rewrite (StatsStore.overwrite: staging write + swap):
+  // input frames evaluate during the staging write, while both backing
+  // dirs are still intact, so a mutation materializes once instead of
+  // checkpointing first and overwriting in place. In a same-session
+  // interleaved A/B the swap was also the faster of the two
+  // (q_cypher_create median 2.22 s vs 2.53 s over 5 pairs).
   private def overwriteV(next: DataFrame): Unit =
-    graft.sources.Publish.overwrite(next, vDir)
+    graft.sources.StatsStore.overwrite(next, vDir)
   private def overwriteE(next: DataFrame): Unit =
-    graft.sources.Publish.overwrite(next, eDir)
+    graft.sources.StatsStore.overwrite(next, eDir)
 
   /** Schema-evolving append: columns missing on either side become null,
     * new property keys extend the schema (the reference's records are

@@ -133,15 +133,6 @@ final class TypeCatalog(initial: Seq[TypeDef]) {
   def indexesOf(typeName: String): Seq[IndexDef] =
     indexDefs.filter(_.typeName == typeName)
 
-  /** The key of the stats manifest a write to `typeName` must keep in step:
-    * the column of its single-column range index. A Z-order index writes
-    * the manifest in its own two-key form, so a type with one has none. */
-  def manifestKey(typeName: String): Option[String] =
-    indexesOf(typeName).filter(_.kindOrDefault != "HNSW") match {
-      case Seq(ix) if ix.kindOrDefault == "RANGE" => Some(ix.cols.head)
-      case _ => None
-    }
-
   /** `SELECT FROM schema:indexes` (FetchFromSchemaIndexesStep analog). */
   def schemaIndexes(spark: SparkSession): DataFrame = {
     import spark.implicits._

@@ -84,17 +84,20 @@ object Backup {
     spark.read.parquet(s"$backupDir/_manifest")
 
   /** Restore tables from `backupDir` into `targets` (name → dir),
-    * verifying each restored count against the manifest. */
+    * verifying each snapshot's row count against the backup manifest
+    * before it replaces the table through the one table rewrite
+    * ([[StatsStore.overwrite]]): a staging swap, so a failed restore leaves
+    * the old table whole, and a table's stats manifest is rebuilt over the
+    * restored files. */
   def restore(spark: SparkSession, backupDir: String, targets: Map[String, String]): Unit = {
     val expected = manifest(spark, backupDir).collect()
       .map(r => r.getAs[String]("table") -> r.getAs[Long]("rows")).toMap
     targets.foreach { case (name, dir) =>
       require(expected.contains(name), s"table $name not in backup")
       val snap = spark.read.parquet(s"$backupDir/$name")
-        .localCheckpoint(eager = true) // target dir may BE the snapshot source's origin
       val n = snap.count()
       require(n == expected(name), s"backup of $name corrupt: $n != ${expected(name)}")
-      snap.write.mode("overwrite").parquet(dir)
+      StatsStore.overwrite(snap, dir)
     }
   }
 }

@@ -25,11 +25,13 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * rewrite) is exactly what those table formats execute under the hood;
   * plain parquet keeps this library dependency-free.
   *
-  * `keyCol` is the key a stats manifest on the table is built on, and the
-  * key the change feed records unless `recordChanges` is false.
+  * `keyCol` is the change-feed key: when it is set, every mutation
+  * appends the keys of the rows it changes to the feed ([[changeFeed]]).
+  * A stats manifest on the table is [[StatsStore]]'s: every rewrite goes
+  * through [[StatsStore.overwrite]], which keeps it in step, and the pruned
+  * write path below takes its key from it.
   */
-final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String] = None,
-    recordChanges: Boolean = true) {
+final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String] = None) {
 
   /** The current table state. Every mutation binds it once, so one
     * mutation reads one state; the schema comes from the per-state memo
@@ -40,42 +42,23 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
   // (one driver-side existence check per table open — see Publish).
   Publish.recover(spark, dir)
 
-  /** Publish `next` as the table's new state through [[Publish]]: the
-    * staging write reads the still-intact current state, so `next` needs
-    * no materialization first. A table with a stats manifest on `keyCol`
-    * is rewritten through [[StatsStore.write]] instead, clustered on the
-    * key into as many files as the manifest tracks, so the manifest
-    * describes the files that replaced the old ones. */
-  private def overwrite(next: DataFrame): Unit = keyCol.filter(_ => hasManifest) match {
-    case Some(k) =>
-      StatsStore.write(next, dir, k, StatsStore.manifest(spark, dir).count().toInt.max(1))
-    case None => Publish.overwrite(next, dir)
-  }
-
   // ---- pruned write path (StatsStore keyed merge): when the table
-  // carries a stats manifest built on `keyCol`, UPDATE/DELETE rewrite
-  // ONLY the manifest-hit files instead of the whole directory — the
-  // Delta/Iceberg MERGE shape. Conditions: the affected-key set is
-  // bounded (writes-touch-few-rows contract) and, for UPDATE, the SET
-  // introduces no new columns (a partial rewrite cannot evolve the
-  // schema of untouched files).
+  // carries a stats manifest, UPDATE/DELETE rewrite ONLY the manifest-hit
+  // files instead of the whole directory — the Delta/Iceberg MERGE shape.
+  // Conditions: the affected-key set is bounded (writes-touch-few-rows
+  // contract) and, for UPDATE, the SET introduces no new columns (a
+  // partial rewrite cannot evolve the schema of untouched files).
   private val MaxPrunedKeys = 10000
 
-  private def hasManifest: Boolean = {
-    val md = StatsStore.manifestDir(dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(md), spark.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(md))
-  }
-
-  /** The affected keys when the pruned path applies, else None. The
-    * manifest's file ranges are matched against long ids, so the key must
-    * be integral. */
+  /** The manifest key and the affected keys when the pruned path applies,
+    * else None. The manifest's file ranges are matched against long ids,
+    * so the key is the first integral key the manifest describes. */
   private def prunedKeys(affected: DataFrame): Option[(String, Seq[Long])] =
-    keyCol.filter(k => hasManifest && (affected.schema(k).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    })).flatMap { k =>
+    StatsStore.keys(spark, dir).find(k =>
+      affected.schema.find(_.name == k).exists(_.dataType match {
+        case LongType | IntegerType | ShortType | ByteType => true
+        case _ => false
+      })).flatMap { k =>
       val ids = affected.select(col(k).cast("long")).distinct()
         .limit(MaxPrunedKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
       if (ids.nonEmpty && ids.length <= MaxPrunedKeys) Some((k, ids)) else None
@@ -114,7 +97,7 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
     * table swap, so it may read `dir` safely without a materialization of
     * its own. */
   private def emitChanges(op: String, keys: DataFrame): Unit =
-    keyCol.filter(_ => recordChanges).foreach { k =>
+    keyCol.foreach { k =>
       cdfSeq += 1
       keys.select(lit(cdfSeq).as("seq"), lit(op).as("op"), col(k).cast("long").as("key"))
         .write.mode(if (cdfSeq == 1) "overwrite" else "append").parquet(cdfDir)
@@ -132,7 +115,7 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
     // schema-evolving: CONTENT/SET inserts may carry brand-new property
     // keys (schema-flexible records — Document.java:42); missing columns
     // null-fill on either side
-    overwrite(df.unionByName(staged, allowMissingColumns = true))
+    StatsStore.overwrite(df.unionByName(staged, allowMissingColumns = true), dir)
     fire("insert", staged)
     n
   }
@@ -155,7 +138,7 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
       case None =>
         val untouched = cur.filter(!coalesce(where, lit(false)))
         // schema-evolving: a SET/MERGE may introduce new property columns
-        overwrite(untouched.unionByName(after, allowMissingColumns = true))
+        StatsStore.overwrite(untouched.unionByName(after, allowMissingColumns = true), dir)
     }
     fire("update", after)
     (before.count(), before, after)
@@ -174,7 +157,7 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
       }
       val newRow = graft.OneRow(spark).select(cols: _*) // literals only
       emitChanges("insert", newRow)
-      overwrite(cur.unionByName(newRow))
+      StatsStore.overwrite(cur.unionByName(newRow), dir)
       fire("insert", newRow)
       1L
     } else {
@@ -210,7 +193,7 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
         else next.filter(chosen).drop(rid)
       fireBefore(op, before)
       emitChanges(op, before)
-      overwrite(next.drop(rid))
+      StatsStore.overwrite(next.drop(rid), dir)
       fire(op, fired)
       1L
     }
@@ -236,7 +219,7 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
       case Some((k, ids)) =>
         StatsStore.mergeDelete(spark, dir, k, ids, rowCond = Some(where))
       case None =>
-        overwrite(cur.filter(!coalesce(where, lit(false))))
+        StatsStore.overwrite(cur.filter(!coalesce(where, lit(false))), dir)
     }
     fire("delete", deleted)
     n
@@ -260,16 +243,17 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
       .localCheckpoint(eager = true)
     emitChanges("update", source.join(cur, keys, "left_semi"))
     emitChanges("insert", inserts)
-    overwrite(updated.unionByName(inserts))
+    StatsStore.overwrite(updated.unionByName(inserts), dir)
   }
 }
 
 object MutableTable {
   /** Fresh writable copy of `source` at `dir` (TRUNCATE+INSERT FROM
-    * SELECT). `keyCol` enables the change feed. */
+    * SELECT), published through the one table rewrite. `keyCol` enables
+    * the change feed. */
   def copyOf(spark: SparkSession, source: DataFrame, dir: String,
       keyCol: Option[String] = None): MutableTable = {
-    source.write.mode("overwrite").parquet(dir)
+    StatsStore.overwrite(source, dir)
     new MutableTable(spark, dir, keyCol)
   }
 }

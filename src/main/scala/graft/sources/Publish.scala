@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe directory publish, shared by [[MutableTable]],
-  * [[graft.graph.MutableGraph]] and [[StatsStore]]. A delete-then-rename
+/** Crash-safe directory publish under [[StatsStore.overwrite]], the one
+  * table rewrite every writer calls. A delete-then-rename
   * swap has a window — between `fs.delete(dir)` and
   * `fs.rename(staging, dir)` — where a crash or a cross-filesystem rename
   * failure leaves NO table at `dir` and no recovery copy; this protocol
@@ -34,7 +34,7 @@ object Publish {
   }
 
   /** Swap an already-written `staging` directory into place at `dir`. */
-  def swapIn(spark: SparkSession, staging: String, dir: String): Unit = {
+  private def swapIn(spark: SparkSession, staging: String, dir: String): Unit = {
     val fs = fsFor(spark, dir)
     val pDir = new org.apache.hadoop.fs.Path(dir)
     val pStg = new org.apache.hadoop.fs.Path(staging)

@@ -8,31 +8,36 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** File-level data skipping via a min/max manifest — the distributed
-  * replacement for the reference's LSM range index (index/lsm/
-  * LSMTreeIndex.java:78 range scans, exec/FetchFromIndexStep.java;
-  * SURVEY.md §4.1), and the 1-D case of Delta/Iceberg-style file stats.
+  * replacement for the reference's LSM range and composite indexes
+  * (index/lsm/LSMTreeIndex.java:78 range scans, exec/FetchFromIndexStep.java;
+  * SURVEY.md §4.1, §4.3), and Delta/Iceberg-style file stats.
   *
-  * Write path: cluster the table on the index key with
-  * `repartitionByRange` — each output file then covers a narrow key range
-  * (the sorted-run property an LSM level has on disk) — and collect one
-  * (file, min, max, rows) row per file into a tiny manifest table.
+  * The manifest of `dir` lives at `$dir-manifest`: one row per data file,
+  * `file` (its path), `cnt` (its rows), and `min` / `max`, two structs with
+  * one field per key holding the file's least and greatest value of that
+  * key. The struct fields name the keys, so the manifest says which columns
+  * it describes. One key means a range-clustered layout (each file covers a
+  * narrow key range, the sorted-run property an LSM level has on disk); two
+  * keys mean a Z-order layout, which skips files on either key. StatsStore
+  * alone reads and writes the manifest: every rewrite of a table goes
+  * through [[overwrite]], which rebuilds it, and every keyed write patches
+  * it.
   *
-  * Read path: a range predicate consults the manifest first and reads
-  * ONLY the files whose [min, max] intersects the range. The intersection
-  * test runs DISTRIBUTED over the manifest DataFrame; only the surviving
-  * file paths (bounded by predicate selectivity, not by table size) cross
-  * to the driver to parameterize the scan, the way Delta's log replay
-  * emits matching AddFiles. A selective predicate skips >99% of files
-  * instead of scanning every file that shares a partition. Partition
+  * Read path: a range predicate on a key the manifest covers consults the
+  * manifest first and reads ONLY the files whose [min, max] intersects the
+  * range. The intersection test runs DISTRIBUTED over the manifest
+  * DataFrame; only the surviving file paths (bounded by predicate
+  * selectivity, not by table size) cross to the driver to parameterize the
+  * scan, the way Delta's log replay emits matching AddFiles. Partition
   * pruning (bucket_date in [[TimeSeriesStore]]) handles time; this handles
   * any OTHER clustered key.
   *
-  * Keyed writes ([[mergeSet]], [[mergeDelete]], [[mergeUpsert]]) patch the
-  * manifest on the driver: they collect it (one row per file, O(files)
-  * driver state — the size of the file list a table-format commit writes
-  * anyway), pick the hit files there, and write the patched manifest back.
-  * Every Spark job they run carries data: the manifest read, the rewrite
-  * of the hit files, the stats of the new files and the manifest write.
+  * Keyed writes ([[mergeSet]], [[mergeDelete]]) patch the manifest on the
+  * driver: they collect it (one row per file, O(files) driver state — the
+  * size of the file list a table-format commit writes anyway), pick the hit
+  * files there, and write the patched manifest back. Every Spark job they
+  * run carries data: the manifest read, the rewrite of the hit files, the
+  * stats of the new files and the manifest write.
   */
 object StatsStore {
 
@@ -48,20 +53,40 @@ object StatsStore {
   private def partFiles(fs: FileSystem, dir: String): Seq[FileStatus] =
     fs.listStatus(new Path(dir)).toSeq.filter(_.getPath.getName.startsWith("part-"))
 
-  /** The (file, kmin, kmax, cnt) stats of `key` per file of `df`. */
-  private def keyStats(df: DataFrame, key: String): DataFrame =
+  /** The manifest of `dir`, or None when `dir` has none. */
+  private def manifest(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (fsFor(spark, dir).exists(new Path(manifestDir(dir))))
+      Some(graft.Tables.readCached(spark, manifestDir(dir)))
+    else None
+
+  /** The keys manifest `m` describes, in clustering order. A manifest in
+    * any other format describes none, so it is never trusted. */
+  private def keysOf(m: DataFrame): Seq[String] =
+    m.schema.find(_.name == "min").map(_.dataType) match {
+      case Some(s: StructType) => s.fieldNames.toSeq
+      case _ => Nil
+    }
+
+  /** The keys the manifest of `dir` describes; empty when it has none. */
+  private[sources] def keys(spark: SparkSession, dir: String): Seq[String] =
+    manifest(spark, dir).fold(Seq.empty[String])(keysOf)
+
+  /** The (file, cnt, min, max) stats of `keys` per file of `df`. */
+  private def keyStats(df: DataFrame, keys: Seq[String]): DataFrame =
     df.groupBy(col("_metadata.file_path").as("file"))
-      .agg(min(col(key)).as("kmin"), max(col(key)).as("kmax"), count(lit(1)).as("cnt"))
+      .agg(count(lit(1)).as("cnt"),
+        struct(keys.map(k => min(col(k)).as(k)): _*).as("min"),
+        struct(keys.map(k => max(col(k)).as(k)): _*).as("max"))
 
   /** Stats of the few files a keyed write just added, read with the schema
     * they were written with, in one single-task job (one partition needs no
     * shuffle before the per-file aggregate). Files holding no rows get no
     * row. */
   private def statNew(spark: SparkSession, files: Seq[FileStatus], schema: StructType,
-      key: String): Seq[Row] =
+      keys: Seq[String]): Seq[Row] =
     if (files.isEmpty) Nil
     else keyStats(spark.read.schema(schema).parquet(files.map(_.getPath.toString): _*)
-      .coalesce(1), key).collect().toSeq
+      .coalesce(1), keys).collect().toSeq
 
   /** Publish `rows` as the manifest of `dir`. They live on the driver, so
     * the write reads nothing from the manifest it replaces. */
@@ -70,45 +95,81 @@ object StatsStore {
     spark.createDataFrame(rows.asJava, schema)
       .coalesce(1).write.mode("overwrite").parquet(manifestDir(dir))
 
-  /** Write `df` clustered by `key` into `numFiles` range-partitioned
-    * files and collect the per-file min/max manifest. The clustered files
-    * are written to a staging directory and swapped in ([[Publish]]), so
-    * `df` may read `dir` itself: the write reads the still-intact source
-    * files and needs no materialization first. */
-  def write(df: DataFrame, dir: String, key: String, numFiles: Int): Unit = {
-    val spark = df.sparkSession
-    df.repartitionByRange(numFiles, col(key))
-      .write.mode("overwrite").parquet(s"$dir-staging")
-    Publish.swapIn(spark, s"$dir-staging", dir)
-    keyStats(graft.Tables.readCached(spark, dir), key)
+  /** Write `df` range-clustered on `key` into `numFiles` files, with a
+    * manifest on `key`. */
+  def write(df: DataFrame, dir: String, key: String, numFiles: Int): Unit =
+    publish(df, dir, Seq(key), numFiles)
+
+  /** Write `df` Z-order-clustered on (keyA, keyB) into `numFiles` files,
+    * with a manifest on both keys. */
+  def writeZOrdered(df: DataFrame, dir: String, keyA: String, keyB: String,
+      numFiles: Int): Unit =
+    publish(df, dir, Seq(keyA, keyB), numFiles)
+
+  /** The one table rewrite: publish `next` as the new state of `dir`. A
+    * table with a manifest is re-clustered on the manifest's own keys into
+    * as many files as the directory holds, and the manifest is rebuilt;
+    * any other table is written as it is. Either way the write goes to a
+    * staging directory that is swapped in ([[Publish]]), so `next` may read
+    * `dir` itself and needs no materialization first. */
+  def overwrite(next: DataFrame, dir: String): Unit = {
+    val spark = next.sparkSession
+    keys(spark, dir) match {
+      case Nil => Publish.overwrite(next, dir)
+      case ks => publish(next, dir, ks, partFiles(fsFor(spark, dir), dir).length.max(1))
+    }
+  }
+
+  /** Cluster `df` on `keys`, stage and swap it in, and stat its files into
+    * the manifest. The staging write reads the still-intact files of `dir`,
+    * so `df` may read `dir` itself. */
+  private def publish(df: DataFrame, dir: String, keys: Seq[String], numFiles: Int): Unit = {
+    Publish.overwrite(clustered(df, keys, numFiles), dir)
+    keyStats(graft.Tables.readCached(df.sparkSession, dir), keys)
       .coalesce(1)
       .write.mode("overwrite").parquet(manifestDir(dir))
   }
 
-  /** The (file, kmin, kmax, cnt) manifest. */
-  def manifest(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.readCached(spark, manifestDir(dir))
+  /** `df` laid out for a manifest on `keys`: range-partitioned on one key,
+    * or on the Z-value of two. */
+  private def clustered(df: DataFrame, keys: Seq[String], numFiles: Int): DataFrame =
+    keys match {
+      case Seq(k) => df.repartitionByRange(numFiles, col(k))
+      case Seq(a, b) =>
+        df.withColumn("__z", zValue(df, a, b))
+          .repartitionByRange(numFiles, col("__z"))
+          .sortWithinPartitions("__z")
+          .drop("__z")
+      case _ => throw new IllegalArgumentException(
+        s"a manifest covers one or two keys, not ${keys.mkString(", ")}")
+    }
 
-  /** Remove the manifest (DROP INDEX): scans revert to full reads; the
-    * clustered data layout stays (harmless — just well-sorted files). */
-  def dropManifest(spark: SparkSession, dir: String): Unit = {
-    fsFor(spark, dir).delete(new Path(manifestDir(dir)), true)
-    ()
-  }
+  /** Remove the manifest when it describes exactly `cols` (DROP INDEX of
+    * the index that built it): scans on them revert to full reads; the
+    * clustered data layout stays (harmless — just well-sorted files). A
+    * manifest another index built stays. */
+  def dropManifest(spark: SparkSession, dir: String, cols: Seq[String]): Unit =
+    if (keys(spark, dir) == cols) fsFor(spark, dir).delete(new Path(manifestDir(dir)), true)
 
-  /** Range scan with file skipping: returns the pruned DataFrame (with
-    * the residual filter applied) plus (filesRead, filesTotal) so callers
-    * and tests can observe the pruning. */
+  /** Range scan of `key` in [lo, hi], with the residual filter applied,
+    * plus (filesRead, filesTotal) so callers and tests can observe the
+    * pruning. It reads only the files whose range intersects [lo, hi] when
+    * the manifest covers `key`, and the whole table otherwise. */
   def rangeScan(spark: SparkSession, dir: String, key: String,
       lo: Long, hi: Long): (DataFrame, Int, Int) =
-    prunedRead(spark, dir, key,
-      manifest(spark, dir), col("kmax") >= lo && col("kmin") <= hi, lo, hi)
+    manifest(spark, dir).filter(m => keysOf(m).contains(key)) match {
+      case Some(m) => prunedRead(spark, dir, key, m, lo, hi)
+      case None =>
+        val n = partFiles(fsFor(spark, dir), dir).length
+        (graft.Tables.readCached(spark, dir).filter(col(key).between(lo, hi)), n, n)
+    }
 
   /** One aggregate job over the manifest: the intersection predicate is
     * evaluated executor-side and ONLY the hit file paths (plus the total
     * file count) return to the driver — O(selectivity), never O(files). */
   private def prunedRead(spark: SparkSession, dir: String, key: String,
-      m: DataFrame, intersects: Column, lo: Long, hi: Long): (DataFrame, Int, Int) = {
+      m: DataFrame, lo: Long, hi: Long): (DataFrame, Int, Int) = {
+    val intersects = col("max")(key) >= lo && col("min")(key) <= hi
     val row = m.agg(
       sort_array(collect_list(when(intersects, col("file")))).as("hits"),
       count(lit(1)).as("total")).collect()(0)
@@ -124,16 +185,26 @@ object StatsStore {
 
   private val ZBits = 16
 
-  /** Bit-interleaved Morton code of two dimensions, each linearly scaled
-    * to [0, 2^16): locality in EITHER dimension becomes locality in the
-    * Z-value, so range-clustering files by Z gives min/max file skipping
-    * on BOTH columns — the multi-column case the 1-D layout above can't
-    * serve (Delta OPTIMIZE ZORDER BY analog; completes SURVEY §4.1's
-    * FetchFromIndex replacement for composite keys). */
-  private def zValue(a: Column, b: Column): Column = {
-    val mask = (1L << ZBits) - 1
-    val ia = a.cast("long").bitwiseAND(mask)
-    val ib = b.cast("long").bitwiseAND(mask)
+  /** Bit-interleaved Morton code of keys `a` and `b` of `df`, each linearly
+    * scaled to [0, 2^16) from its global min/max (one aggregate job):
+    * locality in EITHER key becomes locality in the Z-value, so
+    * range-clustering files by Z gives min/max file skipping on BOTH
+    * columns — the multi-column case a 1-D layout can't serve (Delta
+    * OPTIMIZE ZORDER BY analog; SURVEY §4.1's FetchFromIndex replacement
+    * for composite keys). */
+  private def zValue(df: DataFrame, a: String, b: String): Column = {
+    val stats = df.agg(
+      min(col(a)).cast("double"), max(col(a)).cast("double"),
+      min(col(b)).cast("double"), max(col(b)).cast("double"))
+      .collect()(0)
+    val hi = (1L << ZBits) - 1
+    def scaled(c: String, i: Int): Column =
+      if (stats.isNullAt(i) || stats.getDouble(i + 1) <= stats.getDouble(i)) lit(0L)
+      else {
+        val (lo, up) = (stats.getDouble(i), stats.getDouble(i + 1))
+        ((col(c).cast("double") - lo) / (up - lo) * hi).cast("long").bitwiseAND(hi)
+      }
+    val (ia, ib) = (scaled(a, 0), scaled(b, 2))
     (0 until ZBits).foldLeft(lit(0L)) { (acc, i) =>
       acc
         .bitwiseOR(shiftleft(shiftright(ia, i).bitwiseAND(1), 2 * i))
@@ -141,52 +212,10 @@ object StatsStore {
     }
   }
 
-  /** Write `df` Z-order-clustered on (keyA, keyB): scale both to the
-    * 16-bit grid from their global min/max, range-partition by the Morton
-    * code, and record per-file min/max for BOTH keys in the manifest. */
-  def writeZOrdered(df: DataFrame, dir: String, keyA: String, keyB: String,
-      numFiles: Int): Unit = {
-    val stats = df.agg(
-      min(col(keyA)).cast("double").as("amin"), max(col(keyA)).cast("double").as("amax"),
-      min(col(keyB)).cast("double").as("bmin"), max(col(keyB)).cast("double").as("bmax"))
-      .collect()(0)
-    val (amin, amax) = (stats.getDouble(0), stats.getDouble(1))
-    val (bmin, bmax) = (stats.getDouble(2), stats.getDouble(3))
-    val hi = (1L << ZBits) - 1
-    def scaled(c: Column, lo: Double, up: Double): Column =
-      if (up <= lo) lit(0L)
-      else ((c.cast("double") - lo) / (up - lo) * hi).cast("long")
-    val z = zValue(scaled(col(keyA), amin, amax), scaled(col(keyB), bmin, bmax))
-    val spark = df.sparkSession
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(s"$dir-staging")
-    Publish.swapIn(spark, s"$dir-staging", dir)
-    graft.Tables.readCached(spark, dir)
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(min(col(keyA)).as("amin"), max(col(keyA)).as("amax"),
-        min(col(keyB)).as("bmin"), max(col(keyB)).as("bmax"),
-        count(lit(1)).as("cnt"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(manifestDir(dir))
-  }
-
-  /** Range scan over a Z-ordered layout on either clustered dimension
-    * ("a" = keyA, "b" = keyB). Same manifest-consult-then-read-hits shape
-    * as [[rangeScan]]. */
-  def zRangeScan(spark: SparkSession, dir: String, dim: String,
-      key: String, lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val (mn, mx) = if (dim == "a") ("amin", "amax") else ("bmin", "bmax")
-    prunedRead(spark, dir, key,
-      manifest(spark, dir), col(mx) >= lo && col(mn) <= hi, lo, hi)
-  }
-
   // ---------------- keyed MERGE with file-level pruning ----------------
 
   /** Keyed MERGE (UPDATE … SET over an affected-id set) that rewrites
-    * ONLY the files whose [kmin, kmax] manifest range intersects an
+    * ONLY the files whose manifest range of `key` intersects an
     * affected id — the Delta/Iceberg MERGE shape the full-rewrite
     * MutableTable/MutableGraph model documents as its 100 TB derivation
     * (MutableGraph.scala scaladoc). Protocol: append the updated rows of
@@ -220,51 +249,6 @@ object StatsStore {
       touched.filter(!coalesce(rowCond.getOrElse(cond0), lit(false)))
     }
 
-  /** Keyed UPSERT: rows of `updates` (carrying `key` plus the columns to
-    * overwrite) replace their matching rows inside HIT files; keys with
-    * no match append as one new (statted) file, null in the columns
-    * `updates` does not carry, so every file keeps the table's schema.
-    * `updates` is broadcast-sized by the same contract as `ids`. */
-  def mergeUpsert(spark: SparkSession, dir: String, key: String,
-      updates: DataFrame): (Int, Int) = {
-    val table = graft.Tables.readCached(spark, dir)
-    val ids = updates.select(col(key).cast("long")).distinct()
-      .collect().map(_.getLong(0)).toIndexedSeq
-    val existing = table
-      .select(col(key)).filter(col(key).isin(ids: _*)).distinct()
-      .collect().map(_.getAs[Number](0).longValue()).toSet
-    val inserts = updates.filter(!col(key).isin(existing.toSeq: _*))
-      .select(table.schema.map(f =>
-        (if (updates.columns.contains(f.name)) col(f.name) else lit(null))
-          .cast(f.dataType).as(f.name)): _*)
-      .localCheckpoint(eager = true)
-    val matchedIds = ids.filter(existing.contains)
-    val r =
-      if (matchedIds.nonEmpty)
-        mergeRewrite(spark, dir, key, matchedIds, deletes = false) { (touched, _) =>
-          val joined = touched.alias("t").join(
-            broadcast(updates.columns.foldLeft(updates)((d, c) =>
-              if (c == key) d else d.withColumnRenamed(c, s"__u_$c")).alias("u")),
-            col(s"t.$key") === col(s"u.$key"), "left")
-          val upd = updates.columns.filterNot(_ == key).foldLeft(joined) { (d, c) =>
-            d.withColumn(c, coalesce(col(s"__u_$c"), col(c)))
-          }
-          upd.select(touched.columns.toIndexedSeq.map(c =>
-            if (c == key) col(s"t.$key").as(key) else col(c)): _*)
-        }
-      else (0, manifest(spark, dir).count().toInt)
-    if (!inserts.isEmpty) {
-      inserts.coalesce(1).write.mode("append").parquet(dir)
-      // stat the appended file into the manifest
-      val m = manifest(spark, dir)
-      val rows = m.collect().toSeq
-      val known = rows.map(r => baseName(r.getAs[String]("file"))).toSet
-      val added = partFiles(fsFor(spark, dir), dir).filterNot(st => known(st.getPath.getName))
-      writeManifest(spark, dir, m.schema, rows ++ statNew(spark, added, inserts.schema, key))
-    }
-    r
-  }
-
   /** Whether any of the sorted `ids` lies in [lo, hi]. Non-integral bounds
     * truncate toward zero, which only widens the range for integer ids:
     * a false hit rewrites one more file, a miss would lose the write. */
@@ -285,11 +269,15 @@ object StatsStore {
       ids: Seq[Long], deletes: Boolean)(
       transform: (DataFrame, Column) => DataFrame): (Int, Int) = {
     require(ids.nonEmpty, "merge needs a non-empty affected-id set")
-    val m = manifest(spark, dir)
+    val m = manifest(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"$dir has no stats manifest"))
+    val ks = keysOf(m)
+    val i = ks.indexOf(key)
+    require(i >= 0, s"the manifest of $dir covers ${ks.mkString(", ")}, not $key")
     val rows = m.collect().toSeq
     val sortedIds = ids.distinct.sorted.toArray
     val (hitRows, keep) = rows.partition(r =>
-      anyIn(sortedIds, r.getAs[Any]("kmin"), r.getAs[Any]("kmax")))
+      anyIn(sortedIds, r.getAs[Row]("min").get(i), r.getAs[Row]("max").get(i)))
     val hits = hitRows.map(_.getAs[String]("file")).sorted
     val total = rows.length
     val rowsBefore = rows.map(_.getAs[Long]("cnt")).sum
@@ -310,7 +298,7 @@ object StatsStore {
     // are statted
     val keepNames = keep.map(r => baseName(r.getAs[String]("file"))).toSet
     val added = partFiles(fs, dir).filterNot(st => keepNames(st.getPath.getName))
-    val next = keep ++ statNew(spark, added, staged.schema, key)
+    val next = keep ++ statNew(spark, added, staged.schema, ks)
     // a staged partition that filtered to zero rows still writes an empty
     // part file; it carries no data and no manifest row — remove it so the
     // manifest-vs-directory guard below stays meaningful

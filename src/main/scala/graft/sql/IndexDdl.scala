@@ -62,9 +62,9 @@ object IndexDdl {
     } else if (p.kw("DROP")) {
       p.expectKw("INDEX")
       val ix = cat.dropIndex(indexName(p))
-      // scans stop consulting the manifest; the clustered layout is
-      // harmless to keep (it's just well-sorted data)
-      StatsStore.dropManifest(spark, storagePath(dir, cat, ix))
+      // the manifest goes when this index built it; the clustered layout
+      // is harmless to keep (it's just well-sorted data)
+      StatsStore.dropManifest(spark, storagePath(dir, cat, ix), ix.cols)
       row(ix, "DROPPED")
     } else if (p.kw("REBUILD")) {
       p.expectKw("INDEX")
@@ -114,13 +114,13 @@ object IndexDdl {
         throw new IllegalArgumentException(
           s"UNIQUE index ${ix.name}: duplicate key ${dup(0).toSeq.init.mkString(",")}")
     }
-    // r11: no checkpoint needed — StatsStore publishes via staging + swap,
-    // so the clustered rewrite reads the still-intact source files
-    val snap = df
+    // `df` reads `path` itself without a checkpoint: StatsStore writes the
+    // clustered copy to a staging directory and swaps it in, so the
+    // rewrite reads the still-intact source files
     val numFiles = math.max(8, df.inputFiles.length)
     ix.cols match {
-      case Seq(k)    => StatsStore.write(snap, path, k, numFiles)
-      case Seq(a, b) => StatsStore.writeZOrdered(snap, path, a, b, numFiles)
+      case Seq(k)    => StatsStore.write(df, path, k, numFiles)
+      case Seq(a, b) => StatsStore.writeZOrdered(df, path, a, b, numFiles)
       case o => throw new IllegalArgumentException(s"unsupported index arity ${o.length}")
     }
   }

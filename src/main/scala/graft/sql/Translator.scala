@@ -1275,8 +1275,7 @@ object Translator {
     def table(name: String) = {
       val path = cat(name).path.getOrElse(
         throw TranslateException(s"type $name has no storage")) (dir)
-      val tab = new graft.sources.MutableTable(spark, path, cat.manifestKey(name),
-        recordChanges = false)
+      val tab = new graft.sources.MutableTable(spark, path)
       // catalog-registered triggers (CREATE TRIGGER …): the action SQL runs
       // through the statement front-end when the event fires. A depth guard
       // turns a trigger cascade loop into an error instead of a hang.

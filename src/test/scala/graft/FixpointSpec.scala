@@ -2,8 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -68,21 +66,6 @@ class FixpointSpec extends AnyFunSuite {
     assert(rows == bfs(0, 64))
   }
 
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      ListenerBusDrain(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("a 5-round pageRank and a depth-3 traverse run a bounded number of Spark jobs") {
     val vs = g.vertices.select("id")
     val es = g.edges.select("src", "dst")
@@ -90,8 +73,8 @@ class FixpointSpec extends AnyFunSuite {
     // compile the code paths first, so the counts measure the loops alone
     GraphAlgos.pageRank(vs, es, 5, 0.15).collect()
     g.traverse(seeds, 3).collect()
-    val pr = jobsDuring(GraphAlgos.pageRank(vs, es, 5, 0.15).collect())
-    val tr = jobsDuring(g.traverse(seeds, 3).collect())
+    val pr = jobsDuring(GraphAlgos.pageRank(vs, es, 5, 0.15).collect())._2
+    val tr = jobsDuring(g.traverse(seeds, 3).collect())._2
     // the counts of the hand-written loops these replaced: pinning every
     // pageRank round, for one, would run more
     assert(pr <= 18, s"pageRank: $pr Spark jobs")

@@ -1,11 +1,28 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSession {
   lazy val spark: SparkSession = GraftSession.build("local[4]", "4", "graft-test")
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the Spark jobs started while it ran. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerBusDrain(spark.sparkContext)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 /** Smoke: every declared query runs end-to-end at sf0.001 without

@@ -2,13 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{MutableTable, Publish, StatsStore}
+import graft.sources.{Backup, MutableTable, Publish, StatsStore}
 import graft.sql.GraftSql
 
 /** The write path's table-state contract: a read sees the state (schema
@@ -80,21 +78,6 @@ class WritePathSpec extends AnyFunSuite {
     assert(cached.getMessage == plain.getMessage)
   }
 
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      ListenerBusDrain(spark.sparkContext)
-      (r, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("a 20-key pruned UPDATE on a 16-file manifest table runs a bounded number of Spark jobs") {
     val (dir, t) = manifestTable("wp_jobs")
     // the reads before a write have seen the table and its manifest
@@ -106,13 +89,13 @@ class WritePathSpec extends AnyFunSuite {
     assertRangeScanAgrees(dir, 5000)
   }
 
-  /** A 2,000-row type `tdml` on a fresh directory, an SQL statement
-    * runner on it, and a check that an index-pruned SELECT over `k` in
-    * [lo, hi] agrees with a plain filter over the files. */
-  private def sqlTable(name: String): (String, String => Unit, (Long, Long) => Unit,
-      graft.schema.TypeCatalog) = {
+  /** A 2,000-row type `tdml` (columns `k` and `v`) on a fresh directory,
+    * an SQL statement runner on it, and a check that an index-pruned
+    * SELECT over `k` in [lo, hi] agrees with a plain filter over the files. */
+  private def sqlTable(name: String, v: Column = col("id") % 7): (String, String => Unit,
+      (Long, Long) => Unit, graft.schema.TypeCatalog) = {
     val dir = freshDir(name)
-    spark.range(2000).select(col("id").as("k"), (col("id") % 7).as("v")).write.parquet(dir)
+    spark.range(2000).select(col("id").as("k"), v.as("v")).write.parquet(dir)
     val cat = graft.schema.TypeCatalog.fresh()
     cat.createType("tdml", "DOCUMENT", path = Some(_ => dir))
     def sql(text: String): Unit = { GraftSql.statement(spark, sfDir, text, cat).collect(); () }
@@ -151,5 +134,57 @@ class WritePathSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() === 2000L)
     agrees(0, 99)
     agrees(1900, 5010)
+  }
+
+  test("an UPDATE over the pruned-key limit on a manifest table runs a bounded number of Spark jobs") {
+    val (dir, t) = manifestTable("wp_bigjobs")
+    // the reads before a write have seen the table and its manifest
+    assert(StatsStore.rangeScan(spark, dir, "k", 0, 99)._1.count() == 100)
+    val ((n, _, _), jobs) = jobsDuring(t.update(col("k") < 15000, Seq("v" -> (col("v") + 1000))))
+    assert(n == 15000)
+    assert(jobs <= 14, s"$jobs Spark jobs")
+    assertRangeScanAgrees(dir, 100)
+  }
+
+  /** `v` is a permutation of `k`, so files clustered on one of them span
+    * the whole range of the other. */
+  private val permuted = col("id") * 7919 % 2000
+
+  test("an index on a second column leaves an index-pruned SELECT on the first one correct") {
+    val (_, sql, agrees, _) = sqlTable("wp_second_index", permuted)
+    sql("CREATE INDEX ON tdml (k)")
+    sql("CREATE INDEX ON tdml (v)")
+    agrees(100, 199)
+  }
+
+  test("a Z-order index over a single-column index's key still serves its pruned SELECT") {
+    val (_, sql, agrees, _) = sqlTable("wp_range_then_z", permuted)
+    sql("CREATE INDEX ON tdml (k)")
+    sql("CREATE INDEX ON tdml (k, v)")
+    agrees(100, 199)
+  }
+
+  test("SQL DML on a Z-order-indexed type keeps its manifest in step with the files") {
+    val (dir, sql, agrees, _) = sqlTable("wp_zdml", permuted)
+    sql("CREATE INDEX ON tdml (k, v)")
+    sql("UPDATE tdml SET v = v + 1 WHERE k < 50")
+    val plain = spark.read.parquet(dir)
+    for ((key, lo, hi) <- Seq(("k", 0L, 99L), ("k", 100L, 199L), ("v", 100L, 199L))) {
+      val (pruned, read, total) = StatsStore.rangeScan(spark, dir, key, lo, hi)
+      val expected = plain.filter(col(key).between(lo, hi))
+      assert(pruned.exceptAll(expected).isEmpty && expected.exceptAll(pruned).isEmpty, s"$key in [$lo, $hi]")
+      assert(read < total, s"$key in [$lo, $hi]: read $read of $total files")
+    }
+    agrees(100, 199)
+  }
+
+  test("a restore from backup keeps an indexed type's manifest in step with the files") {
+    val (dir, sql, agrees, _) = sqlTable("wp_restore", permuted)
+    val backupDir = freshDir("wp_restore_backup")
+    Backup.backup(spark, Map("tdml" -> dir), backupDir)
+    sql("CREATE INDEX ON tdml (k)")
+    Backup.restore(spark, backupDir, Map("tdml" -> dir))
+    assert(spark.read.parquet(dir).count() === 2000L)
+    agrees(100, 199)
   }
 }
