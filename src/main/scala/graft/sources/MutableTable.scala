@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** DML semantics over a writable parquet table (SURVEY.md §2.11).
   *
@@ -50,19 +51,25 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
   // partial rewrite cannot evolve the schema of untouched files).
   private val MaxPrunedKeys = 10000
 
-  /** The manifest key and the affected keys when the pruned path applies,
-    * else None. The manifest's file ranges are matched against long ids,
-    * so the key is the first integral key the manifest describes. */
-  private def prunedKeys(affected: DataFrame): Option[(String, Seq[Long])] =
-    StatsStore.keys(spark, dir).find(k =>
-      affected.schema.find(_.name == k).exists(_.dataType match {
-        case LongType | IntegerType | ShortType | ByteType => true
-        case _ => false
-      })).flatMap { k =>
-      val ids = affected.select(col(k).cast("long")).distinct()
-        .limit(MaxPrunedKeys + 1).collect().map(_.getLong(0)).toIndexedSeq
-      if (ids.nonEmpty && ids.length <= MaxPrunedKeys) Some((k, ids)) else None
-    }
+  /** Pin `affected` lazily and materialize the pin in ONE job that also
+    * counts its rows and collects up to `MaxPrunedKeys + 1` distinct values
+    * of the manifest key: no separate pin, distinct or count job. The
+    * manifest's file ranges are matched against long ids, so the key is
+    * the first integral key the manifest describes. The pruned path
+    * applies when the rows hold between 1 and `MaxPrunedKeys` keys and no
+    * null key (a null key lies in no file's range). The pin holds the rows
+    * from before the swap, so the pre-image, the post-image derived from
+    * it, the change feed and the triggers all read them after it. */
+  private def preImage(affected: DataFrame): MutableTable.PreImage = {
+    val pin = affected.localCheckpoint(eager = false)
+    val key = StatsStore.keys(spark, dir).iterator
+      .map(k => (k, pin.schema.fieldNames.indexOf(k)))
+      .find { case (_, i) => i >= 0 && StatsStore.integral(pin.schema(i).dataType) }
+    val (n, ids) = MutableTable.countAndKeys(pin,
+      key.map { case (_, i) => (i, pin.schema(i).dataType) }, MaxPrunedKeys + 1)
+    MutableTable.PreImage(pin, n, for ((k, _) <- key; ks <- ids if ks.nonEmpty && ks.length <= MaxPrunedKeys)
+      yield (k, ks))
+  }
 
   // ---- change feed (trigger/CDF analog: reference event/ package
   // before/after create-update-delete listeners + Delta CDF shape).
@@ -125,14 +132,15 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
     * materialized before the overwrite (RETURN BEFORE | AFTER | COUNT). */
   def update(where: Column, sets: Seq[(String, Column)]): (Long, DataFrame, DataFrame) = {
     val cur = df
-    val before = cur.filter(where).localCheckpoint(eager = true)
-    // `after` derives only from the checkpointed pre-image, so it stays
-    // valid across the swap without a materialization of its own
+    val pre = preImage(cur.filter(where))
+    val before = pre.rows
+    // `after` derives only from the pinned pre-image, so it stays valid
+    // across the swap without a materialization of its own
     val after = sets.foldLeft(before)((d, s) => d.withColumn(s._1, s._2))
     fireBefore("update", before)
     emitChanges("update", before)
     val noNewCols = sets.forall(s => before.columns.contains(s._1))
-    (if (noNewCols) prunedKeys(before) else None) match {
+    (if (noNewCols) pre.pruned else None) match {
       case Some((k, ids)) =>
         StatsStore.mergeSet(spark, dir, k, ids, sets, rowCond = Some(where))
       case None =>
@@ -141,7 +149,7 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
         StatsStore.overwrite(untouched.unionByName(after, allowMissingColumns = true), dir)
     }
     fire("update", after)
-    (before.count(), before, after)
+    (pre.count, before, after)
   }
 
   /** UPSERT: update rows matching the equality `key`; when none match,
@@ -211,18 +219,18 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
   /** DELETE … WHERE; returns the deleted-row count (RETURN COUNT). */
   def delete(where: Column): Long = {
     val cur = df
-    val deleted = cur.filter(where).localCheckpoint(eager = true)
-    val n = deleted.count()
+    val pre = preImage(cur.filter(where))
+    val deleted = pre.rows
     fireBefore("delete", deleted)
     emitChanges("delete", deleted)
-    prunedKeys(deleted) match {
+    pre.pruned match {
       case Some((k, ids)) =>
         StatsStore.mergeDelete(spark, dir, k, ids, rowCond = Some(where))
       case None =>
         StatsStore.overwrite(cur.filter(!coalesce(where, lit(false))), dir)
     }
     fire("delete", deleted)
-    n
+    pre.count
   }
 
   /** MERGE INTO this USING source ON keys:
@@ -248,6 +256,38 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
 }
 
 object MutableTable {
+  /** The rows a mutation changes, pinned before the table is rewritten,
+    * their count, and the manifest key with the rows' keys when the pruned
+    * path applies. */
+  private final case class PreImage(rows: DataFrame, count: Long, pruned: Option[(String, Seq[Long])])
+
+  /** One job over the rows of `pin`: their count, and up to `cap` distinct
+    * values of the integral column at `key`, None when a value is null. */
+  private def countAndKeys(pin: DataFrame, key: Option[(Int, DataType)],
+      cap: Int): (Long, Option[Seq[Long]]) = {
+    val get: (InternalRow, Int) => Long = key.map(_._2) match {
+      case Some(LongType) => _.getLong(_)
+      case Some(IntegerType) => _.getInt(_)
+      case Some(ShortType) => _.getShort(_)
+      case _ => _.getByte(_)
+    }
+    val ordinal = key.map(_._1)
+    val parts = pin.queryExecution.toRdd.mapPartitions { rows =>
+      var n = 0L
+      var nulls = false
+      val ids = scala.collection.mutable.HashSet[Long]()
+      rows.foreach { r =>
+        n += 1
+        ordinal.foreach(i => if (r.isNullAt(i)) nulls = true else if (ids.size < cap) ids += get(r, i))
+      }
+      Iterator((n, nulls, ids.toArray))
+    }.collect()
+    val ids =
+      if (ordinal.isEmpty || parts.exists(_._2)) None
+      else Some(parts.iterator.flatMap(_._3).distinct.take(cap).toSeq)
+    (parts.map(_._1).sum, ids)
+  }
+
   /** Fresh writable copy of `source` at `dir` (TRUNCATE+INSERT FROM
     * SELECT), published through the one table rewrite. `keyCol` enables
     * the change feed. */
