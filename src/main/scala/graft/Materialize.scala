@@ -1,13 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.storage.StorageLevel
 
 /** Lineage truncation for every pin in graft: the iterative operators'
   * rounds (whose cadence [[graft.graph.Fixpoint]] sets, the one policy for
-  * when a loop pins and probes), loop-invariant edge relations, dedup
-  * signature reuse.
+  * when a loop pins and probes), loop-invariant edge relations, algorithm
+  * results, dedup signature reuse.
   *
   * A pin keeps a 20-round fixpoint from building a 20-deep plan and makes
   * shared subtrees run once. On `local[*]`, `localCheckpoint` is the right
@@ -16,34 +14,28 @@ import org.apache.spark.storage.StorageLevel
   * trade — executor-local, NON-replicated blocks mean one lost executor
   * kills the job, and the pinned lineage defeats dynamic allocation.
   *
-  * Policy: when a checkpoint directory is configured (`spark.checkpoint.dir`
-  * or `SparkContext.setCheckpointDir` — i.e. a deployment that cares about
-  * executor loss), use reliable `checkpoint` into it; otherwise fall back
-  * to `localCheckpoint`. Either way a lazy pin (`eager = false`) persists
-  * its rows on first computation, so every reader before and after the
-  * checkpoint shares one computation. Local-mode behavior (and the bench)
-  * is unchanged.
+  * Policy:
+  *  - An eager pin uses reliable `checkpoint` when a checkpoint directory
+  *    is configured (`spark.checkpoint.dir` or `SparkContext.setCheckpointDir`,
+  *    a deployment that cares about executor loss), and `localCheckpoint`
+  *    otherwise.
+  *  - A lazy pin (`eager = false`, a loop round) is always an
+  *    executor-local `localCheckpoint`, which persists its rows on first
+  *    computation, so every reader shares one computation. A loop pins
+  *    every round, and a reliable checkpoint per round would fill the
+  *    checkpoint directory with files nothing deletes. So loop rounds
+  *    carry the executor-loss trade above even with a checkpoint dir set.
   */
 object Materialize {
 
   /** Materialize (or, with eager=false, mark-for-materialization) `df`,
-    * truncating lineage via the configured checkpoint policy. */
-  def once(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      sc.getConf.getOption("spark.checkpoint.dir").foreach(sc.setCheckpointDir)
-    if (sc.getCheckpointDir.isEmpty) df.localCheckpoint(eager)
+    * truncating lineage via the checkpoint policy above. */
+  def once(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (!eager) df.localCheckpoint(eager = false)
     else {
-      val pinned = df.checkpoint(eager)
-      // A lazy reliable checkpoint only marks its RDD: without a persist,
-      // each reader in the job that first computes it recomputes the
-      // source, and so does the checkpoint write after that job. Lazy
-      // localCheckpoint persists; do the same here.
-      if (!eager) pinned.queryExecution.logical.foreach {
-        case r: LogicalRDD => r.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        case _ =>
-      }
-      pinned
+      val sc = df.sparkSession.sparkContext
+      if (sc.getCheckpointDir.isEmpty)
+        sc.getConf.getOption("spark.checkpoint.dir").foreach(sc.setCheckpointDir)
+      if (sc.getCheckpointDir.isEmpty) df.localCheckpoint() else df.checkpoint()
     }
-  }
 }

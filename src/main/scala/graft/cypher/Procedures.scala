@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * DataFrame; schema introspection procedures derive from the graph's
   * DataFrames (labels/types are one distinct-aggregate over the data,
   * property keys come from the schema — no scan), and the algo procedures
-  * delegate to the deterministic [[GraphAlgos]] DataFrame programs.
+  * delegate to [[GraphAlgos]]' PageRank and directed connected components.
   */
 object Procedures {
 

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions.lit
 
 import graft.Materialize
 
-/** The one loop behind graft's iterative operators: PageRank, connected
-  * components, label propagation, walk counts, SSSP, A*, BFS traversal,
-  * TRAVERSE DEPTH_FIRST, Gremlin `repeat` and Cypher variable-length paths.
+/** The one loop behind graft's iterative DataFrame operators: label
+  * propagation, walk counts, SSSP, A*, BFS traversal, TRAVERSE
+  * DEPTH_FIRST, Gremlin `repeat` and Cypher variable-length paths
+  * (PageRank and connected components run on GraphX, see [[GraphAlgos]]).
   * A round is a step over the previous round's output (Pregelix's
   * superstep: messages ⋈ vertices → group-by); the caller writes the step,
   * and the loop, its pins and its probes live here.
@@ -23,8 +24,9 @@ import graft.Materialize
   *    materializes it: each round plans over materialized rows with known
   *    statistics, and AQE keeps broadcasting the small per-round aggregates
   *    (batching two rounds per probe, with the round between them pinned
-  *    but not yet materialized, planned sort-merge joins instead and ran
-  *    dedup clustering 2.33 → 3.0 s).
+  *    but not yet materialized, planned sort-merge joins instead: dedup
+  *    clustering, when its components ran as an `Until` loop, went
+  *    2.33 → 3.0 s).
   *  - A fixed count ([[Rounds]]) never probes and pins lazily. A step that
   *    reads the previous output twice (it feeds both the next round and the
   *    accumulated result, or the step has the form `dist ∪ relax(dist)`)
@@ -47,8 +49,8 @@ object Fixpoint {
   final case class Rounds(bound: Int, readsTwice: Boolean) extends Stop
   /** Until no row of a round's output is `live`, at most `bound` rounds.
     * Every row is live by default, so the loop runs until the frontier is
-    * empty; connected components passes `comp =!= prev`, so it runs until
-    * no row changed. */
+    * empty; Gremlin `repeat().until(cond)` passes `!cond`, so it runs until
+    * every traverser of a round satisfies `cond`. */
   final case class Until(bound: Int, live: Column = lit(true)) extends Stop
 
   /** What a step sees: the round number (from 1), the previous round's

@@ -1,73 +1,99 @@
 package graft.graph
 
+import scala.collection.mutable
+
+import org.apache.spark.graphx.{Edge, EdgeDirection, Graph, Pregel}
+import org.apache.spark.graphx.lib.PageRank
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.Materialize
 
-/** Distributed graph algorithms as iterative DataFrame programs, the
-  * Spark-native re-expression of the reference's OLAP algorithm suite
-  * (graph/olap/GraphAlgorithms.java — PageRank :164, connected components
-  * :309, Dijkstra single-source :981, label propagation :1118, local
-  * clustering coefficient :1252).
+/** Distributed graph algorithms, the Spark-native re-expression of the
+  * reference's OLAP algorithm suite (graph/olap/GraphAlgorithms.java —
+  * PageRank :164, connected components :309, Dijkstra single-source :981,
+  * label propagation :1118, local clustering coefficient :1252).
   *
-  * Each iteration is one join + one aggregation — plain shuffles that
-  * partition by vertex id at any scale — run as a [[Fixpoint]] step, whose
-  * pin policy keeps a 20-iteration run from building a 20-deep plan.
-  * GraphX remains the scale path for long-running fixpoints (see
-  * PropertyGraph.toGraphX); these explicit loops exist where the reference
-  * pins exact semantics a DuckDB oracle can replay (deterministic
-  * tie-breaks, fixed iteration counts).
+  * PageRank and connected components run on GraphX: a superstep ships
+  * only the messages between vertex and edge partitions that stay put
+  * (Pregelix's superstep), where a DataFrame round re-shuffles vertices,
+  * messages and edges, and measured about twice as slow. They are the
+  * only callers of GraphX besides [[PropertyGraph.toGraphX]]. The other
+  * algorithms are iterative DataFrame programs, each iteration one join +
+  * one aggregation run as a [[Fixpoint]] step, whose pin policy keeps a
+  * 20-iteration run from building a 20-deep plan; they pin exact
+  * semantics a DuckDB oracle can replay (deterministic tie-breaks, fixed
+  * iteration counts).
   */
 object GraphAlgos {
-  import Fixpoint.{Rounds, Until}
+  import Fixpoint.Rounds
 
-  /** Static PageRank, GraphX formulation (rank0 = 1.0; rank' = reset +
-    * (1−reset)·Σ rank/outdeg over in-edges), fixed iteration count.
-    * `edges` = (src, dst) directed. Reference GraphAlgorithms.java:164.
-    * The degree-annotated edge relation is loop-invariant: persisted once,
-    * reused by every iteration, released after the final rank (an eager
-    * localCheckpoint) is materialized. */
+  /** Static PageRank, GraphX's formulation (rank0 = 1.0; rank' = reset +
+    * (1−reset)·Σ rank/outdeg over in-edges), `iters` rounds, ranks not
+    * rescaled. `edges` = (src, dst) directed; duplicate edges count twice.
+    * An edge out of a non-vertex is dropped, an edge into one still counts
+    * in its source's out-degree, and only `vertices`' ids get a row.
+    * Reference GraphAlgorithms.java:164. */
   def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int, reset: Double): DataFrame = {
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // Eager localCheckpoint, NOT persist(): a cached plan is planned with
-    // AQE disabled (canChangeCachedPlanOutputPartitioning=false), so a
-    // derived edge relation (e.g. a self-join) would lose its runtime
-    // broadcast/coalesce — measured 4-25x slower. The checkpoint runs one
-    // AQE-planned job and iterations reuse the materialized blocks;
-    // ContextCleaner reclaims them once the result drops the reference.
-    val e = Materialize.once(edges.join(outDeg, Seq("src")))
-    val rank = Fixpoint(vertices.select(col("id"), lit(1.0).as("rank")),
-        Rounds(iters, readsTwice = false)) { r =>
-      val msgs = e.join(r.prev.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") / col("outdeg")).as("msum"))
-      vertices.select(col("id"))
-        .join(msgs, Seq("id"), "left_outer")
-        .select(col("id"),
-          (lit(reset) + lit(1.0 - reset) * coalesce(col("msum"), lit(0.0))).as("rank"))
-    }
-    Materialize.once(rank.out)
+    val (g0, sources) = graph(vertices, edges)
+    val g = g0.subgraph(epred = _.srcAttr)
+    val ranks = PageRank.runWithOptions(g, iters, reset, None, normalized = false)
+    val t = vertices.schema("id").dataType
+    val out = Materialize.once(vertices.sparkSession
+      .createDataFrame(ranks.vertices.innerJoin(g.vertices.filter(_._2))((_, r, _) => r))
+      .select(col("_1").cast(t).as("id"), col("_2").as("rank")))
+    release(ranks, sources)
+    out
   }
 
-  /** Connected components by iterative min-id propagation (HashMin), the
-    * set-oriented form of GraphAlgorithms.java:309. `edges` must contain
-    * both directions for undirected graphs. Converges in O(diameter). */
+  /** Connected components by min-id propagation along out-edges (HashMin),
+    * the set-oriented form of GraphAlgorithms.java:309: at most `maxIters`
+    * rounds, each lowering a vertex's `comp` to the least `comp` of its
+    * in-neighbours. Edges with an endpoint outside `vertices` are dropped.
+    * `edges` must contain both directions for undirected graphs; GraphX's
+    * own `ConnectedComponents` messages both ways, which would turn a
+    * directed graph's answer into weak components. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIters: Int): DataFrame = {
-    val e = Materialize.once(edges) // see pageRank: AQE-planned once, not persist()
-    // each round carries the previous label as `prev`, so "no row
-    // changed" is a filter over the round's pinned rows, not a self-join
-    Fixpoint(vertices.select(col("id"), col("id").as("comp")),
-        Until(maxIters, col("comp") =!= col("prev"))) { r =>
-      val comp = r.prev.select("id", "comp")
-      val nbrMin = e.join(comp.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("comp")).as("nbr"))
-      comp.join(nbrMin, Seq("id"), "left_outer")
-        .select(col("id"), col("comp").as("prev"),
-          least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"))
-    }.out.select("id", "comp")
+    val (g0, sources) = graph(vertices, edges)
+    val g = g0.subgraph(t => t.srcAttr && t.dstAttr, (_, real) => real)
+    val cc = Pregel(g.mapVertices((id, _) => id), Long.MaxValue, maxIters, EdgeDirection.Out)(
+      (_, comp, msg) => math.min(comp, msg),
+      t => if (t.srcAttr < t.dstAttr) Iterator(t.dstId -> t.srcAttr) else Iterator.empty,
+      math.min)
+    val t = vertices.schema("id").dataType
+    val out = Materialize.once(vertices.sparkSession.createDataFrame(cc.vertices)
+      .select(col("_1").cast(t).as("id"), col("_2").cast(t).as("comp")))
+    release(cc, sources)
+    out
+  }
+
+  /** `vertices`' ids flagged true and `edges` as a GraphX graph, and the
+    * two RDDs it is built from. An edge endpoint outside `vertices` becomes
+    * a vertex flagged false. Ids are cast to long. The inputs' partitioning
+    * is kept, for the reason [[PropertyGraph.toGraphX]] gives. */
+  private def graph(vertices: DataFrame, edges: DataFrame): (Graph[Boolean, Unit], Seq[RDD[_]]) = {
+    val vs = vertices.select(col("id").cast("long")).rdd.map(r => (r.getLong(0), true))
+    val es = edges.select(col("src").cast("long"), col("dst").cast("long")).rdd
+      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
+    (Graph(vs, es, defaultVertexAttr = false), Seq(vs, es))
+  }
+
+  /** Unpersists every RDD GraphX cached on the way from `sources` to `g`;
+    * run it once the result is pinned. The walk stops at `sources`, so the
+    * caller's own cached RDDs and pins stay. */
+  private def release(g: Graph[_, _], sources: Seq[RDD[_]]): Unit = {
+    val seen = mutable.Set(sources.map(_.id): _*)
+    val todo = mutable.Stack[RDD[_]](g.vertices, g.edges)
+    while (todo.nonEmpty) {
+      val rdd = todo.pop()
+      if (seen.add(rdd.id)) {
+        if (rdd.getStorageLevel != StorageLevel.NONE) rdd.unpersist(blocking = false)
+        rdd.dependencies.foreach(d => todo.push(d.rdd))
+      }
+    }
   }
 
   /** Synchronous label propagation with a deterministic tie-break (max
@@ -75,9 +101,12 @@ object GraphAlgos {
     * GraphAlgorithms.java:1118 with the tie order pinned so every engine
     * replays the same communities. `edges` both directions. */
   def labelPropagation(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    val e = Materialize.once(edges) // loop-invariant (often a derived join —
-    // e.g. a co-purchase self-join): one AQE-planned materialization instead
-    // of `iters` recomputes; see pageRank for why persist() is wrong here
+    // The edges are loop-invariant (often a derived join such as the
+    // co-purchase self-join): one AQE-planned materialization instead of
+    // `iters` recomputes. Not persist(): a cached plan is planned with AQE
+    // off, and a derived edge relation lost its runtime broadcast and
+    // coalesce, measured 4-25x slower.
+    val e = Materialize.once(edges)
     val byCount = Window.partitionBy(col("id")).orderBy(col("c").desc, col("lab"))
     // A round reads the previous labels twice, in the messages and in the
     // update, so every round before the last is pinned. The pinned rows

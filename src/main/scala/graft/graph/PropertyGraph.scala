@@ -73,10 +73,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     }.out
   }
 
-  /** GraphX view for whole-graph analytics (PageRank, components,
-    * triangles — reference graph/olap/GraphAlgorithms.java:164,309,1263).
-    * The reference builds a columnar CSR snapshot (CSRBuilder.java:59)
-    * for this; GraphX's internal edge partitions play that role here. */
+  /** GraphX view of the graph, for running GraphX's own library
+    * algorithms on it (reference graph/olap/GraphAlgorithms.java). graft's
+    * PageRank and connected components build their graph in
+    * [[GraphAlgos]], over ids alone. The reference builds a columnar CSR
+    * snapshot (CSRBuilder.java:59) for this; GraphX's internal edge
+    * partitions play that role here. */
   def toGraphX: GXGraph[String, String] = {
     // The inherited scan/shuffle layout is kept: sizing these RDDs from an
     // edge COUNT (localCheckpoint + count, then coalesce to ~n/target

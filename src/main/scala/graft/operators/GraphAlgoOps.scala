@@ -8,14 +8,14 @@ import org.apache.spark.sql.functions._
 
 /** Whole-graph algorithms with exact DuckDB oracles (SURVEY.md §2.8 tail).
   *
-  * The fixed-point algorithms run as iterative DataFrame programs with
-  * pinned iteration counts and deterministic tie-breaks ([[GraphAlgos]]),
-  * so the oracle can replay them: PageRank/label-propagation oracles are
-  * the same recurrence UNROLLED into N CTE levels (generated here), CC is
-  * min-reachability, SSSP is bounded-depth path enumeration. GraphX
-  * remains the unbounded-fixpoint scale path (q_graph_pagerank /
-  * q_graph_cc in [[GraphOps]]); these entries pin the semantics the
-  * verdict flagged as untestable there.
+  * The fixed-point algorithms ([[GraphAlgos]]: PageRank and CC on GraphX,
+  * the rest as DataFrame loops) run pinned iteration counts and
+  * deterministic tie-breaks, so the oracle can replay them:
+  * PageRank/label-propagation oracles are the same recurrence UNROLLED
+  * into N CTE levels (generated here), CC is min-reachability, SSSP is
+  * bounded-depth path enumeration. q_graph_pagerank / q_graph_cc in
+  * [[GraphOps]] run the same PageRank and CC on the larger TPC-H graphs;
+  * these entries pin their semantics on small graphs.
   *
   * Test graphs: the nation chain graph (nations of a region chained in
   * key order — sparse, diameter ≈ region size, exercises propagation) and

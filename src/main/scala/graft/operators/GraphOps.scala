@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.graph.PropertyGraph
+import graft.graph.{GraphAlgos, PropertyGraph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *   - shortestPath (function/sql/graph/SQLFunctionShortestPath.java,
   *     GraphAlgorithms.java:411) → BFS first-reach depth.
   *   - PageRank / CC / triangles (graph/olap/GraphAlgorithms.java:164,
-  *     309, 1263-1403) → GraphX for the iterative ones; triangles as a
-  *     canonical-orientation 3-way join (PartitionedTriangleOp analog),
-  *     which distributes as ordinary hash joins at 100 TB.
+  *     309, 1263-1403) → GraphAlgos' GraphX PageRank and CC for the
+  *     iterative ones; triangles as a canonical-orientation 3-way join
+  *     (PartitionedTriangleOp analog), which distributes as ordinary hash
+  *     joins at 100 TB.
   */
 object GraphOps {
 
@@ -201,12 +202,11 @@ object GraphOps {
         .agg(coalesce(sum(col("c")), lit(0L)).as("n_triangles"))
     },
 
-    // ---- PageRank (GraphX; reference GraphAlgorithms.java:164).
-    //      Oracled by the unrolled recurrence over the same fromTpch
-    //      graph: rank0 = 1.0, rank_{i+1} = 0.15 + 0.85 * sum(in-rank /
-    //      outdeg), then the final rank-sum normalization GraphX applies
-    //      (ranks scaled to sum to |V|, PageRank.normalizeRankSum /
-    //      SPARK-18847). ----
+    // ---- PageRank (GraphAlgos on GraphX; reference
+    //      GraphAlgorithms.java:164). Oracled by the unrolled recurrence
+    //      over the same fromTpch graph: rank0 = 1.0, rank_{i+1} = 0.15 +
+    //      0.85 * sum(in-rank / outdeg), then ranks scaled to sum to |V|
+    //      (GraphX's PageRank.normalizeRankSum, SPARK-18847). ----
     Q("q_graph_pagerank", {
       // MATERIALIZED: each pr_i references pr_{i-1} twice; DuckDB inlines
       // CTEs by default, which would re-evaluate the chain 2^10 times
@@ -234,22 +234,23 @@ object GraphOps {
          |FROM pr10, norm
          |ORDER BY rank DESC, vtype, key LIMIT 20""".stripMargin
     }) { (s, d) =>
-      val g = PropertyGraph.fromTpch(s, d).toGraphX
-      val ranks = org.apache.spark.graphx.lib.PageRank.run(g, numIter = 10, resetProb = 0.15)
-      val df = s.createDataFrame(ranks.vertices.map { case (id, r) => (id, r) })
-        .toDF("id", "rank")
-      df.select(expr("id div 8").as("key"), expr("id % 8").as("vtype"),
-          round(col("rank"), 4).as("rank"))
+      val g = PropertyGraph.fromTpch(s, d)
+      val ranks = GraphAlgos.pageRank(g.vertices.select("id"), g.edges.select("src", "dst"),
+        iters = 10, reset = 0.15)
+      ranks.crossJoin(ranks.agg(sum(col("rank")).as("s"), count(lit(1)).as("n")))
+        .select(expr("id div 8").as("key"), expr("id % 8").as("vtype"),
+          round(col("rank") * col("n") / col("s"), 4).as("rank"))
         .orderBy(col("rank").desc, col("vtype"), col("key"))
         .limit(20)
     },
 
-    // ---- connected components (GraphX; GraphAlgorithms.java:309).
-    //      Oracled by min-label propagation unrolled past the graph's
-    //      diameter (comp0 = id; comp_{k+1}(v) = min over v ∪ N(v) of
-    //      comp_k): the co-purchase graph converges in 3 rounds at
-    //      sf0.01 (measured), 6 rounds carries margin. Same recurrence
-    //      the q_dedup_clusters oracle replays on the dup graph. ----
+    // ---- connected components (GraphAlgos on GraphX;
+    //      GraphAlgorithms.java:309). Oracled by min-label propagation
+    //      unrolled past the graph's diameter (comp0 = id; comp_{k+1}(v) =
+    //      min over v ∪ N(v) of comp_k): the co-purchase graph converges
+    //      in 3 rounds at sf0.01 (measured), 6 rounds carries margin. Same
+    //      recurrence the q_dedup_clusters oracle replays on the dup
+    //      graph. ----
     Q("q_graph_cc", {
       // MATERIALIZED for the same reason as the PageRank oracle: each
       // c_i references c_{i-1} twice; inlining would re-evaluate 2^6×.
@@ -274,22 +275,25 @@ object GraphOps {
          |    AS unconverged
          |FROM (SELECT comp, count(*) AS sz FROM c6 GROUP BY comp)""".stripMargin
     }) { (s, d) =>
-      val co = PropertyGraph.coPurchase(s, d)
-      val parts = Tables.part(s, d).select(col("p_partkey").as("id"), lit("part").as("label"))
-      val undirected = co.select(col("a").as("src"), col("b").as("dst"))
-        .withColumn("label", lit("co"))
-      val g = PropertyGraph(parts, undirected).toGraphX
-      val cc = g.connectedComponents().vertices
-      val df = s.createDataFrame(cc.map { case (id, comp) => (id, comp) }).toDF("id", "comp")
-      // `unconverged` self-diagnoses the oracle's fixed 6-round unroll: if
-      // a regenerated graph ever needs >6 min-label rounds (diameter
-      // measured 3 at sf0.01), the oracle's c5≠c6 count goes nonzero and
-      // the mismatch names itself instead of surfacing as an opaque hash
-      // diff. GraphX CC always runs to convergence, so the engine side is
-      // a constant 0.
-      df.groupBy(col("comp")).agg(count(lit(1)).as("sz"))
+      // the co-purchase pairs feed the components and the convergence check
+      val co = graft.Materialize.once(PropertyGraph.coPurchase(s, d))
+      val both = co.select(col("a").as("src"), col("b").as("dst"))
+        .union(co.select(col("b").as("src"), col("a").as("dst")))
+      val cc = GraphAlgos.connectedComponents(
+        Tables.part(s, d).select(col("p_partkey").as("id")), both, maxIters = 6)
+      // `unconverged` self-diagnoses the 6-round bound both sides share:
+      // the vertices a 7th round would lower, the engine-side twin of the
+      // oracle's c5≠c6 count. If a regenerated graph ever needs more
+      // rounds (diameter measured 3 at sf0.01), the mismatch names itself
+      // instead of surfacing as an opaque hash diff.
+      val unconverged = both
+        .join(cc.select(col("id").as("src"), col("comp").as("from")), "src")
+        .join(cc.select(col("id").as("dst"), col("comp").as("to")), "dst")
+        .filter(col("from") < col("to"))
+        .agg(countDistinct(col("dst")).as("unconverged"))
+      cc.groupBy(col("comp")).agg(count(lit(1)).as("sz"))
         .agg(count(lit(1)).as("n_components"), max(col("sz")).as("largest"))
-        .withColumn("unconverged", lit(0L))
+        .crossJoin(unconverged)
     }
   )
 }

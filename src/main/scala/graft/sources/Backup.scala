@@ -14,17 +14,24 @@ import org.apache.spark.sql.SparkSession
   */
 object Backup {
 
+  /** The row-count manifest's directory name inside a backup. Spark's
+    * file index hides names that start with `_` or `.`. An unquoted
+    * table name has no `.`, and [[backup]] refuses a quoted one that
+    * takes this name. */
+  val ManifestName = "backup.manifest"
+
   /** Snapshot `tables` (name → dir) into `backupDir/<name>`, with a
-    * manifest at `backupDir/_manifest`. */
+    * manifest at `backupDir/`[[ManifestName]]. */
   def backup(spark: SparkSession, tables: Map[String, String], backupDir: String): Unit = {
     import spark.implicits._
+    require(!tables.contains(ManifestName), s"a table named $ManifestName cannot be backed up")
     val counts = tables.toSeq.sorted.map { case (name, dir) =>
       val df = spark.read.parquet(dir)
       df.write.mode("overwrite").parquet(s"$backupDir/$name")
       (name, df.count())
     }
     counts.toDF("table", "rows").coalesce(1)
-      .write.mode("overwrite").parquet(s"$backupDir/_manifest")
+      .write.mode("overwrite").parquet(s"$backupDir/$ManifestName")
   }
 
   /** Filesystem-level snapshot of table directories — the TRANSACTION
@@ -81,7 +88,7 @@ object Backup {
 
   /** The backup's manifest: (table, rows). */
   def manifest(spark: SparkSession, backupDir: String) =
-    spark.read.parquet(s"$backupDir/_manifest")
+    spark.read.parquet(s"$backupDir/$ManifestName")
 
   /** Restore tables from `backupDir` into `targets` (name → dir),
     * verifying each snapshot's row count against the backup manifest

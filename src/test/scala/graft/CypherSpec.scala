@@ -139,6 +139,17 @@ class CypherSpec extends AnyFunSuite {
     }
   }
 
+  test("CALL algo.cc propagates the least id along edge direction, not weak components") {
+    import spark.implicits._
+    // 1 -> 2 <- 3 and 5 -> 4 -> 6: weakly, {1, 2, 3} and {4, 5, 6}
+    val g = PropertyGraph((1L to 6L).map(i => (i, "n", i)).toDF("id", "label", "key"),
+      Seq((1L, 2L), (3L, 2L), (5L, 4L), (4L, 6L)).map { case (a, b) => (a, b, "r") }
+        .toDF("src", "dst", "label"))
+    val comps = Cypher.query(g, "CALL algo.cc(10) YIELD id, comp RETURN id, comp ORDER BY id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(comps == Seq(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 5L, 6L -> 4L))
+  }
+
   test("path functions resolve statically on named plain paths") {
     val g = PropertyGraph.fromTpch(spark, sfDir)
     val row = Cypher.query(g,

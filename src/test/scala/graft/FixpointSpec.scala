@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.{GraphAlgos, PropertyGraph}
 
 /** The iterative operators' loop forms checked against a plain-Scala BFS on
-  * a small directed chain-plus-branch graph, and a bound on the Spark jobs
-  * two fixed-round loops run. */
+  * a small directed chain-plus-branch graph, PageRank against its plain
+  * recurrence, and bounds on the Spark jobs the graph algorithms run. */
 class FixpointSpec extends AnyFunSuite {
   import TestSession._
   import spark.implicits._
@@ -23,6 +23,9 @@ class FixpointSpec extends AnyFunSuite {
     PropertyGraph(ids.map(i => (i, "n", i)).toDF("id", "label", "key"),
       edgeList.map { case (a, b) => (a, b, "next") }.toDF("src", "dst", "label"))
   }
+
+  private def cached(ids: collection.Set[Int]): String =
+    ids.toSeq.sorted.flatMap(spark.sparkContext.getPersistentRDDs.get).mkString("; ")
 
   /** Vertex -> first reach depth from `s`, up to `maxDepth` hops. */
   private def bfs(s: Long, maxDepth: Int): Map[Long, Int] = {
@@ -75,9 +78,46 @@ class FixpointSpec extends AnyFunSuite {
     g.traverse(seeds, 3).collect()
     val pr = jobsDuring(GraphAlgos.pageRank(vs, es, 5, 0.15).collect())._2
     val tr = jobsDuring(g.traverse(seeds, 3).collect())._2
-    // the counts of the hand-written loops these replaced: pinning every
-    // pageRank round, for one, would run more
-    assert(pr <= 18, s"pageRank: $pr Spark jobs")
+    // pageRank's GraphX supersteps, as measured (its DataFrame loop ran
+    // 18); the traverse count is that of the hand-written loop it replaced
+    assert(pr <= 7, s"pageRank: $pr Spark jobs")
     assert(tr <= 10, s"traverse: $tr Spark jobs")
+  }
+
+  test("connected components runs a bounded number of Spark jobs and leaves nothing cached") {
+    val vs = g.vertices.select("id")
+    val es = g.edges.select("src", "dst")
+    GraphAlgos.connectedComponents(vs, es, 50).collect()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (rows, cc) = jobsDuring(GraphAlgos.connectedComponents(vs, es, 50).collect())
+    // the GraphX supersteps, as measured; the DataFrame loop ran 66
+    assert(cc <= 16, s"connectedComponents: $cc Spark jobs")
+    // directed: the chain's head names every vertex it reaches
+    assert(rows.forall(_.getLong(1) == 0L))
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size <= 1, s"cached after connectedComponents: ${cached(added)}")
+  }
+
+  test("pageRank equals the plain recurrence on duplicate, sink and non-vertex edges") {
+    val vs = Seq(1, 2, 3, 4, 5)
+    // 1 -> 2 twice; 4 is a sink and 5 has no edge; 9 is not a vertex, and
+    // neither is 8
+    val es = Seq((1, 2), (1, 2), (2, 3), (3, 1), (2, 4), (1, 9), (8, 2))
+    val iters = 5
+    val sent = es.filter(e => vs.contains(e._1))
+    val outDeg = sent.groupMapReduce(_._1)(_ => 1)(_ + _)
+    val expected = (1 to iters).foldLeft(vs.map(_ -> 1.0).toMap) { (rank, _) =>
+      vs.map(v => v -> (0.15 + 0.85 *
+        sent.collect { case (a, `v`) => rank(a) / outDeg(a) }.sum)).toMap
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = GraphAlgos.pageRank(vs.toDF("id"), es.toDF("src", "dst"), iters, 0.15)
+    val got = out.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    assert(out.schema("id").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(got.keySet == vs.toSet)
+    vs.foreach(v => assert(math.abs(got(v) - expected(v)) < 1e-9, s"vertex $v: ${got(v)} vs ${expected(v)}"))
+    // the result's own pin is all the call leaves cached
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size <= 1, s"cached after pageRank: ${cached(added)}")
   }
 }

@@ -340,8 +340,9 @@ class PhysicalPlanSpec extends AnyFunSuite {
   }
 
   test("GraphX connected components agrees with the oracled DataFrame CC") {
-    // pins the GraphX scale path (q_graph_cc, no external oracle) to the
-    // DuckDB-oracled small-twin algorithm: identical component structure
+    // GraphAlgos' CC is a Pregel that messages along out-edges only; on
+    // both directions of the co-purchase pairs it must give GraphX's
+    // library CC, which messages both ways: identical component structure
     // on the same graph
     import graft.graph.{GraphAlgos, PropertyGraph}
     val co = PropertyGraph.coPurchase(spark, sfDir).filter(col("a") < 200 && col("b") < 200)

@@ -70,4 +70,23 @@ class ScaleGuardSpec extends AnyFunSuite {
       assert(rows.value === 50L, "the pinned source was computed more than once")
     }
   }
+
+  test("Materialize.once: loop rounds do not fill the checkpoint dir") {
+    withCheckpointDir { dir =>
+      // a 6-pass repeat().until() is an Until loop that pins every pass
+      val chain = graft.graph.PropertyGraph(
+        (0L to 8L).map(i => (i, "n", i)).toDF("id", "label", "key"),
+        (0L until 8L).map(i => (i, i + 1, "next")).toDF("src", "dst", "label"))
+      val keys = graft.gremlin.Gremlin.query(chain,
+        "g.V().has('key', eq(0)).repeat(out()).until(has('key', eq(6))).values('key')")
+        .collect().map(_.getLong(0))
+      assert(keys.toSeq === Seq(6L))
+      import scala.jdk.CollectionConverters._
+      val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .filter(p => java.nio.file.Files.isDirectory(p) && p.getFileName.toString.startsWith("rdd-"))
+        .toSeq
+      // the one eager pin, of the loop-invariant edges; none per pass
+      assert(rddDirs.size <= 1, s"checkpointed RDDs: ${rddDirs.mkString(", ")}")
+    }
+  }
 }

@@ -178,6 +178,33 @@ class WritePathSpec extends AnyFunSuite {
     agrees(100, 199)
   }
 
+  test("a restore reads the backup manifest without DataSource ignoring its path") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dir = freshDir("wp_backup_log")
+    spark.range(100).select(col("id").as("k")).write.parquet(dir)
+    val backupDir = freshDir("wp_backup_log_backup")
+    Backup.backup(spark, Map("t" -> dir), backupDir)
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("backup-restore-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warned.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.setLevel(Level.WARN)
+    logger.addAppender(capture)
+    try Backup.restore(spark, backupDir, Map("t" -> dir))
+    finally { logger.removeAppender(capture); logger.setLevel(level); capture.stop() }
+    assert(warned.isEmpty, s"DataSource warned: ${warned.toArray.mkString("; ")}")
+    assert(spark.read.parquet(dir).count() === 100L)
+  }
+
   test("a restore from backup keeps an indexed type's manifest in step with the files") {
     val (dir, sql, agrees, _) = sqlTable("wp_restore", permuted)
     val backupDir = freshDir("wp_restore_backup")
