@@ -8,13 +8,12 @@ import org.apache.spark.sql.functions.lit
 
 import graft.Materialize
 
-/** The one loop behind graft's iterative DataFrame operators: label
-  * propagation, walk counts, SSSP, A*, BFS traversal, TRAVERSE
-  * DEPTH_FIRST, Gremlin `repeat` and Cypher variable-length paths
-  * (PageRank and connected components run on GraphX, see [[GraphAlgos]]).
-  * A round is a step over the previous round's output (Pregelix's
-  * superstep: messages ⋈ vertices → group-by); the caller writes the step,
-  * and the loop, its pins and its probes live here.
+/** The one loop behind graft's iterative DataFrame operators: BFS
+  * traversal, TRAVERSE DEPTH_FIRST, Gremlin `repeat` and Cypher
+  * variable-length paths (the graph algorithms run as GraphX supersteps,
+  * see [[GraphAlgos]]). A round is a step over the previous round's output
+  * (messages ⋈ vertices → group-by); the caller writes the step, and the
+  * loop, its pins and its probes live here.
   *
   * Pin policy. Every pin goes through [[Materialize.once]]; no caller
   * keeps pins or probes of its own.
@@ -27,26 +26,19 @@ import graft.Materialize
   *    but not yet materialized, planned sort-merge joins instead: dedup
   *    clustering, when its components ran as an `Until` loop, went
   *    2.33 → 3.0 s).
-  *  - A fixed count ([[Rounds]]) never probes and pins lazily. A step that
-  *    reads the previous output twice (it feeds both the next round and the
-  *    accumulated result, or the step has the form `dist ∪ relax(dist)`)
-  *    pins every round: without the pin each reader re-plans its own copy
-  *    of the level's subtree, which compiled a depth-3 co-purchase BFS to a
-  *    236-Exchange plan. A step that reads it once pins every
-  *    [[PinEvery]]-th round: its plan grows linearly, and an 8-round plan
-  *    is cheaper to analyze than 8 pin jobs are to schedule. The last round
-  *    is never pinned; its reader is the caller's.
+  *  - A fixed count ([[Rounds]]) never probes and pins every round but the
+  *    last, lazily. A round's output feeds both the next round and the
+  *    merged result; without the pin each reader re-plans its own copy of
+  *    the level's subtree, which compiled a depth-3 co-purchase BFS to a
+  *    236-Exchange plan. The last round is never pinned; its reader is the
+  *    caller's.
   */
 object Fixpoint {
 
-  /** Rounds between lazy pins when the step reads its input once. */
-  val PinEvery = 8
-
   /** When the loop stops; it never runs more than `bound` rounds. */
   sealed trait Stop { def bound: Int }
-  /** Exactly `bound` rounds. `readsTwice`: the step reads the previous
-    * output twice (see the pin policy above). */
-  final case class Rounds(bound: Int, readsTwice: Boolean) extends Stop
+  /** Exactly `bound` rounds. */
+  final case class Rounds(bound: Int) extends Stop
   /** Until no row of a round's output is `live`, at most `bound` rounds.
     * Every row is live by default, so the loop runs until the frontier is
     * empty; Gremlin `repeat().until(cond)` passes `!cond`, so it runs until
@@ -75,9 +67,8 @@ object Fixpoint {
           case Until(_, p) =>
             val pinned = Materialize.once(raw, eager = false)
             (pinned, anyRow(pinned.filter(p)))
-          case Rounds(_, twice) =>
-            val pin = n < stop.bound && (twice || n % PinEvery == 0)
-            (if (pin) Materialize.once(raw, eager = false) else raw, true)
+          case Rounds(_) =>
+            (if (n < stop.bound) Materialize.once(raw, eager = false) else raw, true)
         }
         val merged = merge.map { m =>
           val level = m.add(out, n)

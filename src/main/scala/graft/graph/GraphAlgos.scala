@@ -1,35 +1,36 @@
 package graft.graph
 
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.graphx.{Edge, EdgeDirection, Graph, Pregel}
+import org.apache.spark.graphx.{Edge, EdgeDirection, Graph, Pregel, TripletFields}
 import org.apache.spark.graphx.lib.PageRank
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.Materialize
+import graft.{Materialize, OneRow}
 
 /** Distributed graph algorithms, the Spark-native re-expression of the
   * reference's OLAP algorithm suite (graph/olap/GraphAlgorithms.java —
-  * PageRank :164, connected components :309, Dijkstra single-source :981,
-  * label propagation :1118, local clustering coefficient :1252).
+  * PageRank :164, all-paths walks :513, connected components :309,
+  * Dijkstra single-source :981, label propagation :1118, local clustering
+  * coefficient :1252).
   *
-  * PageRank and connected components run on GraphX: a superstep ships
-  * only the messages between vertex and edge partitions that stay put
-  * (Pregelix's superstep), where a DataFrame round re-shuffles vertices,
-  * messages and edges, and measured about twice as slow. They are the
-  * only callers of GraphX besides [[PropertyGraph.toGraphX]]. The other
-  * algorithms are iterative DataFrame programs, each iteration one join +
-  * one aggregation run as a [[Fixpoint]] step, whose pin policy keeps a
-  * 20-iteration run from building a 20-deep plan; they pin exact
-  * semantics a DuckDB oracle can replay (deterministic tie-breaks, fixed
-  * iteration counts).
+  * The iterative algorithms run on GraphX: a superstep ships only the
+  * messages between vertex and edge partitions that stay put (Pregelix's
+  * superstep), where a DataFrame round re-plans, re-compiles and
+  * re-shuffles vertices, messages and edges; the DataFrame loops measured
+  * up to twice as slow. They are the only callers of GraphX besides
+  * [[PropertyGraph.toGraphX]]. Each keeps exact semantics a DuckDB oracle
+  * can replay (deterministic tie-breaks, fixed iteration counts), casts
+  * ids to long for GraphX and returns them in the type of the columns they
+  * come from (united, when both `vertices` and the edges supply them).
+  * The clustering coefficient is one DataFrame join pipeline.
   */
 object GraphAlgos {
-  import Fixpoint.Rounds
+  private val Inf = Double.PositiveInfinity
 
   /** Static PageRank, GraphX's formulation (rank0 = 1.0; rank' = reset +
     * (1−reset)·Σ rank/outdeg over in-edges), `iters` rounds, ranks not
@@ -42,11 +43,8 @@ object GraphAlgos {
     val g = g0.subgraph(epred = _.srcAttr)
     val ranks = PageRank.runWithOptions(g, iters, reset, None, normalized = false)
     val t = vertices.schema("id").dataType
-    val out = Materialize.once(vertices.sparkSession
-      .createDataFrame(ranks.vertices.innerJoin(g.vertices.filter(_._2))((_, r, _) => r))
-      .select(col("_1").cast(t).as("id"), col("_2").as("rank")))
-    release(ranks, sources)
-    out
+    result(vertices, ranks.vertices.innerJoin(g.vertices.filter(_._2))((_, r, _) => r), ranks, sources)(
+      col("_1").cast(t).as("id"), col("_2").as("rank"))
   }
 
   /** Connected components by min-id propagation along out-edges (HashMin),
@@ -64,66 +62,26 @@ object GraphAlgos {
       t => if (t.srcAttr < t.dstAttr) Iterator(t.dstId -> t.srcAttr) else Iterator.empty,
       math.min)
     val t = vertices.schema("id").dataType
-    val out = Materialize.once(vertices.sparkSession.createDataFrame(cc.vertices)
-      .select(col("_1").cast(t).as("id"), col("_2").cast(t).as("comp")))
-    release(cc, sources)
-    out
-  }
-
-  /** `vertices`' ids flagged true and `edges` as a GraphX graph, and the
-    * two RDDs it is built from. An edge endpoint outside `vertices` becomes
-    * a vertex flagged false. Ids are cast to long. The inputs' partitioning
-    * is kept, for the reason [[PropertyGraph.toGraphX]] gives. */
-  private def graph(vertices: DataFrame, edges: DataFrame): (Graph[Boolean, Unit], Seq[RDD[_]]) = {
-    val vs = vertices.select(col("id").cast("long")).rdd.map(r => (r.getLong(0), true))
-    val es = edges.select(col("src").cast("long"), col("dst").cast("long")).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    (Graph(vs, es, defaultVertexAttr = false), Seq(vs, es))
-  }
-
-  /** Unpersists every RDD GraphX cached on the way from `sources` to `g`;
-    * run it once the result is pinned. The walk stops at `sources`, so the
-    * caller's own cached RDDs and pins stay. */
-  private def release(g: Graph[_, _], sources: Seq[RDD[_]]): Unit = {
-    val seen = mutable.Set(sources.map(_.id): _*)
-    val todo = mutable.Stack[RDD[_]](g.vertices, g.edges)
-    while (todo.nonEmpty) {
-      val rdd = todo.pop()
-      if (seen.add(rdd.id)) {
-        if (rdd.getStorageLevel != StorageLevel.NONE) rdd.unpersist(blocking = false)
-        rdd.dependencies.foreach(d => todo.push(d.rdd))
-      }
-    }
+    result(vertices, cc.vertices, cc, sources)(col("_1").cast(t).as("id"), col("_2").cast(t).as("comp"))
   }
 
   /** Synchronous label propagation with a deterministic tie-break (max
     * neighbor-label count, ties → smallest label), fixed iteration count —
     * GraphAlgorithms.java:1118 with the tie order pinned so every engine
-    * replays the same communities. `edges` both directions. */
+    * replays the same communities. `edges` both directions; only edges
+    * between two of `vertices` count, duplicates twice. A vertex with no
+    * in-neighbour keeps its label. */
   def labelPropagation(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    // The edges are loop-invariant (often a derived join such as the
-    // co-purchase self-join): one AQE-planned materialization instead of
-    // `iters` recomputes. Not persist(): a cached plan is planned with AQE
-    // off, and a derived edge relation lost its runtime broadcast and
-    // coalesce, measured 4-25x slower.
-    val e = Materialize.once(edges)
-    val byCount = Window.partitionBy(col("id")).orderBy(col("c").desc, col("lab"))
-    // A round reads the previous labels twice, in the messages and in the
-    // update, so every round before the last is pinned. The pinned rows
-    // lose the join's hash partitioning and the update re-shuffles them;
-    // the result is left unpinned, which saves that job again: its reader
-    // reads it once.
-    Fixpoint(vertices.select(col("id"), col("id").as("lab")),
-        Rounds(iters, readsTwice = true)) { r =>
-      val best = e.join(r.prev.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id"), col("lab"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(byCount))
-        .filter(col("rn") === 1)
-        .select(col("id"), col("lab").as("best"))
-      r.prev.join(best, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("best"), col("lab")).as("lab"))
-    }.out
+    val (g0, sources) = graph(vertices, edges)
+    var g = g0.subgraph(t => t.srcAttr && t.dstAttr, (_, real) => real).mapVertices((id, _) => id)
+    for (_ <- 1 to iters) {
+      val counts = g.aggregateMessages[Map[Long, Long]](t => t.sendToDst(Map(t.srcAttr -> 1L)),
+        (a, b) => a ++ b.map { case (lab, n) => lab -> (n + a.getOrElse(lab, 0L)) }, TripletFields.Src)
+      // each round's labels feed both its messages and the next labels
+      g = g.joinVertices(counts)((_, _, c) => c.minBy { case (lab, n) => (-n, lab) }._1).cache()
+    }
+    val t = vertices.schema("id").dataType
+    result(vertices, g.vertices, g, sources)(col("_1").cast(t).as("id"), col("_2").cast(t).as("lab"))
   }
 
   /** Local clustering coefficient cc(v) = 2·tri(v) / (deg(v)·(deg(v)−1))
@@ -156,64 +114,113 @@ object GraphAlgos {
 
   /** Walk counts per destination and depth (the set-oriented form of the
     * reference's all-paths enumeration, GraphAlgorithms.java:513): w_h =
-    * w_{h-1} × A as repeated join+sum — matrix-power shape, one shuffle
-    * per depth, counts never materialize individual paths. */
+    * w_{h-1} × A, one message sum per depth over the previous depth's
+    * frontier, so counts never materialize individual paths. Rows
+    * (depth, id, walks) for depths 1..`maxDepth`; duplicate edges count
+    * twice. */
   def walkCounts(edges: DataFrame, sourceFilter: Column, vertices: DataFrame,
       maxDepth: Int): DataFrame = {
-    // each depth feeds both the next depth and the result
-    Fixpoint(vertices.filter(sourceFilter).select(col("id"), lit(1L).as("walks")),
-        Rounds(maxDepth, readsTwice = true),
-        Some(Fixpoint.Merge(None, (front, d) => front.withColumn("depth", lit(d))))) { r =>
-      r.prev.join(edges.withColumnRenamed("src", "id"), Seq("id"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("walks")).as("walks"))
-    }.out.select("depth", "id", "walks")
+    val (g0, sources) = graph(vertices.filter(sourceFilter), edges)
+    var g = g0.mapVertices((_, src) => if (src) 1L else 0L)
+    val depths = (1 to maxDepth).map { d =>
+      // each depth feeds both the next depth and the result
+      val walks = g.aggregateMessages[Long](t => if (t.srcAttr > 0) t.sendToDst(t.srcAttr), _ + _,
+        TripletFields.Src).cache()
+      g = g.outerJoinVertices(walks)((_, _, w) => w.getOrElse(0L)).cache()
+      walks.map { case (id, w) => (d, id, w) }
+    }
+    val t = edges.schema("dst").dataType
+    result(vertices, g.vertices.sparkContext.union(depths), g, sources)(
+      col("_1").as("depth"), col("_2").cast(t).as("id"), col("_3").as("walks"))
   }
 
   /** A* single-pair shortest path (reference function/sql/graph/
     * SQLFunctionAstar.java) as distributed branch-and-bound: Bellman-Ford
-    * relaxation rounds with heuristic pruning — once a goal cost B is
-    * known, states with g + h(v) > B are dropped (h admissible ⇒ no
-    * optimal path is lost). A sequential priority-queue A* is a
-    * single-node design; set-oriented relaxation + pruning keeps every
-    * step a distributed join, and the only driver fetch is the scalar
-    * goal cost per round. `edges` = (src, dst, w). */
+    * supersteps with heuristic pruning — once the goal cost B is known, a
+    * candidate cost g at v is sent only if g + h(v) ≤ B (h admissible ⇒
+    * no optimal path is lost). A sequential priority-queue A* is a
+    * single-node design; the only driver fetch here is the goal's cost
+    * after each superstep. `h` is evaluated once per vertex, in one
+    * DataFrame pass. `edges` = (src, dst, w). One row (target, cost) when
+    * the target is reached within `iters` edges, none otherwise. */
   def aStarPair(edges: DataFrame, source: Long, target: Long,
       h: Column => Column, iters: Int): DataFrame = {
     val spark = edges.sparkSession
-    var best = Double.PositiveInfinity
-    Fixpoint(graft.OneRow(spark).select(lit(source).as("id"), lit(0.0).as("g")),
-        Rounds(iters, readsTwice = true)) { r =>
-      val relaxed = r.prev.join(edges.withColumnRenamed("src", "id"), Seq("id"))
-        .select(col("dst").as("id"), (col("g") + col("w")).as("g"))
-      val dist = r.prev.union(relaxed).groupBy("id").agg(min(col("g")).as("g"))
-      // The goal probe is the loop's only driver action (the lazy pins
-      // materialize under it), so it runs every second round: half the
-      // scheduler round-trips (42 → 32 Spark jobs per query). Skipping a
-      // probe only delays pruning by one round; pruning never drops a
-      // state on an optimal path (h admissible), so the final min-g at the
-      // target after `iters` relaxations is identical.
-      if (r.n % 2 == 1 && r.n < iters) dist
-      else {
-        val hit = dist.filter(col("id") === target).select("g").limit(2).collect()
-        if (hit.nonEmpty) best = math.min(best, hit(0).getDouble(0))
-        if (best.isInfinite) dist else dist.filter(col("g") + h(col("id")) <= best + 1e-9)
-      }
-    }.out.filter(col("id") === target)
-      .select(col("id"), round(col("g"), 6).as("dist"))
+    val (g0, sources) = graph(OneRow(spark).select(lit(source).as("id")), edges, col("w"))
+    val t = OneRow(spark).select(lit(source)).union(edges.select("dst")).schema.head.dataType
+    val hs = spark.createDataFrame(g0.vertices.map(v => Tuple1(v._1)))
+      .select(col("_1"), h(col("_1").cast(t)).cast("double")).rdd
+      .map(r => (r.getLong(0), r.getDouble(1)))
+    var g = g0.outerJoinVertices(hs)((_, src, hv) => (if (src) 0.0 else Inf, hv.get))
+    var best = if (source == target) 0.0 else Inf
+    for (_ <- 1 to iters) {
+      val bound = best + 1e-9
+      val relaxed = g.aggregateMessages[Double]({ e =>
+        val c = e.srcAttr._1 + e.attr
+        if (c < e.dstAttr._1 && c + e.dstAttr._2 <= bound) e.sendToDst(c)
+      }, math.min)
+      g = g.joinVertices(relaxed)((_, v, c) => (math.min(v._1, c), v._2)).cache()
+      // one task: the vertex partition that holds the target
+      best = g.vertices.lookup(target).headOption.fold(best)(_._1)
+    }
+    release(sources, g.vertices, g.edges)
+    OneRow(spark).filter(lit(!best.isInfinite))
+      .select(lit(target).cast(t).as("id"), round(lit(best), 6).as("dist"))
   }
 
   /** Weighted single-source shortest paths by distributed Bellman-Ford
-    * relaxation, `iters` rounds == exact min-cost over paths of ≤ `iters`
-    * edges (reference SQLFunctionDijkstra / GraphAlgorithms.java:981 —
-    * a sequential heap walk is a single-node design; relaxation rounds
-    * are the set-oriented equivalent). `edges` = (src, dst, w). */
+    * relaxation, `iters` supersteps == exact min-cost over paths of ≤
+    * `iters` edges (reference SQLFunctionDijkstra / GraphAlgorithms.java:981
+    * — a sequential heap walk is a single-node design; relaxation
+    * supersteps are the set-oriented equivalent). `edges` = (src, dst, w);
+    * a row for every reached id, edge endpoints outside `vertices` too. */
   def weightedSssp(edges: DataFrame, sourceFilter: Column, vertices: DataFrame, iters: Int): DataFrame = {
-    Fixpoint(vertices.filter(sourceFilter).select(col("id"), lit(0.0).as("dist")),
-        Rounds(iters, readsTwice = true)) { r =>
-      val relaxed = r.prev.join(edges.withColumnRenamed("src", "id"), Seq("id"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      r.prev.union(relaxed).groupBy("id").agg(min(col("dist")).as("dist"))
-    }.out
+    val (g, sources) = graph(vertices.filter(sourceFilter), edges, col("w"))
+    val dist = Pregel(g.mapVertices((_, src) => if (src) 0.0 else Inf), Inf, iters, EdgeDirection.Out)(
+      (_, d, msg) => math.min(d, msg),
+      e => if (e.srcAttr + e.attr < e.dstAttr) Iterator(e.dstId -> (e.srcAttr + e.attr)) else Iterator.empty,
+      math.min)
+    val t = vertices.select("id").union(edges.select("dst")).schema.head.dataType
+    result(vertices, dist.vertices.filter(_._2 < Inf), dist, sources)(
+      col("_1").cast(t).as("id"), col("_2").as("dist"))
+  }
+
+  /** `vertices`' ids flagged true and `edges` as a GraphX graph with `w`
+    * as a double edge attribute, and the two RDDs it is built from. An
+    * edge endpoint outside `vertices` becomes a vertex flagged false. Ids
+    * are cast to long. The inputs' partitioning is kept, for the reason
+    * [[PropertyGraph.toGraphX]] gives. */
+  private def graph(vertices: DataFrame, edges: DataFrame,
+      w: Column = lit(0.0)): (Graph[Boolean, Double], Seq[RDD[_]]) = {
+    val vs = vertices.select(col("id").cast("long")).rdd.map(r => (r.getLong(0), true))
+    val es = edges.select(col("src").cast("long"), col("dst").cast("long"), w.cast("double")).rdd
+      .map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
+    (Graph(vs, es, defaultVertexAttr = false), Seq(vs, es))
+  }
+
+  /** `rows` pinned as a DataFrame of `cols` over the tuple fields `_1`,
+    * `_2`, …; then what GraphX cached on the way to `rows` and `g` is
+    * released. */
+  private def result[T <: Product: TypeTag](in: DataFrame, rows: RDD[T], g: Graph[_, _],
+      sources: Seq[RDD[_]])(cols: Column*): DataFrame = {
+    val out = Materialize.once(in.sparkSession.createDataFrame(rows).select(cols: _*))
+    release(sources, rows, g.vertices, g.edges)
+    out
+  }
+
+  /** Unpersists every RDD GraphX cached on the way from `sources` to
+    * `roots`; run it once the result is pinned. The walk stops at
+    * `sources`, so the caller's own cached RDDs and pins stay: `sources`
+    * must be every RDD the graph was built from. */
+  private def release(sources: Seq[RDD[_]], roots: RDD[_]*): Unit = {
+    val seen = mutable.Set(sources.map(_.id): _*)
+    val todo = mutable.Stack[RDD[_]](roots: _*)
+    while (todo.nonEmpty) {
+      val rdd = todo.pop()
+      if (seen.add(rdd.id)) {
+        if (rdd.getStorageLevel != StorageLevel.NONE) rdd.unpersist(blocking = false)
+        rdd.dependencies.foreach(d => todo.push(d.rdd))
+      }
+    }
   }
 }

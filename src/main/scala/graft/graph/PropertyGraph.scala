@@ -60,7 +60,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     val f0 = seeds.select(col("id")).distinct()
     // a depth feeds both the next depth and the visited set
     Fixpoint(f0,
-        if (deep) Fixpoint.Until(maxDepth) else Fixpoint.Rounds(maxDepth, readsTwice = true),
+        if (deep) Fixpoint.Until(maxDepth) else Fixpoint.Rounds(maxDepth),
         Some(Fixpoint.Merge(Some(f0.withColumn("depth", lit(0))),
           (level, d) => level.withColumn("depth", lit(d))))) { r =>
       (direction match {
@@ -174,7 +174,8 @@ object PropertyGraph {
     * is bounded only by group width, so on a skewed co-occurrence corpus
     * one hot group would build an O(width) array row and an O(width²)
     * pair fan-out — the classic hot-key blowup. Groups wider than this
-    * keep their `MaxGroupWidth` smallest items (deterministic). TPC-H
+    * keep their `MaxGroupWidth` smallest items (deterministic), and each
+    * such group counts in [[graft.SkewCaps.hits]]. TPC-H
     * orders have ≤ 7 lineitems at every scale factor, so the cap is
     * unreachable on the declared queries (pair set identical,
     * oracle-checked); it exists so the operator has a declared bound
@@ -188,11 +189,15 @@ object PropertyGraph {
     * fan-out). Same (a, b) pair set, 2.4 s vs 3.8 s at sf0.1,
     * and the per-group fan-out never crosses the wire un-deduplicated.
     * The final distinct is still the only pair-sized exchange, as before. */
-  private[graft] def coPairs(items: DataFrame): DataFrame =
+  private[graft] def coPairs(items: DataFrame): DataFrame = {
+    val cut = graft.SkewCaps.counted(items.sparkSession, graft.SkewCaps.GroupWidth) _
     items.groupBy(col("gid"))
-      .agg(slice(sort_array(collect_set(col("item"))), 1, MaxGroupWidth).as("parts"))
+      .agg(sort_array(collect_set(col("item"))).as("all"))
+      .select(when(cut(size(col("all")) > MaxGroupWidth), slice(col("all"), 1, MaxGroupWidth))
+        .otherwise(col("all")).as("parts"))
       .select(explode(col("parts")).as("a"), col("parts"))
       .select(col("a"), explode(col("parts")).as("b"))
       .filter(col("a") < col("b"))
       .select(col("a"), col("b")).distinct()
+  }
 }

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
 
 /** Whole-graph algorithms with exact DuckDB oracles (SURVEY.md §2.8 tail).
   *
-  * The fixed-point algorithms ([[GraphAlgos]]: PageRank and CC on GraphX,
-  * the rest as DataFrame loops) run pinned iteration counts and
-  * deterministic tie-breaks, so the oracle can replay them:
+  * The fixed-point algorithms ([[GraphAlgos]], GraphX supersteps) run
+  * pinned iteration counts and deterministic tie-breaks, so the oracle
+  * can replay them:
   * PageRank/label-propagation oracles are the same recurrence UNROLLED
   * into N CTE levels (generated here), CC is min-reachability, SSSP is
   * bounded-depth path enumeration. q_graph_pagerank / q_graph_cc in
@@ -42,7 +42,7 @@ object GraphAlgoOps {
       .union(canon.select(col("b").as("src"), col("a").as("dst"), col("w")))
 
   /** Scope `spark.sql.shuffle.partitions` down while building (and, for
-    * the eager-checkpointing loops in [[GraphAlgos]], executing) a query
+    * [[GraphAlgos]]' eagerly pinned results, executing) a query
     * over a constant-size graph: a 25-node chain wants a handful of
     * reducers per iteration, not the session's batch default. The conf is
     * restored afterwards so concurrent batch work is unaffected — the same
@@ -63,9 +63,9 @@ object GraphAlgoOps {
       |e AS (SELECT a AS src, b AS dst FROM ce UNION ALL SELECT b, a FROM ce)""".stripMargin
 
   /** Induced co-purchase subgraph (both endpoints < 300), canonical a<b.
-    * r11: materialized — labelPropagation's loop and the clustering
-    * coefficient's 3-way wedge join reference the edge relation 3+ times,
-    * and the co-purchase derivation re-ran once per reference. */
+    * Pinned: label propagation reads the edge relation twice (once per
+    * direction) and the clustering coefficient's wedge join three times,
+    * and unpinned, the co-purchase derivation re-runs once per read. */
   private def coSub(s: SparkSession, d: String): DataFrame =
     graft.Materialize.once(
       graft.graph.PropertyGraph.coPurchase(s, d, maxPart = Some(300)))

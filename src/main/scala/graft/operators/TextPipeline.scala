@@ -49,16 +49,15 @@ object TextPipeline {
              |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])))
              |ELSE array() END""".stripMargin))
 
-  /** Exploded (doc_id, shingle) pairs. */
-  /** Pin a shared signature/index frame for its multiple consumers.
+  /** Pins a signature or index frame that several consumers read.
     * localCheckpoint, not persist(): raw-row checkpoint blocks read
-    * faster than the columnar cache for array-heavy rows and downstream
-    * stages keep AQE re-planning. r12 re-confirmed in a same-session
-    * interleaved A/B (verdict r11 #2): minhash 1.99 vs 2.14 s, clusters
-    * 3.06 vs 3.42 s, ngram 2.55 vs 2.62 s medians — localCheckpoint wins
-    * each; the r11 sweep regression was environmental. */
+    * faster than the columnar cache for array-heavy rows, and downstream
+    * stages keep AQE re-planning. Medians, localCheckpoint against
+    * persist(), measured interleaved in one session: minhash 1.99 vs
+    * 2.14 s, clusters 3.06 vs 3.42 s, ngram 2.55 vs 2.62 s. */
   private def pin(df: DataFrame): DataFrame = graft.Materialize.once(df)
 
+  /** Exploded (doc_id, shingle) pairs. */
   private def shingleIndex(docs: DataFrame): DataFrame =
     withShingles(docs).select(col("doc_id"), explode(col("shingles")).as("shingle"))
 
@@ -82,10 +81,6 @@ object TextPipeline {
     // the oracle's exact-string compare would catch it).
     val sh = pin(sh0.join(broadcast(hot), Seq("shingle"), "left_anti")
       .select(col("doc_id"), xxhash64(col("shingle")).as("shingle")))
-      // r11: localCheckpoint, not persist() — raw-row checkpoint blocks
-      // read faster than the columnar cache for array-heavy rows and the
-      // downstream stages keep AQE re-planning (same swap as the triangle
-      // pipeline; guide §2.4)
     val szs = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     // Codegen'd posting self-join per shingle (pair fanout bounded by the
     // df cap at ≤ maxDf²/2 per shingle).
@@ -167,15 +162,16 @@ object TextPipeline {
 
   /** LSH candidate pairs (64 bands × 2 rows) exact-verified by Jaccard on
     * the shingle sets. Band buckets larger than [[BandBucketCap]] are
-    * dropped before the self-join (skew guard at 100 TB). */
+    * dropped before the self-join (skew guard at 100 TB), and counted in
+    * [[graft.SkewCaps.hits]]. */
   def minhashDupPairs(docs: DataFrame, minJac: Double): DataFrame = {
     val sigs = pin(withMinhash(withShingles(docs).filter(size(col("shingles")) > 0))
-      .select(col("doc_id"), col("shingles"), col("sig"))) // r11: see jaccardPairs
+      .select(col("doc_id"), col("shingles"), col("sig")))
     val bands0 = sigs.select(col("doc_id"),
         posexplode(expr("transform(sequence(0, 63), j -> hash(sig[2*j], sig[2*j+1], j))")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bhash")
     val hot = bands0.groupBy("band", "bhash").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > BandBucketCap)
+      .filter(graft.SkewCaps.counted(docs.sparkSession, graft.SkewCaps.BandBucket)(col("bn") > BandBucketCap))
       .select("band", "bhash")
     val bands = bands0.join(broadcast(hot), Seq("band", "bhash"), "left_anti")
     val cand = bands.alias("x")
@@ -236,7 +232,7 @@ object TextPipeline {
     TextFunctions.register(docs.sparkSession)
     val sigs = pin(withTokens(docs)
       .withColumn("sig", callUDF("simhash_md5_chunks", col("toks")))
-      .select("doc_id", "sig")) // r11: see jaccardPairs
+      .select("doc_id", "sig"))
     // Pack the 8 chunk bytes into ONE long: candidate rows through the
     // band join are then (doc, doc, long, long) instead of two 8-element
     // arrays, and the hamming verify is a single codegen'd bit_count(xor)

@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scale-guard behavior pinned by unit tests: the co-occurrence pair
-  * generator's hot-group width cap (PropertyGraph.coPairs) and the
-  * Materialize checkpoint policy. */
+  * generator's hot-group width cap (PropertyGraph.coPairs), the MinHash
+  * band-bucket cap and their cut counts, and the Materialize checkpoint
+  * policy. */
 class ScaleGuardSpec extends AnyFunSuite {
   import TestSession._
   import spark.implicits._
@@ -31,6 +32,42 @@ class ScaleGuardSpec extends AnyFunSuite {
         col("x.gid") === col("y.gid") && col("x.item") < col("y.item"))
       .select(col("x.item").as("a"), col("y.item").as("b")).distinct()
     assert(viaSets.exceptAll(viaJoin).isEmpty && viaJoin.exceptAll(viaSets).isEmpty)
+  }
+
+  /** How many cuts of `cap` running `body` counted. */
+  private def cuts(cap: String)(body: => Unit): Long = {
+    val before = SkewCaps.hits(spark)(cap)
+    body
+    SkewCaps.hits(spark)(cap) - before
+  }
+
+  test("coPairs: a hot group's cut is counted, and its pairs are those of the kept items") {
+    val w = graft.graph.PropertyGraph.MaxGroupWidth
+    val items = (0 until 1100).map(i => (1L, i.toLong)) ++ Seq((2L, 5L), (2L, 2000L))
+    var pairs = Set.empty[(Long, Long)]
+    val n = cuts(SkewCaps.GroupWidth) {
+      pairs = graft.graph.PropertyGraph.coPairs(items.toDF("gid", "item"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    assert(n === 1L) // group 1 only
+    val kept = (0 until w).map(_.toLong)
+    assert(pairs === (for (a <- kept; b <- kept if a < b) yield (a, b)).toSet + ((5L, 2000L)))
+  }
+
+  test("minhashDupPairs: a band bucket over the cap is counted and dropped") {
+    val cap = graft.operators.TextPipeline.BandBucketCap
+    // cap + 1 identical documents fill one bucket in every band; the two
+    // others share a bucket with nothing else
+    val docs = ((0 to cap).map(i => (i.toLong, "the same boilerplate text in every document")) ++
+      Seq((5000L, "a rare pair of documents with one text"), (5001L, "a rare pair of documents with one text")))
+      .toDF("doc_id", "text")
+    var pairs = Seq.empty[(Long, Long, Double)]
+    val n = cuts(SkewCaps.BandBucket) {
+      pairs = graft.operators.TextPipeline.minhashDupPairs(docs, 0.8)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    }
+    assert(n === 64L) // one bucket per band
+    assert(pairs === Seq((5000L, 5001L, 1.0)))
   }
 
   /** Runs `body` with a fresh checkpoint dir set, then restores the shared
