@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage truncation for every pin in graft: the iterative operators'
-  * rounds (whose cadence [[graft.graph.Fixpoint]] sets, the one policy for
-  * when a loop pins and probes), loop-invariant edge relations, algorithm
-  * results, dedup signature reuse.
+/** Lineage truncation for every pin in graft: the rounds of the
+  * DataFrame loops (whose cadence [[graft.graph.Fixpoint]] sets, the one
+  * policy for when a loop pins and probes), loop-invariant edge relations,
+  * the results of the GraphX algorithms and traversals
+  * ([[graft.graph.GraphAlgos]]), dedup signature reuse.
   *
   * A pin keeps a 20-round fixpoint from building a 20-deep plan and makes
   * shared subtrees run once. On `local[*]`, `localCheckpoint` is the right

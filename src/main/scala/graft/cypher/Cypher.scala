@@ -1117,8 +1117,8 @@ object Cypher {
             else {
               // pinned: the first hop seeds round 1 and joins the result
               val first = graft.Materialize.once(firstHop, eager = false)
-              val walks = Fixpoint(first, Fixpoint.Until(hi - 1),
-                Some(Fixpoint.Merge(Some(first), (w, _) => w)))(r => extend(r.prev)).out
+              val walks = Fixpoint(first, hi - 1,
+                merge = Some(Fixpoint.Merge(Some(first), identity)))(r => extend(r.prev)).out
               zero :+ (if (lo > 1) walks.filter(size(col("__rs")) >= lo) else walks)
             }
           // an empty interval (`*2..1`) matches nothing, it is not an error

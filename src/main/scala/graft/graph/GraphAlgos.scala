@@ -1,9 +1,10 @@
 package graft.graph
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.graphx.{Edge, EdgeDirection, Graph, Pregel, TripletFields}
+import org.apache.spark.graphx.{Edge, EdgeDirection, EdgeTriplet, Graph, Pregel, TripletFields, VertexId}
 import org.apache.spark.graphx.lib.PageRank
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
@@ -16,7 +17,8 @@ import graft.{Materialize, OneRow}
   * reference's OLAP algorithm suite (graph/olap/GraphAlgorithms.java —
   * PageRank :164, all-paths walks :513, connected components :309,
   * Dijkstra single-source :981, label propagation :1118, local clustering
-  * coefficient :1252).
+  * coefficient :1252) and of its traversal executors (BFS behind SQL
+  * TRAVERSE, Cypher shortestPath and [[PropertyGraph.traverse]]).
   *
   * The iterative algorithms run on GraphX: a superstep ships only the
   * messages between vertex and edge partitions that stay put (Pregelix's
@@ -57,7 +59,7 @@ object GraphAlgos {
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIters: Int): DataFrame = {
     val (g0, sources) = graph(vertices, edges)
     val g = g0.subgraph(t => t.srcAttr && t.dstAttr, (_, real) => real)
-    val cc = Pregel(g.mapVertices((id, _) => id), Long.MaxValue, maxIters, EdgeDirection.Out)(
+    val cc = pregel(g.mapVertices((id, _) => id), Long.MaxValue, maxIters, EdgeDirection.Out)(
       (_, comp, msg) => math.min(comp, msg),
       t => if (t.srcAttr < t.dstAttr) Iterator(t.dstId -> t.srcAttr) else Iterator.empty,
       math.min)
@@ -176,13 +178,84 @@ object GraphAlgos {
     * a row for every reached id, edge endpoints outside `vertices` too. */
   def weightedSssp(edges: DataFrame, sourceFilter: Column, vertices: DataFrame, iters: Int): DataFrame = {
     val (g, sources) = graph(vertices.filter(sourceFilter), edges, col("w"))
-    val dist = Pregel(g.mapVertices((_, src) => if (src) 0.0 else Inf), Inf, iters, EdgeDirection.Out)(
+    val dist = pregel(g.mapVertices((_, src) => if (src) 0.0 else Inf), Inf, iters, EdgeDirection.Out)(
       (_, d, msg) => math.min(d, msg),
       e => if (e.srcAttr + e.attr < e.dstAttr) Iterator(e.dstId -> (e.srcAttr + e.attr)) else Iterator.empty,
       math.min)
     val t = vertices.select("id").union(edges.select("dst")).schema.head.dataType
     result(vertices, dist.vertices.filter(_._2 < Inf), dist, sources)(
       col("_1").cast(t).as("id"), col("_2").as("dist"))
+  }
+
+  /** Breadth-first traversal from `seeds` along `edges` (src, dst), the
+    * TRAVERSE … MAXDEPTH n analog (reference exec/
+    * BreadthFirstTraverseStep.java:34): (id, depth) for every id reached
+    * within `maxDepth` edges, depth the first (least) reach depth, seeds at
+    * 0, edge endpoints outside `seeds` too. `direction` "out" follows
+    * edges, "in" walks them backwards and "both" either way. */
+  def traverse(seeds: DataFrame, edges: DataFrame, maxDepth: Int, direction: String): DataFrame =
+    reach(seeds, edges, maxDepth, direction, "depth", Int.MaxValue, Ordering.Int)(_ => 0)((d, _) => d + 1)
+
+  /** [[traverse]] with the least id-path instead of the depth: (id, path),
+    * path running from a seed to id. Paths order by length, then
+    * lexicographically, so a vertex keeps the least of the paths that reach
+    * it at its first reach depth, extending its parent's kept path. Sorted
+    * by path the rows are a pre-order, TRAVERSE STRATEGY DEPTH_FIRST's
+    * emission order (reference exec/DepthFirstTraverseStep.java:36). */
+  def traversePaths(seeds: DataFrame, edges: DataFrame, maxDepth: Int, direction: String): DataFrame =
+    reach(seeds, edges, maxDepth, direction, "path", NoPath, PathOrder)(Array(_))(_ :+ _)
+
+  private val NoPath = Array.empty[Long]
+  /** Shorter paths first, then lexicographic; no path after every path. */
+  private val PathOrder: Ordering[Array[Long]] = (a, b) =>
+    if (a.isEmpty || b.isEmpty) java.lang.Boolean.compare(a.isEmpty, b.isEmpty)
+    else if (a.length != b.length) Integer.compare(a.length, b.length)
+    else java.util.Arrays.compare(a, b)
+
+  /** Breadth-first min-relaxation from `seeds` along `edges`: (id, `name`)
+    * for every reached id, ids in the type of the union of seed and edge
+    * endpoint ids. A seed starts at `start(id)`, any other vertex at `none`
+    * (greater than any other value under `ord`). Superstep d offers each
+    * vertex `next(a, id)` from every reached neighbour with value a along
+    * `direction`, and the vertex keeps the least offer below its own value.
+    * At most `maxDepth` supersteps, fewer once a superstep keeps no offer. */
+  private def reach[A: ClassTag: TypeTag](seeds: DataFrame, edges: DataFrame, maxDepth: Int, direction: String,
+      name: String, none: A, ord: Ordering[A])(start: VertexId => A)(next: (A, VertexId) => A): DataFrame = {
+    val (g, sources) = graph(seeds, edges)
+    val (fwd, back) = (direction != "in", direction == "in" || direction == "both")
+    def offer(from: A, to: VertexId, at: A): Iterator[(VertexId, A)] =
+      if (!ord.lt(from, none)) Iterator.empty
+      else Iterator(next(from, to)).filter(ord.lt(_, at)).map(to -> _)
+    val reached = pregel(g.mapVertices((id, seed) => if (seed) start(id) else none), none, maxDepth,
+        if (!back) EdgeDirection.Out else if (!fwd) EdgeDirection.In else EdgeDirection.Either)(
+      (_, a, m) => ord.min(a, m),
+      t => (if (fwd) offer(t.srcAttr, t.dstId, t.dstAttr) else Iterator.empty) ++
+        (if (back) offer(t.dstAttr, t.srcId, t.srcAttr) else Iterator.empty),
+      ord.min)
+    val t = seeds.select("id").union(edges.select("src")).union(edges.select("dst")).schema.head.dataType
+    result(seeds, reached.vertices.filter(v => ord.lt(v._2, none)), reached, sources)(
+      col("_1").cast(t).as("id"), col("_2").as(name))
+  }
+
+  /** `Pregel` for `n` supersteps, the last one lazily. Pregel computes and
+    * checks the messages of one superstep past the last it applies, a
+    * Spark job, then drops them; so Pregel runs `n - 1` supersteps, and the
+    * last superstep's messages are computed again and applied in the job
+    * that reads the result. The last superstep messages along every edge,
+    * not only those of vertices that changed in the superstep before; that
+    * is exact for min-relaxations, which send only what lowers a value, so
+    * an unchanged vertex has nothing new to send. A run that converges
+    * within `n - 1` supersteps pays for it with one edge pass that sends
+    * nothing, inside the reading job. */
+  private def pregel[V: ClassTag, E: ClassTag, M: ClassTag](g: Graph[V, E], initial: M, n: Int,
+      dir: EdgeDirection)(vprog: (VertexId, V, M) => V, send: EdgeTriplet[V, E] => Iterator[(VertexId, M)],
+      merge: (M, M) => M): Graph[V, E] = {
+    val applied = if (n > 1) Pregel(g, initial, n - 1, dir)(vprog, send, merge)
+      else g.mapVertices(vprog(_, _, initial))
+    if (n < 1) applied
+    else applied.joinVertices(applied.aggregateMessages[M](c => send(c.toEdgeTriplet).foreach {
+      case (id, m) => if (id == c.srcId) c.sendToSrc(m) else c.sendToDst(m)
+    }, merge))(vprog)
   }
 
   /** `vertices`' ids flagged true and `edges` as a GraphX graph with `w`

@@ -9,73 +9,27 @@ import org.apache.spark.sql.functions._
   * ArcadeDB's vertex/edge model (reference graph/Vertex.java:33,
   * graph/Edge.java:34). Adjacency is NOT a per-vertex linked list
   * (EdgeLinkedList.java:53 — index-free adjacency is a single-node
-  * design); it's the `edges` DataFrame joined on `src`/`dst`, which
-  * partitions and broadcasts like any other relation at 100 TB.
+  * design); it's the `edges` DataFrame, which the query front-ends join
+  * on `src`/`dst` like any other relation, and which traversals and graph
+  * algorithms partition once into GraphX edge partitions ([[GraphAlgos]]).
   *
   * Schema contract: vertices(id: Long, label: String, props...),
   * edges(src: Long, dst: Long, label: String, props...).
   */
 final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
-  import PropertyGraph.UnrollDepth
-
-  /** One-hop expansion along OUT edges (reference SQLFunctionOut /
-    * GraphEngine.getEdges GraphEngine.java:1320): frontier ⋈ edges.
-    * Frontier is keyed by `id`. */
-  def expandOut(frontier: DataFrame, edgeLabel: Option[String] = None): DataFrame = {
-    val e = edgeLabel.map(l => edges.filter(col("label") === l)).getOrElse(edges)
-    frontier.select(col("id")).alias("f")
-      .join(e.alias("e"), col("f.id") === col("e.src"))
-      .select(col("e.dst").as("id"))
-  }
-
-  def expandIn(frontier: DataFrame, edgeLabel: Option[String] = None): DataFrame = {
-    val e = edgeLabel.map(l => edges.filter(col("label") === l)).getOrElse(edges)
-    frontier.select(col("id")).alias("f")
-      .join(e.alias("e"), col("f.id") === col("e.dst"))
-      .select(col("e.src").as("id"))
-  }
-
   /** BFS traversal with per-depth emission, the TRAVERSE … MAXDEPTH n
-    * analog (reference executor/DepthFirstTraverseStep.java:36,
-    * BreadthFirstTraverseStep.java:34; grammar SQLParser.g4:220-229).
-    * Returns (id, depth) with depth = first (minimum) reach depth. Each
-    * depth is one [[Fixpoint]] round: `distinct(expand(prev)) ⟕̸ visited`,
-    * one distributed join, with the visited set the merged result.
-    *
-    * Up to [[PropertyGraph.UnrollDepth]] the depths run as fixed rounds:
-    * one lazy DAG with no per-depth action, executed by the caller's job.
-    * An exhausted frontier needs no probe there, it expands to empty, and a
-    * bounded hop count (TRAVERSE … MAXDEPTH n, Cypher `*lo..hi`) is small,
-    * so the scheduler round-trips of a probing round would dominate at
-    * small scale. Deeper walks run until the frontier is empty: the probe
-    * stops work when the frontier dies, and the loop-invariant edge
-    * relation (often a derived join such as co-purchase) is pinned once
-    * instead of recomputed per depth.
-    */
+    * analog (reference executor/BreadthFirstTraverseStep.java:34; grammar
+    * SQLParser.g4:220-229), along the edges labelled `edgeLabel` (any label
+    * without one). Returns (id, depth) with depth the first (minimum) reach
+    * depth, seeds at 0: [[GraphAlgos.traverse]]'s GraphX supersteps. */
   def traverse(seeds: DataFrame, maxDepth: Int, direction: String = "out",
-      edgeLabel: Option[String] = None): DataFrame = {
-    val deep = maxDepth > UnrollDepth
-    val e = edgeLabel.fold(edges)(l => edges.filter(col("label") === l))
-    val g = copy(edges = if (deep) graft.Materialize.once(e) else e)
-    val f0 = seeds.select(col("id")).distinct()
-    // a depth feeds both the next depth and the visited set
-    Fixpoint(f0,
-        if (deep) Fixpoint.Until(maxDepth) else Fixpoint.Rounds(maxDepth),
-        Some(Fixpoint.Merge(Some(f0.withColumn("depth", lit(0))),
-          (level, d) => level.withColumn("depth", lit(d))))) { r =>
-      (direction match {
-        case "in"   => g.expandIn(r.prev)
-        case "both" => g.expandOut(r.prev).union(g.expandIn(r.prev))
-        case _      => g.expandOut(r.prev)
-      })
-        .distinct()
-        .join(r.acc.get.select(col("id").as("vid")), col("id") === col("vid"), "left_anti")
-    }.out
-  }
+      edgeLabel: Option[String] = None): DataFrame =
+    GraphAlgos.traverse(seeds, edgeLabel.fold(edges)(l => edges.filter(col("label") === l)),
+      maxDepth, direction)
 
   /** GraphX view of the graph, for running GraphX's own library
     * algorithms on it (reference graph/olap/GraphAlgorithms.java). graft's
-    * PageRank and connected components build their graph in
+    * own graph algorithms and traversals build their graph in
     * [[GraphAlgos]], over ids alone. The reference builds a columnar CSR
     * snapshot (CSRBuilder.java:59) for this; GraphX's internal edge
     * partitions play that role here. */
@@ -99,9 +53,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 }
 
 object PropertyGraph {
-  /** Max depth compiled as one lazy unrolled DAG; deeper walks probe the
-    * frontier every depth (see [[PropertyGraph.traverse]]). */
-  val UnrollDepth = 8
   /** Vertex-id encoding for the TPC-H-derived demo graph: the natural keys
     * of customer/order/part/supplier live in disjoint id spaces via
     * key * 8 + typeTag — the RID-surrogate policy from SURVEY.md §1.1. */
@@ -138,11 +89,9 @@ object PropertyGraph {
 
   /** Traversal view of [[fromTpch]]: same vertices and connectivity, but
     * `contains` edges skip the per-(order, part) qty aggregation — BFS
-    * never reads edge props and dedups targets itself, so the groupBy
-    * shuffle over the whole lineitem table buys nothing. Without the
-    * aggregation barrier the frontier join pushes straight onto the
-    * lineitem scan (broadcast of a small frontier prunes the scan at
-    * 100 TB; an aggregate-first plan always pays the full-table shuffle). */
+    * never reads edge props, and a duplicate edge changes no reach depth,
+    * so the groupBy shuffle over the whole lineitem table buys nothing:
+    * the traversal's edge partitions are built straight from the scan. */
   def fromTpchTraversal(spark: SparkSession, dir: String): PropertyGraph = {
     import graft.Tables
     val full = fromTpch(spark, dir)

@@ -358,8 +358,8 @@ object Gremlin {
     def repeatUntil(s0: State, body: List[(String, List[Arg])], until: Option[Column],
         emitAll: Boolean): State = {
       val stop = until.getOrElse(lit(false))
-      val loop = Fixpoint(s0.df, Fixpoint.Until(MaxRepeatLoops, !stop),
-          Some(Fixpoint.Merge(None, (pass, _) => if (emitAll) pass else pass.filter(stop)))) { r =>
+      val loop = Fixpoint(s0.df, MaxRepeatLoops, !stop,
+          Some(Fixpoint.Merge(None, pass => if (emitAll) pass else pass.filter(stop)))) { r =>
         applyCalls(s0.copy(df = if (r.n == 1) r.prev else r.prev.filter(!stop)), body).df
       }
       if (loop.cutOff)

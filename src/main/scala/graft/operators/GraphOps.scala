@@ -134,11 +134,9 @@ object GraphOps {
         |  SELECT e.b, bfs.depth + 1 FROM bfs JOIN e ON e.a = bfs.id
         |  WHERE bfs.depth < 3)
         |SELECT id, min(depth) AS depth FROM bfs GROUP BY id ORDER BY id""".stripMargin) { (s, d) =>
-      // r11: materialize the derived co-purchase edges ONCE — the unrolled
-      // BFS references the edge relation at every depth, and re-deriving
-      // the groupBy+explode+distinct subtree per hop cost ~2× the whole
-      // query (sf0.1 min-of-two 7.0 s lazy vs 3.6 s checkpointed; 3.9 s
-      // baseline before the coPurchase reshape).
+      // the derived co-purchase edges are pinned: the undirected edge list
+      // reads them in both orientations, and each read would re-derive the
+      // groupBy+explode+distinct subtree over lineitem
       val co = graft.Materialize.once(PropertyGraph.coPurchase(s, d))
       val undirected = co.select(col("a").as("src"), col("b").as("dst"))
         .union(co.select(col("b").as("src"), col("a").as("dst")))

@@ -504,7 +504,7 @@ object SqlOps {
             | WHERE doc_id < 50 ORDER BY doc_id""".stripMargin.replace("\n", ""))),
 
     // ---- TRAVERSE statement (grammar SQLParser.g4:220-229, executor
-    //      BreadthFirstTraverseStep.java:34): BFS frontier loop from the
+    //      BreadthFirstTraverseStep.java:34): BFS supersteps from the
     //      seed set, min reach depth per vertex; out() with no edge type
     //      follows every edge label ----
     Q("q_sql_traverse",

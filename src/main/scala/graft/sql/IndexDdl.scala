@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
   * whose WHERE carries a range/equality on the indexed column reads only
   * the manifest-hit files; everything else about the plan is unchanged
   * (the full WHERE still applies as a residual filter). At 100 TB this is
-  * exactly Delta/Iceberg data skipping: the manifest consult is a tiny
-  * distributed job, never a driver materialization of the file list.
+  * exactly Delta/Iceberg data skipping: as in their logs, the manifest is
+  * one row per file, the size of the file list the driver plans the scan
+  * from anyway, so [[StatsStore]] keeps its rows on the driver and picks
+  * the files there, with no Spark job.
   */
 object IndexDdl {
 

@@ -1,6 +1,6 @@
 package graft.sql
 
-import graft.graph.{Fixpoint, PropertyGraph}
+import graft.graph.{GraphAlgos, PropertyGraph}
 import graft.sql.Ast.Expr
 import graft.sql.Parser.{ParseException, TEof, TStr}
 import org.apache.spark.sql.DataFrame
@@ -14,12 +14,12 @@ import org.apache.spark.sql.functions._
   *   FROM <vertexType> [WHERE <seed filter>] [MAXDEPTH n]
   *
   * Seeds are the FROM type's vertices passing WHERE (bare identifiers are
-  * the vertex's own properties); the traversal is the distributed BFS
-  * frontier loop in [[PropertyGraph.traverse]] — per-depth distinct-join
-  * expansion, not the reference's single-node iterator stack — and emits
-  * one row per reached vertex with its first (minimum) reach depth, the
-  * breadth-first contract of the reference's BreadthFirstTraverseStep.
-  * Result: (key, label, depth) ordered by (depth, label, key).
+  * the vertex's own properties); the traversal is [[PropertyGraph.traverse]]
+  * — GraphX supersteps, one per depth, not the reference's single-node
+  * iterator stack — and emits one row per reached vertex with its first
+  * (minimum) reach depth, the breadth-first contract of the reference's
+  * BreadthFirstTraverseStep. Result: (key, label, depth) ordered by
+  * (depth, label, key).
   */
 object Traverse {
 
@@ -100,37 +100,24 @@ object Traverse {
   }
 
   /** STRATEGY DEPTH_FIRST: emit in DFS pre-order. Each vertex keeps the
-    * lexicographically-least id-path that first reaches it; sorting by
-    * that path IS pre-order on a tree (the contract the reference's
-    * depthFirstOrder test pins — sibling order is unspecified there, ours
-    * is by id). Set-oriented: one distinct-join expansion per level, a
-    * [[Fixpoint]] round run until the frontier dies, the path array doing
-    * the ordering work a traversal stack does on a single node — no
-    * driver-side iteration over rows. The visited set is the union of the
-    * pinned levels. */
+    * lexicographically-least id-path among those that first reach it;
+    * sorting by that path IS pre-order on a tree (the contract the
+    * reference's depthFirstOrder test pins — sibling order is unspecified
+    * there, ours is by id). Set-oriented: [[GraphAlgos.traversePaths]]
+    * relaxes the paths one superstep per level, the path array doing the
+    * ordering work a traversal stack does on a single node — no driver-side
+    * iteration over rows. A walk that reaches depth `MaxLevels` with no
+    * MAXDEPTH/WHILE bound at or below it fails rather than return a
+    * truncated order. */
   private def depthFirst(g: PropertyGraph, seeds: DataFrame, st: TraverseStmt): DataFrame = {
-    val e0 = st.edgeLabel.foldLeft(g.edges)((d, l) => d.filter(col("label") === l))
-    val edges = (st.direction match {
-      case "out"  => e0.select(col("src"), col("dst"))
-      case "in"   => e0.select(col("dst").as("src"), col("src").as("dst"))
-      case _      => e0.select(col("src"), col("dst"))
-        .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-    }).alias("e")
-    val MaxPasses = 64
-    val seed = seeds.select(col("id"), array(col("id")).as("__path"))
-    val walk = Fixpoint(seed, Fixpoint.Until(math.min(st.maxDepth, MaxPasses)),
-        Some(Fixpoint.Merge(Some(seed), (level, _) => level))) { r =>
-      r.prev.alias("f")
-        .join(edges, col("f.id") === col("e.src"))
-        .select(col("e.dst").as("id"),
-          concat(col("f.__path"), array(col("e.dst"))).as("__path"))
-        .join(r.acc.get.select(col("id").as("__vid")), col("id") === col("__vid"), "left_anti")
-        .groupBy("id").agg(min(col("__path")).as("__path"))
-    }
-    if (walk.cutOff && st.maxDepth > MaxPasses)
+    val MaxLevels = 64
+    val paths = GraphAlgos.traversePaths(seeds,
+      st.edgeLabel.foldLeft(g.edges)((d, l) => d.filter(col("label") === l)),
+      math.min(st.maxDepth, MaxLevels), st.direction)
+    if (st.maxDepth > MaxLevels && !paths.filter(size(col("path")) > MaxLevels).isEmpty)
       throw new IllegalStateException(
-        s"TRAVERSE DEPTH_FIRST exceeded $MaxPasses levels; bound it with MAXDEPTH/WHILE")
-    walk.out
+        s"TRAVERSE DEPTH_FIRST exceeded $MaxLevels levels; bound it with MAXDEPTH/WHILE")
+    paths.withColumnRenamed("path", "__path")
       .join(g.vertices, "id")
       .select(col("key"), col("label"), (size(col("__path")) - 1).as("depth"), col("__path"))
       .orderBy("__path")

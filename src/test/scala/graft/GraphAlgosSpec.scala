@@ -5,14 +5,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.graph.GraphAlgos
+import graft.graph.{GraphAlgos, PropertyGraph}
 
-/** SSSP, A*, label propagation and walk counts against plain-Scala
-  * references on one small graph with integer ids, and what each call
-  * costs: Spark jobs, and the RDDs it leaves cached or uncaches. */
+/** BFS traversal, SSSP, A*, label propagation and walk counts against
+  * plain-Scala references on one small graph with integer ids (plus a few
+  * graphs built for a traversal case), and what each call costs: Spark
+  * jobs, and the RDDs it leaves cached or uncaches. */
 class GraphAlgosSpec extends AnyFunSuite {
   import TestSession._
   import spark.implicits._
+
+  /** Spark jobs a traversal runs besides one message check per superstep,
+    * as measured under `local[4]`: 2 (the pin and the collect), or up to 4
+    * when a check, Pregel's `take(1)`, finds the first partition empty and
+    * scans the rest in a second job. */
+  private val BfsJobs = 4
 
   private val vs = 1 to 7
   /** 3 -> 2 twice; 4 and 7 are sinks; 9 and 8 are not vertices, and
@@ -49,6 +56,100 @@ class GraphAlgosSpec extends AnyFunSuite {
 
   private def typeOf(df: DataFrame, c: String): DataType = df.schema(c).dataType
 
+  /** The hops `pairs` (src, dst) allow walking in `direction`. */
+  private def hops(pairs: Seq[(Int, Int)], direction: String): Seq[(Int, Int)] = direction match {
+    case "out" => pairs
+    case "in" => pairs.map(_.swap)
+    case _ => pairs ++ pairs.map(_.swap)
+  }
+
+  /** Vertex -> first reach depth from `seeds` within `maxDepth` hops. */
+  private def bfs(seeds: Set[Int], pairs: Seq[(Int, Int)], maxDepth: Int, direction: String): Map[Int, Int] = {
+    var depth = seeds.map(_ -> 0).toMap
+    var frontier = seeds
+    var d = 0
+    while (frontier.nonEmpty && d < maxDepth) {
+      d += 1
+      frontier = hops(pairs, direction).collect { case (a, b) if frontier(a) && !depth.contains(b) => b }.toSet
+      depth ++= frontier.map(_ -> d)
+    }
+    depth
+  }
+
+  /** Vertex -> kept path from `seed`, level by level: a vertex first
+    * reached at depth d keeps the least of its depth-(d − 1) neighbours'
+    * kept paths, extended by itself. */
+  private def levelPaths(seed: Int, pairs: Seq[(Int, Int)], direction: String): Map[Int, Seq[Int]] = {
+    val order = Ordering.Implicits.seqOrdering[Seq, Int]
+    var paths = Map(seed -> Seq(seed))
+    var frontier = Set(seed)
+    while (frontier.nonEmpty) {
+      val next = hops(pairs, direction).collect {
+        case (a, b) if frontier(a) && !paths.contains(b) => b -> (paths(a) :+ b)
+      }.groupMapReduce(_._1)(_._2)(order.min)
+      paths ++= next
+      frontier = next.keySet
+    }
+    paths
+  }
+
+  test("traverse: least reach depth along out, in and both edges, label-filtered too, ids' type kept") {
+    val labelled = es.map { case (a, b, w) => (a, b, if (w < 1.0) "light" else "heavy") }
+    val g = PropertyGraph(vertices.withColumn("label", lit("v")), labelled.toDF("src", "dst", "label"))
+    for (direction <- Seq("out", "in", "both"); label <- Seq(None, Some("heavy"));
+         (seeds, maxDepth) <- Seq((Set(1), 2), (Set(3, 6), Int.MaxValue))) {
+      val pairs = labelled.collect { case (a, b, l) if label.forall(_ == l) => (a, b) }
+      val expected = bfs(seeds, pairs, maxDepth, direction)
+      val (out, jobs) = call(pins = 1) {
+        val df = g.traverse(seeds.toSeq.toDF("id"), maxDepth, direction, label)
+        (df, df.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
+      }
+      assert(out._2 == expected, s"$direction from $seeds within $maxDepth along $label")
+      assert(typeOf(out._1, "id") == IntegerType && typeOf(out._1, "depth") == IntegerType)
+      // the last superstep is the one whose check finds no message
+      val supersteps = math.min(maxDepth, expected.values.max + 1)
+      assert(jobs <= supersteps + BfsJobs, s"traverse: $jobs Spark jobs for $supersteps supersteps")
+    }
+    assert(bfs(Set(1), es.map(e => (e._1, e._2)), 2, "out")(4) == 2) // through 9, which is not a vertex
+  }
+
+  test("traverse: a seed with no edges, MAXDEPTH 0 (seeds only) and an unbounded walk around a cycle") {
+    // 0 -> 1 -> 2 -> 3 -> 4 -> 0, and 4 -> 7 off the cycle
+    val cycle = (0 until 5).map(i => (i, (i + 1) % 5)) :+ (4, 7)
+    val edgeFrame = cycle.toDF("src", "dst")
+    def run(seeds: Seq[Int], maxDepth: Int, direction: String, e: DataFrame = edgeFrame) =
+      call(pins = 1)(GraphAlgos.traverse(seeds.toDF("id"), e, maxDepth, direction)
+        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)._1
+    assert(run(Seq(42), 3, "both") == Map(42 -> 0))
+    assert(run(Seq(1), 3, "out", edgeFrame.filter(lit(false))) == Map(1 -> 0))
+    assert(run(Seq(0, 2), 0, "out") == Map(0 -> 0, 2 -> 0))
+    for (direction <- Seq("out", "in", "both"))
+      assert(run(Seq(0), Int.MaxValue, direction) == bfs(Set(0), cycle, Int.MaxValue, direction), direction)
+    assert(bfs(Set(0), cycle, Int.MaxValue, "out")(7) == 5)
+  }
+
+  test("traversePaths keeps the least path of a vertex's first reach depth, not the least path overall") {
+    // 5 is reached by 0 -> 5 and by 0 -> 1 -> 2 -> 5, the lexicographically
+    // least path; 6 extends the path 5 keeps
+    val pairs = Seq((0, 5), (0, 1), (1, 2), (2, 5), (5, 6))
+    def run(seed: Int, pairs: Seq[(Int, Int)], direction: String) = call(pins = 1) {
+      val df = GraphAlgos.traversePaths(Seq(seed).toDF("id"), pairs.toDF("src", "dst"), Int.MaxValue, direction)
+      (typeOf(df, "id"), df.collect().map(r => r.getInt(0) -> r.getSeq[Long](1).map(_.toInt)).toMap)
+    }._1
+    val kept = Map(0 -> Seq(0), 1 -> Seq(0, 1), 5 -> Seq(0, 5), 2 -> Seq(0, 1, 2), 6 -> Seq(0, 5, 6))
+    assert(levelPaths(0, pairs, "out") == kept)
+    assert(run(0, pairs, "out") == (IntegerType, kept))
+    val inner = es.map(e => (e._1, e._2))
+    for (direction <- Seq("out", "in", "both"); seed <- Seq(1, 4))
+      assert(run(seed, inner, direction)._2 == levelPaths(seed, inner, direction), s"$direction from $seed")
+    // TRAVERSE DEPTH_FIRST emits in pre-order of the kept paths
+    val g = PropertyGraph((0 to 6).map(i => (i.toLong, "n", i.toLong)).toDF("id", "label", "key"),
+      pairs.map { case (a, b) => (a.toLong, b.toLong, "e") }.toDF("src", "dst", "label"))
+    val order = graft.sql.Traverse.query(g, "TRAVERSE out() FROM n WHERE key = 0 STRATEGY DEPTH_FIRST")
+      .collect().map(r => r.getAs[Long]("key") -> r.getAs[Int]("depth")).toSeq
+    assert(order == Seq(0L -> 0, 1L -> 1, 2L -> 2, 5L -> 1, 6L -> 2))
+  }
+
   test("weightedSssp is least cost over paths of at most iters edges, outside vertices too") {
     for (iters <- Seq(1, 3)) {
       val (out, jobs) = call(pins = 1) {
@@ -57,8 +158,8 @@ class GraphAlgosSpec extends AnyFunSuite {
       }
       assert(out._2 == bellmanFord(1, iters))
       assert(typeOf(out._1, "id") == IntegerType)
-      // Pregel: one message count per superstep and one before, then the pin
-      assert(jobs <= iters + 3, s"weightedSssp: $jobs Spark jobs")
+      // at most one message check per superstep, the pin and the collect
+      assert(jobs <= iters + 2, s"weightedSssp: $jobs Spark jobs")
     }
     assert(bellmanFord(1, 3)(4) == 2.0) // through 9, which is not a vertex
   }
