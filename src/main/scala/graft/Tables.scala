@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType, TimestampNTZType, TimestampType}
@@ -16,9 +16,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType, TimestampN
 object Tables {
   /** Parquet schema memo. `spark.read.parquet(dir)` without a schema runs
     * a one-task footer-inference job on every call, and a mutation reads
-    * its table several times (the table, its stats manifest, the reads
-    * after it). An entry is keyed on the directory's listing (name, length
-    * and mtime of every non-hidden entry, one driver-side `listStatus`) and
+    * its table several times (the table, its pre-image, the reads after
+    * it). An entry is keyed on the directory's [[listing]] and
     * on the session confs that change how parquet types convert, so a read
     * of an unchanged state reuses the inferred schema. Any rewrite changes
     * the listing, because Spark part-file names are unique per write, so the
@@ -39,20 +38,26 @@ object Tables {
     * glob (the listing fails), a listing with no data file (keeps Spark's
     * own "unable to infer schema" error), or one with subdirectories (a
     * partitioned store, whose schema also carries partition columns). */
-  private def stamp(spark: SparkSession, path: String): Option[Stamp] = {
-    val listed =
-      try {
-        val p = new Path(path)
-        Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    listed
-      .map(_.filterNot(_.getPath.getName.startsWith(".")))
+  private def stamp(spark: SparkSession, path: String): Option[Stamp] =
+    listing(spark, path)
       .filter(sts => !sts.exists(_.isDirectory) &&
         sts.exists(!_.getPath.getName.startsWith("_")))
-      .map(sts => Stamp(
-        sts.map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).sortBy(_._1),
-        SchemaConfs.map(spark.conf.getOption)))
-  }
+      .map(sts => Stamp(entries(sts), SchemaConfs.map(spark.conf.getOption)))
+
+  /** The entries of `path` except `.` names (checksum and temporary
+    * files), sorted by name, from one driver-side `listStatus`; None when
+    * `path` cannot be listed (a missing path or a glob). Every memo of a
+    * directory's state is keyed on its [[entries]]. */
+  private[graft] def listing(spark: SparkSession, path: String): Option[Seq[FileStatus]] =
+    try {
+      val p = new Path(path)
+      Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+        .filterNot(_.getPath.getName.startsWith(".")).sortBy(_.getPath.getName))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Name, length and mtime of each entry of a [[listing]]. */
+  private[graft] def entries(sts: Seq[FileStatus]): Seq[(String, Long, Long)] =
+    sts.map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
 
   /** The schema `spark.read.parquet(dir)` infers, from the memo when the
     * directory's listing is unchanged; None when `dir` is not memoizable
@@ -64,24 +69,27 @@ object Tables {
       if (hit != null && hit._1 == st) hit._2
       else {
         val s = spark.read.parquet(dir).schema
-        if (stamp(spark, dir).contains(st)) {
-          if (schemaMemo.size >= MemoCap) schemaMemo.clear()
-          schemaMemo.put(dir, (st, s))
-        }
+        if (stamp(spark, dir).contains(st)) put(dir, st, s)
         s
       }
     }
+
+  private def put(dir: String, st: Stamp, s: StructType): Unit = {
+    if (schemaMemo.size >= MemoCap) schemaMemo.clear()
+    schemaMemo.put(dir, (st, s))
+  }
+
+  /** Memoize the schema of the state its writer just published at `dir`,
+    * written from a frame of schema `schema`, so the next read infers
+    * nothing. Spark records that schema in every parquet footer it
+    * writes, inference returns it, and a read makes either nullable. */
+  private[graft] def remember(spark: SparkSession, dir: String, schema: StructType): Unit =
+    stamp(spark, dir).foreach(put(dir, _, schema))
 
   /** Parquet read of `path` that infers its schema once per table state
     * (see [[schemaMemo]]). */
   def readCached(spark: SparkSession, path: String): DataFrame =
     schemaOf(spark, path).fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
-
-  /** Read some of `dir`'s files with the schema of the whole directory, so
-    * a pruned read has the shape of the full one and infers nothing when
-    * the directory's state is memoized. */
-  def readFiles(spark: SparkSession, dir: String, files: Seq[String]): DataFrame =
-    schemaOf(spark, dir).fold(spark.read.parquet(files: _*))(s => spark.read.schema(s).parquet(files: _*))
 
   /** Table paths resolve through the [[graft.schema.TypeCatalog]] (the
     * LocalSchema analog) — no caller hard-codes physical locations. */

@@ -77,63 +77,57 @@ final class MutableGraph(val spark: SparkSession, vDir: String, eDir: String) {
 
   /** SET v.prop = expr on vertices whose id ∈ `ids`. Set expressions are
     * Columns over the vertex row's own properties. */
-  def setVertexProps(ids: DataFrame, sets: Seq[(String, Column)]): Unit = {
-    val keys = ids.select(col("id").as("__set_id")).distinct()
-    val marked = vertices.join(broadcast(keys), col("id") === col("__set_id"), "left_outer")
-    val next = sets.foldLeft(marked) { case (d, (p, c)) =>
-      // a property the schema has never seen extends it (schema-flexible
-      // records): untouched rows hold null, not an unresolved column
-      val prev = if (d.columns.contains(p)) col(p) else lit(null)
-      d.withColumn(p, when(col("__set_id").isNotNull, c).otherwise(prev))
-    }.drop("__set_id")
-    overwriteV(next)
-  }
+  def setVertexProps(ids: DataFrame, sets: Seq[(String, Column)]): Unit =
+    overwriteV(setMarked(vertices, "id", ids.select(col("id").as("__set_id")).distinct(), "__set_id", sets))
 
   /** SET v.prop = <per-row value>: `updates` carries `__set_id` plus one
     * column per property, one row per horizon binding. Rows reduce to one
     * per id (last wins — openCypher leaves multi-binding SET order
     * unspecified); untouched vertices keep their values. */
-  def setVertexPropsValues(updates: DataFrame): Unit = {
-    val props = updates.columns.filterNot(_ == "__set_id").toSeq
-    val aggs = props.map(p => last(col(p)).as(s"__upd_$p"))
-    val one = updates.groupBy(col("__set_id")).agg(aggs.head, aggs.tail: _*)
-    val marked = vertices.join(broadcast(one), col("id") === col("__set_id"), "left_outer")
-    val next = props.foldLeft(marked) { (d, p) =>
-      val prev = if (d.columns.contains(p)) col(p) else lit(null)
-      d.withColumn(p, when(col("__set_id").isNotNull, col(s"__upd_$p")).otherwise(prev))
-    }.drop("__set_id" +: props.map(p => s"__upd_$p"): _*)
-    overwriteV(next)
-  }
+  def setVertexPropsValues(updates: DataFrame): Unit =
+    overwriteV(setValues(vertices, "id", "__set_id", updates))
 
   /** SET r.prop = <per-row value> on relationships: `updates` carries
     * `__set_eid` plus one column per property (last wins per edge). */
   def setEdgePropsValues(updates: DataFrame): Unit = {
-    val props = updates.columns.filterNot(_ == "__set_eid").toSeq
-    val aggs = props.map(p => last(col(p)).as(s"__upd_$p"))
-    val one = updates.groupBy(col("__set_eid")).agg(aggs.head, aggs.tail: _*)
     if (!edges.columns.contains("_eid")) {
       if (edges.isEmpty) return // nothing to update (null-rel no-op SET)
       throw new IllegalStateException("edge store has no _eid identity column")
     }
-    val marked = edges.join(broadcast(one), col("_eid") === col("__set_eid"), "left_outer")
-    val next = props.foldLeft(marked) { (d, p) =>
+    overwriteE(setValues(edges, "_eid", "__set_eid", updates))
+  }
+
+  /** `store` with each property of `updates` (every column but `marker`)
+    * set on the rows whose `idCol` equals a `marker` value, one row per id
+    * (last wins). */
+  private def setValues(store: DataFrame, idCol: String, marker: String,
+      updates: DataFrame): DataFrame = {
+    val props = updates.columns.filterNot(_ == marker).toSeq
+    val aggs = props.map(p => last(col(p)).as(s"__upd_$p"))
+    val one = updates.groupBy(col(marker)).agg(aggs.head, aggs.tail: _*)
+    setMarked(store, idCol, one, marker, props.map(p => p -> col(s"__upd_$p")))
+      .drop(props.map(p => s"__upd_$p"): _*)
+  }
+
+  /** `store` with `sets` applied to the rows whose `idCol` equals a
+    * `marker` value of the broadcast `keys` (distinct on `marker`); the
+    * other rows keep their values. A property the schema has never seen
+    * extends it (schema-flexible records): untouched rows hold null, not
+    * an unresolved column. */
+  private def setMarked(store: DataFrame, idCol: String, keys: DataFrame, marker: String,
+      sets: Seq[(String, Column)]): DataFrame = {
+    val marked = store.join(broadcast(keys), col(idCol) === col(marker), "left_outer")
+    sets.foldLeft(marked) { case (d, (p, c)) =>
       val prev = if (d.columns.contains(p)) col(p) else lit(null)
-      d.withColumn(p, when(col("__set_eid").isNotNull, col(s"__upd_$p")).otherwise(prev))
-    }.drop("__set_eid" +: props.map(p => s"__upd_$p"): _*)
-    overwriteE(next)
+      d.withColumn(p, when(col(marker).isNotNull, c).otherwise(prev))
+    }.drop(marker)
   }
 
   /** SET v:Label / REMOVE v:Label on the vertices in `ids`: the label
     * column holds a ":"-joined sorted label set. */
-  def setVertexLabels(ids: DataFrame, add: Seq[String], remove: Seq[String]): Unit = {
-    val keys = ids.select(col("id").as("__lbl_id")).distinct()
-    val marked = vertices.join(broadcast(keys), col("id") === col("__lbl_id"), "left_outer")
-    val next = marked.withColumn("label",
-      when(col("__lbl_id").isNotNull,
-        MutableGraph.labelSetCol(col("label"), add, remove))
-        .otherwise(col("label"))).drop("__lbl_id")
-    overwriteV(next)
-  }
+  def setVertexLabels(ids: DataFrame, add: Seq[String], remove: Seq[String]): Unit =
+    overwriteV(setMarked(vertices, "id", ids.select(col("id").as("__set_id")).distinct(), "__set_id",
+      Seq("label" -> MutableGraph.labelSetCol(col("label"), add, remove))))
 
   /** DELETE / DETACH DELETE: remove the vertices; with `detach`, incident
     * edges go first (the reference refuses a non-detach delete of a

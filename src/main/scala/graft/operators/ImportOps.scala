@@ -238,7 +238,7 @@ object ImportOps {
         |FROM events WHERE user_id BETWEEN 40 AND 49
         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
       val dir = stateDir("statsstore", d)
-      graft.sources.LayoutOnce.ensure(dir, graft.sources.LayoutOnce.srcFingerprint(s"$d/events.parquet"), "stats-user_id-f16-v2") {
+      graft.sources.LayoutOnce.ensure(dir, graft.sources.LayoutOnce.srcFingerprint(s"$d/events.parquet"), "stats-user_id-f16-v3") {
         graft.sources.StatsStore.write(
           Tables.events(s, d).select("event_id", "ts", "user_id", "event_type", "value"),
           dir, "user_id", numFiles = 16)
@@ -354,7 +354,7 @@ object ImportOps {
         |WHERE user_id BETWEEN 3 AND 5 OR event_id BETWEEN 100 AND 140
         |ORDER BY event_id""".stripMargin) { (s, d) =>
       val dir = stateDir("zorder", d)
-      graft.sources.LayoutOnce.ensure(dir, graft.sources.LayoutOnce.srcFingerprint(s"$d/events.parquet"), "zorder-user_id-event_id-f16-v2") {
+      graft.sources.LayoutOnce.ensure(dir, graft.sources.LayoutOnce.srcFingerprint(s"$d/events.parquet"), "zorder-user_id-event_id-f16-v3") {
         graft.sources.StatsStore.writeZOrdered(
           Tables.events(s, d).select("event_id", "user_id", "value"),
           dir, "user_id", "event_id", numFiles = 16)

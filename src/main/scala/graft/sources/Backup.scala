@@ -37,33 +37,27 @@ object Backup {
   /** Filesystem-level snapshot of table directories — the TRANSACTION
     * fast path (reference TransactionContext page snapshots, not the
     * BACKUP DATABASE statement: that one stays a distributed job with a
-    * row-count manifest, [[backup]]). A tx snapshot copies the parquet
-    * files as files: no Spark jobs, no schema pass — byte-identical
-    * restore. A table's stats manifest ([[StatsStore]]) names its files,
-    * so it is part of the table's state: it is copied to
-    * `snapDir/<name>-manifest` when present. State dirs are single-FS by
-    * construction here; on a cluster the same operation is a DFS
-    * directory copy. */
+    * row-count manifest, [[backup]]). A tx snapshot copies the files of
+    * each table directory as files: no Spark jobs, no schema pass —
+    * byte-identical restore. A table's stats manifest ([[StatsStore]]) is
+    * one of those files, so it is snapshotted with the data it describes.
+    * State dirs are single-FS by construction here; on a cluster the same
+    * operation is a DFS directory copy. */
   def snapshotFiles(tables: Map[String, String], snapDir: String): Unit = {
     val root = Paths.get(snapDir)
     deleteRecursive(root)
-    tables.foreach { case (name, dir) =>
-      mirror(Paths.get(dir), root.resolve(name))
-      mirror(Paths.get(StatsStore.manifestDir(dir)), root.resolve(s"$name-manifest"))
-    }
+    tables.foreach { case (name, dir) => mirror(Paths.get(dir), root.resolve(name)) }
   }
 
-  /** Inverse of [[snapshotFiles]]: replace each target dir and its stats
-    * manifest with the snapshot's copies (a manifest the snapshot lacks is
-    * removed, since it names files the restore took away), and drop
-    * Spark's cached file listings for the restored paths. */
+  /** Inverse of [[snapshotFiles]]: replace each target dir's files, its
+    * stats manifest included, with the snapshot's copies, and drop Spark's
+    * cached file listings for the restored paths. */
   def restoreFiles(spark: SparkSession, snapDir: String,
       targets: Map[String, String]): Unit =
     targets.foreach { case (name, dir) =>
       val src = Paths.get(snapDir).resolve(name)
       require(Files.isDirectory(src), s"table $name not in tx snapshot")
       mirror(src, Paths.get(dir))
-      mirror(Paths.get(snapDir).resolve(s"$name-manifest"), Paths.get(StatsStore.manifestDir(dir)))
       spark.catalog.refreshByPath(dir)
     }
 

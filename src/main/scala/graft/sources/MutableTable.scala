@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * `keyCol` is the change-feed key: when it is set, every mutation
   * appends the keys of the rows it changes to the feed ([[changeFeed]]).
   * A stats manifest on the table is [[StatsStore]]'s: every rewrite goes
-  * through [[StatsStore.overwrite]], which keeps it in step, and the pruned
-  * write path below takes its key from it.
+  * through [[StatsStore.overwrite]], which stages it with the data, and
+  * the pruned write path below takes its key from it.
   */
 final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String] = None) {
 
@@ -75,7 +75,6 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
   // before/after create-update-delete listeners + Delta CDF shape).
   // Each mutation appends (seq, op, key) rows; consumers read the feed
   // ordered by seq — the hook a downstream trigger would subscribe to.
-  private var cdfSeq = 0
   private def cdfDir = s"$dir-cdf"
 
   // ---- triggers (reference schema/trigger/TriggerImpl.java + the event/
@@ -100,18 +99,21 @@ final class MutableTable(spark: SparkSession, dir: String, keyCol: Option[String
   private def fireBefore(event: String, rows: DataFrame): Unit =
     fire(s"before_$event", rows)
 
-  /** The feed write evaluates `keys` immediately and runs BEFORE the
-    * table swap, so it may read `dir` safely without a materialization of
-    * its own. */
+  /** A mutation's rows go to directory `seq=<n>` of the feed, `n` one past
+    * the greatest on disk, so every handle on `dir`, in any session,
+    * continues one feed. The write evaluates `keys` immediately and runs
+    * BEFORE the table swap, so it may read `dir` without a materialization
+    * of its own. */
   private def emitChanges(op: String, keys: DataFrame): Unit =
     keyCol.foreach { k =>
-      cdfSeq += 1
-      keys.select(lit(cdfSeq).as("seq"), lit(op).as("op"), col(k).cast("long").as("key"))
-        .write.mode(if (cdfSeq == 1) "overwrite" else "append").parquet(cdfDir)
+      val seq = graft.Tables.listing(spark, cdfDir).getOrElse(Nil).map(_.getPath.getName)
+        .collect { case s"seq=$n" => n.toInt }.maxOption.getOrElse(0) + 1
+      keys.select(lit(op).as("op"), col(k).cast("long").as("key")).write.parquet(s"$cdfDir/seq=$seq")
     }
 
   /** The accumulated change feed: (seq, op, key). */
-  def changeFeed: DataFrame = graft.Tables.readCached(spark, cdfDir)
+  def changeFeed: DataFrame =
+    spark.read.schema("op STRING, key BIGINT, seq INT").parquet(cdfDir).select("seq", "op", "key")
 
   /** INSERT … VALUES / FROM SELECT. */
   def insert(rows: DataFrame): Long = {
@@ -290,10 +292,12 @@ object MutableTable {
 
   /** Fresh writable copy of `source` at `dir` (TRUNCATE+INSERT FROM
     * SELECT), published through the one table rewrite. `keyCol` enables
-    * the change feed. */
+    * the change feed, which starts empty. */
   def copyOf(spark: SparkSession, source: DataFrame, dir: String,
       keyCol: Option[String] = None): MutableTable = {
     StatsStore.overwrite(source, dir)
+    val feed = new org.apache.hadoop.fs.Path(s"$dir-cdf")
+    feed.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(feed, true)
     new MutableTable(spark, dir, keyCol)
   }
 }

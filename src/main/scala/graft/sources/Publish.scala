@@ -3,11 +3,11 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-safe directory publish under [[StatsStore.overwrite]], the one
-  * table rewrite every writer calls. A delete-then-rename
-  * swap has a window — between `fs.delete(dir)` and
-  * `fs.rename(staging, dir)` — where a crash or a cross-filesystem rename
-  * failure leaves NO table at `dir` and no recovery copy; this protocol
-  * never does.
+  * table rewrite every writer calls; one swap publishes the data files
+  * and the stats manifest staged beside them. A delete-then-rename swap
+  * has a window — between `fs.delete(dir)` and `fs.rename(staging, dir)`
+  * — where a crash or a cross-filesystem rename failure leaves NO table
+  * at `dir` and no recovery copy; this protocol never does.
   *
   * Protocol: rename the live dir aside (`dir` → `dir-old`), rename
   * `staging` → `dir`, delete `dir-old`. Every intermediate state keeps a
@@ -22,19 +22,23 @@ object Publish {
     org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create(dir), spark.sparkContext.hadoopConfiguration)
 
-  /** Publish `next` as the new state of `dir`: write to `dir-staging`,
-    * then swap staging into place. The write itself still reads the
-    * intact current state, so `next` may derive from `dir` and the
-    * mutation costs one distributed materialization, not two (no
-    * checkpoint to decouple `next` from the directory it replaces). */
-  def overwrite(next: DataFrame, dir: String): Unit = {
+  /** Publish `next` as the new state of `dir`. */
+  def overwrite(next: DataFrame, dir: String): Unit =
+    swapIn(next.sparkSession, stage(next, dir), dir)
+
+  /** Write `next` to `dir`'s staging directory, and return its path. The
+    * write still reads the intact current state, so `next` may derive
+    * from `dir` and the mutation costs one distributed materialization,
+    * not two (no checkpoint to decouple `next` from the directory it
+    * replaces). */
+  private[sources] def stage(next: DataFrame, dir: String): String = {
     val staging = s"$dir-staging"
     next.write.mode("overwrite").parquet(staging)
-    swapIn(next.sparkSession, staging, dir)
+    staging
   }
 
   /** Swap an already-written `staging` directory into place at `dir`. */
-  private def swapIn(spark: SparkSession, staging: String, dir: String): Unit = {
+  private[sources] def swapIn(spark: SparkSession, staging: String, dir: String): Unit = {
     val fs = fsFor(spark, dir)
     val pDir = new org.apache.hadoop.fs.Path(dir)
     val pStg = new org.apache.hadoop.fs.Path(staging)

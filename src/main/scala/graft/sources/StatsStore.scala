@@ -1,12 +1,17 @@
 package graft.sources
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,141 +20,152 @@ import org.apache.spark.sql.types._
   * (index/lsm/LSMTreeIndex.java:78 range scans, exec/FetchFromIndexStep.java;
   * SURVEY.md §4.1, §4.3), and Delta/Iceberg-style file stats.
   *
-  * The manifest of `dir` lives at `$dir-manifest`: one row per data file,
-  * `file` (its path), `cnt` (its rows), and `min` / `max`, two structs with
-  * one field per key holding the file's least and greatest value of that
-  * key. The struct fields name the keys, so the manifest says which columns
-  * it describes. One key means a range-clustered layout (each file covers a
-  * narrow key range, the sorted-run property an LSM level has on disk); two
-  * keys mean a Z-order layout, which skips files on either key. StatsStore
-  * alone reads and writes the manifest: every rewrite of a table goes
-  * through [[overwrite]], which rebuilds it, and every keyed write patches
-  * it.
+  * The manifest of `dir` is one file inside it, [[StatsFile]]: the table's
+  * data schema, the keys it describes and, per data file, its name
+  * relative to `dir`, its rows and its least and greatest value of each
+  * key. One key means a range-clustered layout (each file covers a narrow
+  * key range, the sorted-run property an LSM level has on disk); two keys
+  * mean a Z-order layout, which skips files on either key. A rewrite
+  * stages the manifest with the data, so one directory swap ([[Publish]])
+  * publishes both, and a copy of the directory carries it along. A
+  * manifest is trusted only while it names exactly the data files of
+  * `dir`: a writer that bypasses StatsStore leaves it unused, not stale.
   *
-  * The manifest's rows live on the driver: one row per file, O(files)
-  * driver state, the size of the file list a table-format commit writes
-  * anyway. They are memoized per table and keyed on the manifest
-  * directory's listing, so a manifest this JVM wrote or read before costs
-  * one `listStatus` and no Spark job; any rewrite of the manifest changes
-  * the listing (Spark part-file names are unique per write), so a stale
-  * copy is never served.
-  *
-  * Read path: a range predicate on a key the manifest covers picks, on the
-  * driver, the files whose [min, max] intersects the range, and reads ONLY
-  * those. A distributed pass over a manifest of a few rows would cost two
-  * Spark jobs to return what the driver already holds. Partition pruning
+  * The driver reads and writes the file through the directory's Hadoop
+  * FileSystem, with no Spark job, and memoizes it keyed on the directory's
+  * listing ([[graft.Tables.listing]]), which any rewrite changes (Spark
+  * part-file names are unique per write). Its entries are O(files), the
+  * size of the file list a table-format commit writes anyway. A range scan
+  * picks its files on the driver and reads them with the recorded schema,
+  * so it runs no job until its frame is read. Partition pruning
   * (bucket_date in [[TimeSeriesStore]]) handles time; this handles any
   * OTHER clustered key.
   *
   * New files are statted from their parquet footers on the driver: the
   * row count is the sum of the row groups', and an integral key's min/max
-  * comes from the column-chunk statistics the writer already recorded, so
-  * statting reads no data. A key of another type, or a file whose chunks
-  * carry no statistics, is statted by a per-file aggregate job instead.
-  *
-  * Keyed writes ([[mergeSet]], [[mergeDelete]]) patch the manifest on the
-  * driver: they pick the hit files from its rows, rewrite them, stat the
-  * new files and write the patched manifest back. On integral keys every
-  * Spark job they run writes data: the rewrite of the hit files and the
-  * manifest write. Other key types add the statting job.
+  * comes from the column-chunk statistics the writer already recorded. A
+  * key of another type, or a file whose chunks carry no statistics, is
+  * statted by a per-file aggregate job instead. So on integral keys the
+  * one Spark job of a keyed write ([[mergeSet]], [[mergeDelete]]) is the
+  * rewrite of the files it hits.
   */
 object StatsStore {
 
-  /** Where the manifest of `dir` lives. */
-  private[sources] def manifestDir(dir: String) = s"$dir-manifest"
+  /** The manifest's file in a table directory. Spark's file index skips
+    * `_` names other than the parquet summaries `_metadata` and
+    * `_common_metadata`. */
+  private val StatsFile = "_graft_stats"
 
   private def fsFor(spark: SparkSession, dir: String): FileSystem =
     FileSystem.get(java.net.URI.create(dir), spark.sparkContext.hadoopConfiguration)
 
-  private def baseName(uri: String): String = new Path(new java.net.URI(uri)).getName
+  private def paths(dir: String)(file: String): String = new Path(dir, file).toString
 
-  /** The data files of `dir` (the part files Spark writes). */
-  private def partFiles(fs: FileSystem, dir: String): Seq[FileStatus] =
-    fs.listStatus(new Path(dir)).toSeq.filter(_.getPath.getName.startsWith("part-"))
+  /** The data files of a listing: the entries Spark's file index reads. */
+  private def dataFiles(listing: Option[Seq[FileStatus]]): Seq[FileStatus] =
+    listing.getOrElse(Nil).filterNot(_.getPath.getName.startsWith("_"))
 
-  /** One manifest row: a data file, its row count, and its least and
-    * greatest value of each key (null where it holds no non-null value). */
-  private final case class FileStats(file: String, cnt: Long, min: Row, max: Row)
+  /** A data file's name, rows, and least and greatest value of each key
+    * (null where it holds no non-null value, as for a file without rows). */
+  private[graft] final case class FileStats(file: String, cnt: Long, min: Row, max: Row)
 
-  /** A manifest: its parquet schema and its rows. */
-  private final case class Manifest(schema: StructType, files: Seq[FileStats]) {
-    /** The keys it describes, in clustering order. A manifest in any other
-      * format describes none, so it is never trusted. */
-    def keys: Seq[String] = schema.find(_.name == "min").map(_.dataType) match {
-      case Some(s: StructType) => s.fieldNames.toSeq
-      case _ => Nil
-    }
+  private final case class Manifest(schema: StructType, keys: Seq[String], files: Seq[FileStats]) {
+    def keyFields: Seq[StructField] = keys.map(schema(_))
   }
 
-  /** The manifests this JVM read or wrote, per table dir, each with the
-    * listing (name, length, mtime of every non-hidden entry) of the
-    * manifest directory it was read from or written to. Rows are
-    * session-independent, so entries survive session recycling. One entry
-    * per table, and the map is emptied when it reaches [[MemoCap]] tables,
-    * as [[graft.Tables.readCached]]'s schema memo is. */
+  /** The manifest read per table dir, with the [[graft.Tables.entries]] of
+    * the listing it was read under; emptied at [[MemoCap]] tables, as
+    * [[graft.Tables.readCached]]'s schema memo is. */
   private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], Manifest)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], Option[Manifest])]()
   private val MemoCap = 1024
 
-  /** The listing of `dir`'s manifest directory, or None when it has none. */
-  private def listing(spark: SparkSession, dir: String): Option[Seq[(String, Long, Long)]] =
-    try Some(fsFor(spark, dir).listStatus(new Path(manifestDir(dir))).toSeq
-      .filterNot(_.getPath.getName.startsWith("."))
-      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).sortBy(_._1))
-    catch { case _: java.io.FileNotFoundException => None }
-
-  private def remember(dir: String, at: Seq[(String, Long, Long)], m: Manifest): Unit = {
-    if (memo.size >= MemoCap) memo.clear()
-    memo.put(dir, (at, m))
-  }
-
-  /** The manifest of `dir`, or None when `dir` has none: from the memo when
-    * its listing is unchanged, else collected (one job). A miss is
-    * remembered only if the listing did not change during the read. */
+  /** The manifest of `dir`; None when it has none, or one that does not
+    * name exactly its data files or cannot be decoded. */
   private def manifest(spark: SparkSession, dir: String): Option[Manifest] =
-    listing(spark, dir).map { at =>
+    graft.Tables.listing(spark, dir).flatMap { sts =>
+      val at = graft.Tables.entries(sts)
       val hit = memo.get(dir)
       if (hit != null && hit._1 == at) hit._2
+      else if (!sts.exists(_.getPath.getName == StatsFile)) None
       else {
-        val df = graft.Tables.readCached(spark, manifestDir(dir))
-        val m = Manifest(df.schema, Nil)
-        val read = if (m.keys.isEmpty) m else m.copy(files = df.collect().toSeq.map(fileStats))
-        if (listing(spark, dir).contains(at)) remember(dir, at, read)
-        read
+        val names = dataFiles(Some(sts)).map(_.getPath.getName)
+        val m = readStats(fsFor(spark, dir), dir).filter(_.files.map(_.file).sorted == names)
+        if (memo.size >= MemoCap) memo.clear()
+        memo.put(dir, (at, m))
+        m
       }
     }
 
   /** The keys the manifest of `dir` describes; empty when it has none. */
-  private[sources] def keys(spark: SparkSession, dir: String): Seq[String] =
+  private[graft] def keys(spark: SparkSession, dir: String): Seq[String] =
     manifest(spark, dir).fold(Seq.empty[String])(_.keys)
 
-  /** The (file, cnt, min, max) stats of `keys` per file of `df`. */
-  private def keyStats(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.groupBy(col("_metadata.file_path").as("file"))
-      .agg(count(lit(1)).as("cnt"),
-        struct(keys.map(k => min(col(k)).as(k)): _*).as("min"),
-        struct(keys.map(k => max(col(k)).as(k)): _*).as("max"))
+  /** The entries of the manifest of `dir`; empty when it has none. */
+  private[graft] def fileStats(spark: SparkSession, dir: String): Seq[FileStats] =
+    manifest(spark, dir).fold(Seq.empty[FileStats])(_.files)
 
-  /** Stats of newly written `files` (data schema `schema`) for manifest
-    * `m`. Integral keys are read from the parquet footers on the driver;
-    * otherwise one single-task aggregate job reads the files (one
-    * partition needs no shuffle before the per-file aggregate). Files
-    * holding no rows get no row, as in the aggregate. */
-  private def statNew(spark: SparkSession, files: Seq[FileStatus], schema: StructType,
-      m: Manifest): Seq[FileStats] = {
-    val keyFields = m.schema("min").dataType.asInstanceOf[StructType].fields.toSeq
-    val footers =
-      if (keyFields.forall(f => integral(f.dataType)))
-        files.map(footerStats(spark.sparkContext.hadoopConfiguration, _, keyFields))
-      else Nil
-    if (files.isEmpty) Nil
-    else if (footers.nonEmpty && footers.forall(_.isDefined)) footers.flatten.flatten
-    else keyStats(spark.read.schema(schema).parquet(files.map(_.getPath.toString): _*).coalesce(1),
-      m.keys).collect().toSeq.map(fileStats)
+  /** The stats file's JSON: the schema, the keys, and per file its name,
+    * rows, and min and max bounds as text, null for a null bound. */
+  private final case class StatsDoc(schema: String, keys: Seq[String], files: Seq[Seq[String]])
+  private val Json = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  /** Write `m` as the stats file of `dir`: to a temporary `.` name, then
+    * renamed over the file it replaces. A bound is held as Spark's cast
+    * to string in UTC, which casts back exactly for the numeric (NaN
+    * included), string, date and timestamp keys a manifest holds. */
+  private def writeStats(spark: SparkSession, dir: String, m: Manifest): Unit = {
+    val types = m.keyFields.map(_.dataType)
+    def text(b: Row) = types.indices.map(i =>
+      if (b.isNullAt(i)) null else Cast(Literal.create(b.get(i), types(i)), StringType, Some("UTC")).eval().toString)
+    val doc = StatsDoc(m.schema.json, m.keys, m.files.map(f => Seq(f.file, f.cnt.toString) ++ text(f.min) ++ text(f.max)))
+    val fs = fsFor(spark, dir)
+    val tmp = new Path(dir, s".$StatsFile.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(Json.writeValueAsBytes(doc)) finally out.close()
+    FileContext.getFileContext(fs.getUri, fs.getConf).rename(tmp, new Path(dir, StatsFile), Options.Rename.OVERWRITE)
   }
 
-  private def fileStats(r: Row): FileStats =
-    FileStats(r.getAs[String]("file"), r.getAs[Long]("cnt"), r.getAs[Row]("min"), r.getAs[Row]("max"))
+  /** The manifest in the stats file of `dir`; None when it cannot be read
+    * or decoded. */
+  private def readStats(fs: FileSystem, dir: String): Option[Manifest] =
+    try {
+      val in = fs.open(new Path(dir, StatsFile))
+      val doc = try Json.readValue(in: java.io.InputStream, classOf[StatsDoc]) finally in.close()
+      val schema = DataType.fromJson(doc.schema).asInstanceOf[StructType]
+      val types = doc.keys.map(schema(_).dataType)
+      require(types.nonEmpty)
+      def bounds(vs: Seq[String]) = Row.fromSeq(vs.zip(types).map { case (v, t) =>
+        if (v == null) null else CatalystTypeConverters.convertToScala(Cast(Literal(v), t, Some("UTC")).eval(), t)
+      })
+      Some(Manifest(schema, doc.keys, doc.files.map { f =>
+        require(f.length == 2 + 2 * types.length)
+        FileStats(f.head, f(1).toLong, bounds(f.slice(2, 2 + types.length)), bounds(f.drop(2 + types.length)))
+      }))
+    } catch { case NonFatal(_) => None }
+
+  /** Manifest entries of newly written `files`. Integral keys are read
+    * from the parquet footers on the driver; otherwise one single-task
+    * aggregate job reads the files (one partition needs no shuffle before
+    * the per-file aggregate). */
+  private def statNew(spark: SparkSession, files: Seq[FileStatus], m: Manifest): Seq[FileStats] = {
+    val keyFields = m.keyFields
+    val empty = Row.fromSeq(keyFields.map(_ => null))
+    val footers =
+      if (keyFields.forall(f => integral(f.dataType)))
+        files.map(footerStats(spark.sparkContext.hadoopConfiguration, _, keyFields, empty))
+      else Nil
+    if (footers.nonEmpty && footers.forall(_.isDefined)) footers.flatten
+    else if (files.isEmpty) Nil
+    else {
+      val stats = spark.read.schema(m.schema).parquet(files.map(_.getPath.toString): _*).coalesce(1)
+        .groupBy(col("_metadata.file_name"))
+        .agg(count(lit(1)), struct(m.keys.map(k => min(col(k))): _*), struct(m.keys.map(k => max(col(k))): _*))
+        .collect().map(r => r.getString(0) -> FileStats(r.getString(0), r.getLong(1), r.getStruct(2), r.getStruct(3)))
+        .toMap
+      files.map(st => stats.getOrElse(st.getPath.getName, FileStats(st.getPath.getName, 0, empty, empty)))
+    }
+  }
 
   /** Whether a manifest key of type `t` is matched against long ids. */
   private[sources] def integral(t: DataType): Boolean = t match {
@@ -157,16 +173,15 @@ object StatsStore {
     case _ => false
   }
 
-  /** The stats of one file from its parquet footer: Some(Nil) for a file
-    * without rows, None when the footer cannot answer (a key column absent
-    * from a row group, or a chunk without statistics). The `file` string
-    * is the one `_metadata.file_path` gives for the same file. */
+  /** The stats of one file from its parquet footer; None when the footer
+    * cannot answer (a key column absent from a row group, or a chunk
+    * without statistics). */
   private def footerStats(conf: org.apache.hadoop.conf.Configuration, st: FileStatus,
-      keyFields: Seq[StructField]): Option[Seq[FileStats]] = {
+      keyFields: Seq[StructField], empty: Row): Option[FileStats] = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
     val blocks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
     val cnt = blocks.map(_.getRowCount).sum
-    if (cnt == 0) return Some(Nil)
+    if (cnt == 0) return Some(FileStats(st.getPath.getName, 0, empty, empty))
     val bounds = keyFields.map { f =>
       val chunks = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == f.name).flatMap(chunkBounds))
       if (chunks.exists(_.isEmpty)) None
@@ -176,16 +191,8 @@ object StatsStore {
       }
     }
     if (bounds.exists(_.isEmpty)) None
-    else Some(Seq(FileStats(filePath(st.getPath), cnt,
-      Row.fromSeq(bounds.map(_.get._1)), Row.fromSeq(bounds.map(_.get._2)))))
-  }
-
-  /** The string `_metadata.file_path` gives for `p`: its URI, without an
-    * empty authority (`file:/x`, not `file:///x`). */
-  private def filePath(p: Path): String = {
-    val u = p.toUri
-    if (u.getAuthority != null && u.getAuthority.nonEmpty) u.toString
-    else new java.net.URI(u.getScheme, null, u.getPath, u.getFragment).toString
+    else Some(FileStats(st.getPath.getName, cnt,
+      Row.fromSeq(bounds.map(_.get._1)), Row.fromSeq(bounds.map(_.get._2))))
   }
 
   /** The integral bounds of one column chunk: Some(None) when it holds only
@@ -209,15 +216,6 @@ object StatsStore {
     case _ => v
   }
 
-  /** Publish `m` as the manifest of `dir`, and remember it. Its rows live
-    * on the driver, so the write reads nothing from the manifest it
-    * replaces. */
-  private def writeManifest(spark: SparkSession, dir: String, m: Manifest): Unit = {
-    spark.createDataFrame(m.files.map(f => Row(f.file, f.cnt, f.min, f.max)).asJava, m.schema)
-      .coalesce(1).write.mode("overwrite").parquet(manifestDir(dir))
-    listing(spark, dir).foreach(remember(dir, _, m))
-  }
-
   /** Write `df` range-clustered on `key` into `numFiles` files, with a
     * manifest on `key`. */
   def write(df: DataFrame, dir: String, key: String, numFiles: Int): Unit =
@@ -230,28 +228,27 @@ object StatsStore {
     publish(df, dir, Seq(keyA, keyB), numFiles)
 
   /** The one table rewrite: publish `next` as the new state of `dir`. A
-    * table with a manifest is re-clustered on the manifest's own keys into
-    * as many files as the directory holds, and the manifest is rebuilt;
-    * any other table is written as it is. Either way the write goes to a
-    * staging directory that is swapped in ([[Publish]]), so `next` may read
-    * `dir` itself and needs no materialization first. */
+    * table with a manifest is re-clustered on its keys into as many files
+    * as it names, with a new manifest; any other table is written as it
+    * is. Either way through a staging directory ([[Publish]]), so `next`
+    * may read `dir` itself and needs no materialization first. */
   def overwrite(next: DataFrame, dir: String): Unit = {
     val spark = next.sparkSession
-    keys(spark, dir) match {
-      case Nil => Publish.overwrite(next, dir)
-      case ks => publish(next, dir, ks, partFiles(fsFor(spark, dir), dir).length.max(1))
+    manifest(spark, dir) match {
+      case None => Publish.overwrite(next, dir)
+      case Some(m) => publish(next, dir, m.keys, m.files.length.max(1))
     }
   }
 
-  /** Cluster `df` on `keys`, stage and swap it in, and stat its files into
-    * the manifest. The staging write reads the still-intact files of `dir`,
-    * so `df` may read `dir` itself. The manifest's schema is the per-file
-    * aggregate's, planned over the new files without running it. */
+  /** Cluster `df` on `keys` into a staging directory, stat its files into
+    * a manifest beside them, and swap both in with one rename. */
   private def publish(df: DataFrame, dir: String, keys: Seq[String], numFiles: Int): Unit = {
     val spark = df.sparkSession
-    Publish.overwrite(clustered(df, keys, numFiles), dir)
-    val m = Manifest(keyStats(spark.read.schema(df.schema).parquet(dir), keys).schema, Nil)
-    writeManifest(spark, dir, m.copy(files = statNew(spark, partFiles(fsFor(spark, dir), dir), df.schema, m)))
+    val staging = Publish.stage(clustered(df, keys, numFiles), dir)
+    val m = Manifest(df.schema, keys, Nil)
+    writeStats(spark, staging, m.copy(files = statNew(spark, dataFiles(graft.Tables.listing(spark, staging)), m)))
+    Publish.swapIn(spark, staging, dir)
+    graft.Tables.remember(spark, dir, m.schema)
   }
 
   /** `df` laid out for a manifest on `keys`: range-partitioned on one key,
@@ -269,30 +266,29 @@ object StatsStore {
     }
 
   /** Remove the manifest when it describes exactly `cols` (DROP INDEX of
-    * the index that built it): scans on them revert to full reads; the
-    * clustered data layout stays (harmless — just well-sorted files). A
-    * manifest another index built stays. */
+    * the index that built it): scans revert to full reads, and the
+    * harmless clustered layout stays. A manifest another index built
+    * stays. */
   def dropManifest(spark: SparkSession, dir: String, cols: Seq[String]): Unit =
-    if (keys(spark, dir) == cols) fsFor(spark, dir).delete(new Path(manifestDir(dir)), true)
+    if (keys(spark, dir) == cols) fsFor(spark, dir).delete(new Path(dir, StatsFile), false)
 
   /** Range scan of `key` in [lo, hi], with the residual filter applied,
     * plus (filesRead, filesTotal) so callers and tests can observe the
     * pruning. It reads only the files whose range intersects [lo, hi] when
     * the manifest covers `key`, and the whole table otherwise. The files
-    * are picked on the driver, so the scan runs no job until its frame is
-    * read. */
+    * are picked on the driver and read with the manifest's schema, so the
+    * scan runs no job until its frame is read. */
   def rangeScan(spark: SparkSession, dir: String, key: String,
       lo: Long, hi: Long): (DataFrame, Int, Int) =
     manifest(spark, dir).filter(_.keys.contains(key)) match {
       case Some(m) =>
         val i = m.keys.indexOf(key)
         val hit = m.files.filter(f => overlaps(f.min.get(i), f.max.get(i), lo, hi)).map(_.file).sorted
-        val pruned =
-          if (hit.isEmpty) graft.Tables.readCached(spark, dir).limit(0)
-          else graft.Tables.readFiles(spark, dir, hit)
+        val read = spark.read.schema(m.schema)
+        val pruned = if (hit.isEmpty) read.parquet(dir).limit(0) else read.parquet(hit.map(paths(dir)): _*)
         (pruned.filter(col(key).between(lo, hi)), hit.length, m.files.length)
       case None =>
-        val n = partFiles(fsFor(spark, dir), dir).length
+        val n = dataFiles(graft.Tables.listing(spark, dir)).length
         (graft.Tables.readCached(spark, dir).filter(col(key).between(lo, hi)), n, n)
     }
 
@@ -341,21 +337,15 @@ object StatsStore {
   // ---------------- keyed MERGE with file-level pruning ----------------
 
   /** Keyed MERGE (UPDATE … SET over an affected-id set) that rewrites
-    * ONLY the files whose manifest range of `key` intersects an
-    * affected id — the Delta/Iceberg MERGE shape the full-rewrite
-    * MutableTable/MutableGraph model documents as its 100 TB derivation
-    * (MutableGraph.scala scaladoc). Protocol: append the updated rows of
-    * the HIT files as new part files, delete the hit files, and patch the
-    * manifest (keep rows minus hits, plus stats of the new files) —
-    * untouched files are never read, rewritten, or re-statted.
-    *
-    * `ids` is the broadcast-sized affected set (the same writes-touch-few
-    * -rows assumption the whole write path documents). Returns
+    * ONLY the files whose manifest range of `key` intersects an affected
+    * id — the Delta/Iceberg MERGE shape. Protocol: append the updated rows
+    * of the HIT files as new part files, delete the hit files, and replace
+    * the manifest (the kept entries plus stats of the new files);
+    * untouched files are never read, rewritten, or re-statted. `ids` is
+    * the broadcast-sized affected set (writes touch few rows). Returns
     * (filesRewritten, filesTotal) so callers and tests can observe the
-    * pruning. Prototype caveat vs a real table format: the append-then-
-    * delete window is not atomic — Delta's transaction log is what makes
-    * this crash-safe in production.
-    */
+    * pruning. Unlike a table format's log, the append-then-delete window
+    * is not atomic. */
   def mergeSet(spark: SparkSession, dir: String, key: String,
       ids: Seq[Long], sets: Seq[(String, Column)],
       rowCond: Option[Column] = None): (Int, Int) =
@@ -388,9 +378,9 @@ object StatsStore {
   }
 
   /** Shared pruned-rewrite protocol: locate hit files via the manifest,
-    * rewrite them through `transform(touched, keyCond)`, swap files,
-    * patch the manifest, verify post-state. `deletes` relaxes the
-    * row-conservation guard to "never grows". */
+    * rewrite them through `transform(touched, keyCond)`, and replace the
+    * manifest. `deletes` relaxes the row-conservation guard to "never
+    * grows". */
   private def mergeRewrite(spark: SparkSession, dir: String, key: String,
       ids: Seq[Long], deletes: Boolean)(
       transform: (DataFrame, Column) => DataFrame): (Int, Int) = {
@@ -408,44 +398,32 @@ object StatsStore {
 
     // the append only adds files, so the hit files it reads stay intact
     // until they are deleted below: `staged` needs no materialization first
-    val staged = transform(graft.Tables.readFiles(spark, dir, hits), col(key).isin(ids: _*))
+    val staged = transform(spark.read.schema(m.schema).parquet(hits.map(paths(dir)): _*),
+      col(key).isin(ids: _*))
     staged.write.mode("append").parquet(dir)
     val fs = fsFor(spark, dir)
-    val undeleted = hits.filterNot(h => fs.delete(new Path(new java.net.URI(h)), false))
+    val undeleted = hits.filterNot(h => fs.delete(new Path(dir, h), false))
     if (undeleted.nonEmpty)
       throw new IllegalStateException(
         s"mergeSet torn: appended updated rows but ${undeleted.size} hit file(s) " +
           s"survived deletion (${undeleted.take(3).mkString(", ")}…) — " +
           "the directory now holds duplicates; restore from the manifest or re-run cleanup")
-    // survivors keep their manifest rows; only the files the append added
-    // are statted
-    val keepNames = keep.map(f => baseName(f.file)).toSet
-    val added = partFiles(fs, dir).filterNot(st => keepNames(st.getPath.getName))
-    val next = keep ++ statNew(spark, added, staged.schema, m)
-    // a staged partition that filtered to zero rows still writes an empty
-    // part file; it carries no data and no manifest row — remove it so the
-    // manifest-vs-directory guard below stays meaningful
-    val tracked = next.map(f => baseName(f.file)).toSet
-    added.filterNot(st => tracked(st.getPath.getName)).foreach { st =>
-      require(st.getLen < 16 * 1024, s"untracked non-trivial file ${st.getPath} — refusing to clean")
-      fs.delete(st.getPath, false)
-    }
-    // post-state guard (the append → delete → manifest-overwrite protocol
-    // is not atomic without a table-format transaction log): verify row
-    // conservation and manifest-vs-directory agreement BEFORE publishing
-    // the new manifest, so a torn merge fails loudly instead of being
-    // read as clean data
+    // only the files the append added are statted; one without rows (a
+    // staged partition that filtered to none) is removed
+    val kept = keep.map(_.file).toSet
+    val (empty, added) = statNew(spark,
+      dataFiles(graft.Tables.listing(spark, dir)).filterNot(st => kept(st.getPath.getName)), m).partition(_.cnt == 0)
+    empty.foreach(f => fs.delete(new Path(dir, f.file), false))
+    val next = keep ++ added
+    // the append → delete → replace protocol is not atomic without a
+    // table-format transaction log: check row conservation BEFORE
+    // replacing the manifest, so a torn merge fails loudly
     val rowsAfter = next.map(_.cnt).sum
     if (if (deletes) rowsAfter > rowsBefore else rowsAfter != rowsBefore)
       throw new IllegalStateException(
         s"merge torn: row count changed $rowsBefore -> $rowsAfter during merge")
-    val dirFiles = partFiles(fs, dir).map(_.getPath.getName).toSet
-    if (tracked != dirFiles)
-      throw new IllegalStateException(
-        s"mergeSet torn: manifest lists ${tracked.size} part files but the " +
-          s"directory holds ${dirFiles.size} (diff: " +
-          s"${(tracked diff dirFiles).take(3)} / ${(dirFiles diff tracked).take(3)})")
-    writeManifest(spark, dir, m.copy(files = next))
+    writeStats(spark, dir, m.copy(files = next))
+    graft.Tables.remember(spark, dir, m.schema)
     (hits.length, total)
   }
 }

@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * the manifest-hit files; everything else about the plan is unchanged
   * (the full WHERE still applies as a residual filter). At 100 TB this is
   * exactly Delta/Iceberg data skipping: as in their logs, the manifest is
-  * one row per file, the size of the file list the driver plans the scan
-  * from anyway, so [[StatsStore]] keeps its rows on the driver and picks
-  * the files there, with no Spark job.
+  * one entry per file, the size of the file list the driver plans the
+  * scan from anyway, and part of the table's state: [[StatsStore]] keeps
+  * it as a file inside the type's directory, reads it on the driver and
+  * picks the files there, with no Spark job. DROP INDEX deletes that file.
   */
 object IndexDdl {
 

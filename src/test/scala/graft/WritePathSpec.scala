@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -85,7 +87,7 @@ class WritePathSpec extends AnyFunSuite {
     val keys = 5000L until 5020L
     val ((n, _, _), jobs) = jobsDuring(t.update(col("k").isin(keys: _*), Seq("v" -> (col("v") + 1))))
     assert(n == 20)
-    assert(jobs <= 4, s"$jobs Spark jobs")
+    assert(jobs <= 3, s"$jobs Spark jobs")
     assertRangeScanAgrees(dir, 5000)
   }
 
@@ -142,7 +144,7 @@ class WritePathSpec extends AnyFunSuite {
     assert(StatsStore.rangeScan(spark, dir, "k", 0, 99)._1.count() == 100)
     val ((n, _, _), jobs) = jobsDuring(t.update(col("k") < 15000, Seq("v" -> (col("v") + 1000))))
     assert(n == 15000)
-    assert(jobs <= 6, s"$jobs Spark jobs")
+    assert(jobs <= 5, s"$jobs Spark jobs")
     assertRangeScanAgrees(dir, 100)
   }
 
@@ -215,19 +217,29 @@ class WritePathSpec extends AnyFunSuite {
     agrees(100, 199)
   }
 
-  /** The manifest of `dir` as written equals the per-file stats Spark
-    * computes over the files of `dir`: same `file` strings, row counts and
-    * key bounds, and no row for a file without rows. */
+  /** The data files of `dir`: the names Spark reads. */
+  private def dataFiles(dir: String): Set[String] =
+    new java.io.File(dir).list().filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+
+  /** The manifest of `dir`, as its stats file holds it, describes `keys`,
+    * names every data file of `dir`, and equals the per-file stats Spark
+    * computes over them: same file names, row counts and key bounds, with
+    * null bounds for a file without rows. */
   private def assertManifestMatchesFiles(dir: String, keys: Seq[String]): Unit = {
-    val written = spark.read.parquet(s"$dir-manifest")
+    assert(StatsStore.keys(spark, dir) == keys)
+    val entries = StatsStore.fileStats(spark, dir)
+    assert(entries.map(_.file).toSet == dataFiles(dir))
+    val empty = entries.filter(_.cnt == 0)
+    assert(empty.forall(f => f.min.toSeq.forall(_ == null) && f.max.toSeq.forall(_ == null)))
     val computed = spark.read.parquet(dir)
-      .groupBy(col("_metadata.file_path").as("file"))
+      .groupBy(col("_metadata.file_name").as("file"))
       .agg(count(lit(1)).as("cnt"),
         struct(keys.map(k => min(col(k)).as(k)): _*).as("min"),
         struct(keys.map(k => max(col(k)).as(k)): _*).as("max"))
-    assert(written.schema.map(_.name) == computed.schema.map(_.name))
+    val written = spark.createDataFrame(entries.filter(_.cnt > 0)
+      .map(f => Row(f.file, f.cnt, f.min, f.max)).asJava, computed.schema)
     assert(written.exceptAll(computed).isEmpty && computed.exceptAll(written).isEmpty,
-      s"manifest ${written.collect().mkString(", ")} vs files ${computed.collect().mkString(", ")}")
+      s"manifest ${entries.mkString(", ")} vs files ${computed.collect().mkString(", ")}")
   }
 
   test("footer stats of a pruned UPDATE and a pruned DELETE equal Spark's per-file stats") {
@@ -271,9 +283,9 @@ class WritePathSpec extends AnyFunSuite {
       when(col("id") < 100, col("id")).as("k"), (col("id") % 7).as("v"))
     StatsStore.write(df, dir, "k", numFiles = 3)
     assertManifestMatchesFiles(dir, Seq("k"))
-    val nullFiles = spark.read.parquet(s"$dir-manifest").filter(col("min.k").isNull)
-    assert(!nullFiles.isEmpty, "no file holds only null keys")
-    assert(nullFiles.filter(col("max.k").isNotNull || col("cnt") === 0).isEmpty)
+    val nullFiles = StatsStore.fileStats(spark, dir).filter(_.min.isNullAt(0))
+    assert(nullFiles.nonEmpty, "no file holds only null keys")
+    assert(nullFiles.forall(f => f.max.isNullAt(0) && f.cnt > 0))
     // a pruned write that nulls every key of one file
     val first = StatsStore.rangeScan(spark, dir, "k", 0, 99)._1.select("k").collect().map(_.getLong(0))
     StatsStore.mergeSet(spark, dir, "k", first.toSeq, Seq("k" -> lit(null).cast("long")))
@@ -285,15 +297,12 @@ class WritePathSpec extends AnyFunSuite {
     val (dir, _) = manifestTable("wp_footer_empty")
     val (_, read, _) = StatsStore.rangeScan(spark, dir, "k", 0, 0)
     assert(read == 1)
-    val firstFile = spark.read.parquet(s"$dir-manifest").filter(col("min.k") === 0).head()
-    val keys = 0L until firstFile.getAs[Long]("cnt")
+    val firstFile = StatsStore.fileStats(spark, dir).find(_.min.getLong(0) == 0).get
+    val keys = 0L until firstFile.cnt
     val (rewritten, _) = StatsStore.mergeDelete(spark, dir, "k", keys)
     assert(rewritten == 1)
     assertManifestMatchesFiles(dir, Seq("k"))
-    val files = new java.io.File(dir).list().filter(_.startsWith("part-")).toSet
-    val listed = spark.read.parquet(s"$dir-manifest").collect()
-      .map(r => new org.apache.hadoop.fs.Path(new java.net.URI(r.getAs[String]("file"))).getName).toSet
-    assert(files == listed)
+    assert(StatsStore.fileStats(spark, dir).forall(_.cnt > 0))
     assert(spark.read.parquet(dir).count() == 20000 - keys.length)
   }
 
@@ -355,7 +364,7 @@ class WritePathSpec extends AnyFunSuite {
     val keys = 5000L until 5020L
     val (n, jobs) = jobsDuring(t.delete(col("k").isin(keys: _*)))
     assert(n == 20)
-    assert(jobs <= 4, s"$jobs Spark jobs")
+    assert(jobs <= 3, s"$jobs Spark jobs")
     assertRangeScanAgrees(dir, 5000)
   }
 
@@ -405,5 +414,111 @@ class WritePathSpec extends AnyFunSuite {
     assert(t.df.filter(col("v") === -1L).count() == 10)
     assertManifestMatchesFiles(dir, Seq("k"))
     assertScanEqualsFilter(dir, 100)
+  }
+
+  /** A copy of the files of `dir` (its stats file included) at a fresh
+    * path, which no memo has seen. */
+  private def copyFiles(dir: String, name: String): String = {
+    val copy = freshDir(name)
+    Files.createDirectories(Paths.get(copy))
+    new java.io.File(dir).listFiles().filter(_.isFile)
+      .foreach(f => Files.copy(f.toPath, Paths.get(copy, f.getName)))
+    copy
+  }
+
+  test("a range scan after a plain parquet overwrite of a manifest table returns what a filter returns") {
+    val (dir, _) = manifestTable("wp_plain_overwrite")
+    assertScanEqualsFilter(dir, 5000)
+    spark.range(100000, 100100).select(col("id").as("k"), lit(1L).as("v"))
+      .write.mode("overwrite").parquet(dir)
+    assert(StatsStore.rangeScan(spark, dir, "k", 100000, 100099)._1.count() == 100)
+    assertScanEqualsFilter(dir, 100000)
+    assertScanEqualsFilter(dir, 5000)
+  }
+
+  test("a range scan after a plain parquet append to a manifest table sees the appended rows") {
+    val (dir, _) = manifestTable("wp_plain_append")
+    assertScanEqualsFilter(dir, 5000)
+    spark.range(5000, 5010).select(col("id").as("k"), lit(-1L).as("v"))
+      .write.mode("append").parquet(dir)
+    assert(StatsStore.rangeScan(spark, dir, "k", 5000, 5099)._1.count() == 110)
+    assertScanEqualsFilter(dir, 5000)
+  }
+
+  test("a range scan of a copy of a manifest table's files prunes and runs no Spark job until its frame is read") {
+    val (dir, _) = manifestTable("wp_copy")
+    val copy = copyFiles(dir, "wp_copy_dst")
+    val ((scan, read, total), jobs) = jobsDuring(StatsStore.rangeScan(spark, copy, "k", 5000, 5099))
+    assert(jobs == 0, s"$jobs Spark jobs")
+    assert(read < total, s"read $read of $total files")
+    assert(scan.count() == 100)
+    assertScanEqualsFilter(copy, 5000)
+  }
+
+  test("a manifest read back from its stats file keeps integral, NaN-bounded double, string, decimal, date and timestamp bounds") {
+    for ((name, key) <- Seq("wp_rt_int" -> col("id").cast("int"),
+        "wp_rt_double" -> when(col("id") % 50 === 0, lit(Double.NaN)).otherwise(col("id") / 3.0),
+        "wp_rt_string" -> format_string("%05d", col("id")),
+        "wp_rt_decimal" -> (col("id") / 7).cast("decimal(12,3)"),
+        "wp_rt_date" -> date_from_unix_date(col("id").cast("int")),
+        "wp_rt_ts" -> timestamp_micros(col("id") * 1000003))) {
+      val dir = freshDir(name)
+      StatsStore.write(spark.range(2000).select(key.as("k"), (col("id") % 97).as("v")), dir, "k", numFiles = 4)
+      val copy = copyFiles(dir, s"${name}_copy")
+      assertManifestMatchesFiles(copy, Seq("k"))
+      if (name == "wp_rt_double") {
+        assert(StatsStore.fileStats(spark, copy).exists(_.max.getDouble(0).isNaN))
+        assertScanEqualsFilter(copy, 600)
+      }
+    }
+  }
+
+  test("the schema a StatsStore write memoizes is the one Spark infers from its files") {
+    val dir = freshDir("wp_seeded")
+    val df = spark.range(400).select(col("id").as("k"), col("id").cast("int").as("i"),
+      (col("id") / 7.0).as("d"), format_string("s%d", col("id")).as("s"),
+      timestamp_seconds(col("id")).as("ts"), date_from_unix_date(col("id").cast("int")).as("day"),
+      col("id").cast("decimal(12,2)").as("dec"), (col("id") % 2 === 0).as("b"),
+      array(col("id").cast("string")).as("arr"), struct(col("id").as("x")).as("st"))
+    def inferred = spark.read.parquet(dir).schema
+    val (_, writeJobs) = jobsDuring(StatsStore.write(df, dir, "k", numFiles = 4))
+    val (cached, readJobs) = jobsDuring(Tables.readCached(spark, dir).schema)
+    assert(readJobs == 0, s"$readJobs Spark jobs after $writeJobs for the write")
+    assert(cached == inferred)
+    StatsStore.mergeSet(spark, dir, "k", Seq(5L), Seq("s" -> lit("x")))
+    val (after, mergeReadJobs) = jobsDuring(Tables.readCached(spark, dir).schema)
+    assert(mergeReadJobs == 0, s"$mergeReadJobs Spark jobs")
+    assert(after == inferred)
+  }
+
+  test("no write of a manifest table leaves a -manifest directory beside it") {
+    val (dir, t) = manifestTable("wp_sibling")
+    t.update(col("k").isin(5000L until 5020L: _*), Seq("v" -> (col("v") + 1)))
+    t.delete(col("k").isin(9000L until 9020L: _*))
+    val (sqlDir, sql, agrees, cat) = sqlTable("wp_sibling_sql")
+    sql("CREATE INDEX ON tdml (k)")
+    graft.sql.Script.run(spark, sfDir,
+      """BEGIN;
+        |UPDATE tdml SET v = 100 WHERE k < 50;
+        |ROLLBACK;""".stripMargin, cat).collect()
+    agrees(0, 99)
+    sql("DROP INDEX tdml[k]")
+    for (d <- Seq(dir, sqlDir)) assert(!Files.exists(Paths.get(s"$d-manifest")), d)
+  }
+
+  test("a second handle on a table continues its change feed, and copyOf starts a fresh one") {
+    val dir = freshDir("wp_feed")
+    def table = MutableTable.copyOf(spark, spark.range(10).select(col("id").as("k"), lit(0L).as("v")), dir, Some("k"))
+    def feed(t: MutableTable) =
+      t.changeFeed.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    val a = table
+    a.update(col("k").isin(1L, 2L), Seq("v" -> lit(1L)))
+    val b = new MutableTable(spark, dir, Some("k"))
+    b.update(col("k") === 3L, Seq("v" -> lit(1L)))
+    a.delete(col("k") === 4L)
+    assert(feed(a) == Seq((1, "update", 1L), (1, "update", 2L), (2, "update", 3L), (3, "delete", 4L)))
+    val c = table
+    c.delete(col("k") === 5L)
+    assert(feed(c) == Seq((1, "delete", 5L)))
   }
 }
