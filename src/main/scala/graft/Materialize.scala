@@ -26,17 +26,24 @@ import org.apache.spark.sql.DataFrame
   *    every round, and a reliable checkpoint per round would fill the
   *    checkpoint directory with files nothing deletes. So loop rounds
   *    carry the executor-loss trade above even with a checkpoint dir set.
+  *  - [[local]] pins are executor-local too, for the same reason: the
+  *    results of the GraphX algorithms, one per call.
   */
 object Materialize {
 
   /** Materialize (or, with eager=false, mark-for-materialization) `df`,
     * truncating lineage via the checkpoint policy above. */
   def once(df: DataFrame, eager: Boolean = true): DataFrame =
-    if (!eager) df.localCheckpoint(eager = false)
+    if (!eager) local(df, eager = false)
     else {
       val sc = df.sparkSession.sparkContext
       if (sc.getCheckpointDir.isEmpty)
         sc.getConf.getOption("spark.checkpoint.dir").foreach(sc.setCheckpointDir)
-      if (sc.getCheckpointDir.isEmpty) df.localCheckpoint() else df.checkpoint()
+      if (sc.getCheckpointDir.isEmpty) local(df) else df.checkpoint()
     }
+
+  /** An executor-local pin of `df` whatever the checkpoint directory:
+    * its blocks go when the pinned frame is unpersisted or collected, and
+    * nothing is left on disk. */
+  def local(df: DataFrame, eager: Boolean = true): DataFrame = df.localCheckpoint(eager)
 }

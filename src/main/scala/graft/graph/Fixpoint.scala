@@ -12,8 +12,8 @@ import graft.Materialize
   * `repeat` … `until`/`emit` and Cypher variable-length paths deeper than
   * 8 hops. Both carry per-walk state (a traverser, a relationship list), so
   * a round's rows are walks, not vertices, and no vertex program holds
-  * them; BFS traversal and the graph algorithms run as GraphX supersteps
-  * (see [[GraphAlgos]]). A round is a step over the previous round's
+  * them; BFS traversal and the graph algorithms run as vertex rounds in
+  * [[GraphAlgos]], on the driver or on GraphX. A round is a step over the previous round's
   * output; the caller writes the step, and the loop, its pins and its
   * probes live here.
   *

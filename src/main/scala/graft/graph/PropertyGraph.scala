@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * graph/Edge.java:34). Adjacency is NOT a per-vertex linked list
   * (EdgeLinkedList.java:53 — index-free adjacency is a single-node
   * design); it's the `edges` DataFrame, which the query front-ends join
-  * on `src`/`dst` like any other relation, and which traversals and graph
-  * algorithms partition once into GraphX edge partitions ([[GraphAlgos]]).
+  * on `src`/`dst` like any other relation. Traversals and graph
+  * algorithms ([[GraphAlgos]]) collect it to the driver when Spark would
+  * broadcast it, and partition it into GraphX edge partitions otherwise.
   *
   * Schema contract: vertices(id: Long, label: String, props...),
   * edges(src: Long, dst: Long, label: String, props...).
@@ -21,7 +22,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * analog (reference executor/BreadthFirstTraverseStep.java:34; grammar
     * SQLParser.g4:220-229), along the edges labelled `edgeLabel` (any label
     * without one). Returns (id, depth) with depth the first (minimum) reach
-    * depth, seeds at 0: [[GraphAlgos.traverse]]'s GraphX supersteps. */
+    * depth, seeds at 0: [[GraphAlgos.traverse]]'s rounds, on the driver
+    * when Spark would broadcast the seeds and edges, else on GraphX. */
   def traverse(seeds: DataFrame, maxDepth: Int, direction: String = "out",
       edgeLabel: Option[String] = None): DataFrame =
     GraphAlgos.traverse(seeds, edgeLabel.fold(edges)(l => edges.filter(col("label") === l)),

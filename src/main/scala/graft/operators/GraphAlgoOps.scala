@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
 
 /** Whole-graph algorithms with exact DuckDB oracles (SURVEY.md §2.8 tail).
   *
-  * The fixed-point algorithms ([[GraphAlgos]], GraphX supersteps) run
-  * pinned iteration counts and deterministic tie-breaks, so the oracle
-  * can replay them:
+  * The fixed-point algorithms ([[GraphAlgos]]: on the driver for graphs
+  * this small, whose ids and edges Spark would broadcast; as GraphX
+  * supersteps otherwise) run pinned iteration counts and deterministic
+  * tie-breaks, so the oracle can replay them:
   * PageRank/label-propagation oracles are the same recurrence UNROLLED
   * into N CTE levels (generated here), CC is min-reachability, SSSP is
   * bounded-depth path enumeration. q_graph_pagerank / q_graph_cc in

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *   - shortestPath (function/sql/graph/SQLFunctionShortestPath.java,
   *     GraphAlgorithms.java:411) → BFS first-reach depth.
   *   - PageRank / CC / triangles (graph/olap/GraphAlgorithms.java:164,
-  *     309, 1263-1403) → GraphAlgos' GraphX PageRank and CC for the
-  *     iterative ones; triangles as a canonical-orientation 3-way join
+  *     309, 1263-1403) → GraphAlgos' PageRank and CC (on the driver or
+  *     on GraphX) for the iterative ones; triangles as a canonical-orientation 3-way join
   *     (PartitionedTriangleOp analog), which distributes as ordinary hash
   *     joins at 100 TB.
   */
@@ -200,7 +200,7 @@ object GraphOps {
         .agg(coalesce(sum(col("c")), lit(0L)).as("n_triangles"))
     },
 
-    // ---- PageRank (GraphAlgos on GraphX; reference
+    // ---- PageRank (GraphAlgos; reference
     //      GraphAlgorithms.java:164). Oracled by the unrolled recurrence
     //      over the same fromTpch graph: rank0 = 1.0, rank_{i+1} = 0.15 +
     //      0.85 * sum(in-rank / outdeg), then ranks scaled to sum to |V|
@@ -242,7 +242,7 @@ object GraphOps {
         .limit(20)
     },
 
-    // ---- connected components (GraphAlgos on GraphX;
+    // ---- connected components (GraphAlgos;
     //      GraphAlgorithms.java:309). Oracled by min-label propagation
     //      unrolled past the graph's diameter (comp0 = id; comp_{k+1}(v) =
     //      min over v ∪ N(v) of comp_k): the co-purchase graph converges

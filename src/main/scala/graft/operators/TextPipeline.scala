@@ -200,8 +200,8 @@ object TextPipeline {
     * document that HAS a near-dup (singletons keep themselves trivially
     * and are not emitted): (doc_id, canonical_id, keep). Scale shape:
     * the pair graph is tiny relative to the corpus (only near-dups), and
-    * CC is the bounded min-propagation of [[graft.graph.GraphAlgos]] (a
-    * GraphX Pregel) — dup clusters are shallow, so few iterations converge. */
+    * CC is the bounded min-propagation of [[graft.graph.GraphAlgos]] —
+    * dup clusters are shallow, so few iterations converge. */
   def dedupClusters(docs: DataFrame, minJac: Double): DataFrame = {
     val pairs = minhashDupPairs(docs, minJac).select("doc_a", "doc_b")
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Seeds are the FROM type's vertices passing WHERE (bare identifiers are
   * the vertex's own properties); the traversal is [[PropertyGraph.traverse]]
-  * — GraphX supersteps, one per depth, not the reference's single-node
-  * iterator stack — and emits one row per reached vertex with its first
+  * — one synchronous round per depth over the whole frontier, not the
+  * reference's iterator stack, run on the driver when Spark would
+  * broadcast the seeds and edges and as GraphX supersteps otherwise
+  * ([[GraphAlgos]]) — and emits one row per reached vertex with its first
   * (minimum) reach depth, the breadth-first contract of the reference's
   * BreadthFirstTraverseStep. Result: (key, label, depth) ordered by
   * (depth, label, key).
@@ -104,9 +106,8 @@ object Traverse {
     * sorting by that path IS pre-order on a tree (the contract the
     * reference's depthFirstOrder test pins — sibling order is unspecified
     * there, ours is by id). Set-oriented: [[GraphAlgos.traversePaths]]
-    * relaxes the paths one superstep per level, the path array doing the
-    * ordering work a traversal stack does on a single node — no driver-side
-    * iteration over rows. A walk that reaches depth `MaxLevels` with no
+    * relaxes the paths one round per level, the path array doing the
+    * ordering work a traversal stack does. A walk that reaches depth `MaxLevels` with no
     * MAXDEPTH/WHILE bound at or below it fails rather than return a
     * truncated order. */
   private def depthFirst(g: PropertyGraph, seeds: DataFrame, st: TraverseStmt): DataFrame = {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,16 +11,22 @@ import graft.graph.{GraphAlgos, PropertyGraph}
 /** BFS traversal, SSSP, A*, label propagation and walk counts against
   * plain-Scala references on one small graph with integer ids (plus a few
   * graphs built for a traversal case), and what each call costs: Spark
-  * jobs, and the RDDs it leaves cached or uncaches. */
-class GraphAlgosSpec extends AnyFunSuite {
+  * jobs, and the RDDs it leaves cached or uncaches. Every case runs on the
+  * driver and again on GraphX. */
+class GraphAlgosSpec extends AnyFunSuite with GraphPaths {
   import TestSession._
   import spark.implicits._
 
-  /** Spark jobs a traversal runs besides one message check per superstep,
-    * as measured under `local[4]`: 2 (the pin and the collect), or up to 4
-    * when a check, Pregel's `take(1)`, finds the first partition empty and
-    * scans the rest in a second job. */
+  /** Spark jobs a traversal runs on GraphX besides one message check per
+    * superstep, as measured under `local[4]`: 2 (the pin and the collect),
+    * or up to 4 when a check, Pregel's `take(1)`, finds the first partition
+    * empty and scans the rest in a second job. */
   private val BfsJobs = 4
+
+  /** Spark jobs a call on the driver runs, as measured: the collects of
+    * its ids and of its edges. Its result is a local relation, which the
+    * test's own collect reads without a job. */
+  private val LocalJobs = 2
 
   private val vs = 1 to 7
   /** 3 -> 2 twice; 4 and 7 are sinks; 9 and 8 are not vertices, and
@@ -41,15 +48,15 @@ class GraphAlgosSpec extends AnyFunSuite {
     }
 
   /** `f`'s result and the Spark jobs it ran, after checking that it left
-    * at most `pins` new RDDs cached, uncached none, and that the pinned
-    * edges still read. */
-  private def call[T](pins: Int)(f: => T): (T, Int) = {
+    * at most `pins` new RDDs cached (none on the driver path), uncached
+    * none, and that the pinned edges still read. */
+  private def call[T](local: Boolean, pins: Int)(f: => T): (T, Int) = {
     assert(edges.count() == es.size)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val (out, jobs) = jobsDuring(f)
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert(before.subsetOf(after), s"uncached: ${before -- after}")
-    assert((after -- before).size <= pins, s"left cached: ${after -- before}")
+    assert((after -- before).size <= (if (local) 0 else pins), s"left cached: ${after -- before}")
     assert(edges.count() == es.size)
     (out, jobs)
   }
@@ -93,14 +100,14 @@ class GraphAlgosSpec extends AnyFunSuite {
     paths
   }
 
-  test("traverse: least reach depth along out, in and both edges, label-filtered too, ids' type kept") {
+  bothPaths("traverse: least reach depth along out, in and both edges, label-filtered too, ids' type kept") { local =>
     val labelled = es.map { case (a, b, w) => (a, b, if (w < 1.0) "light" else "heavy") }
     val g = PropertyGraph(vertices.withColumn("label", lit("v")), labelled.toDF("src", "dst", "label"))
     for (direction <- Seq("out", "in", "both"); label <- Seq(None, Some("heavy"));
          (seeds, maxDepth) <- Seq((Set(1), 2), (Set(3, 6), Int.MaxValue))) {
       val pairs = labelled.collect { case (a, b, l) if label.forall(_ == l) => (a, b) }
       val expected = bfs(seeds, pairs, maxDepth, direction)
-      val (out, jobs) = call(pins = 1) {
+      val (out, jobs) = call(local, pins = 1) {
         val df = g.traverse(seeds.toSeq.toDF("id"), maxDepth, direction, label)
         (df, df.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
       }
@@ -108,17 +115,18 @@ class GraphAlgosSpec extends AnyFunSuite {
       assert(typeOf(out._1, "id") == IntegerType && typeOf(out._1, "depth") == IntegerType)
       // the last superstep is the one whose check finds no message
       val supersteps = math.min(maxDepth, expected.values.max + 1)
-      assert(jobs <= supersteps + BfsJobs, s"traverse: $jobs Spark jobs for $supersteps supersteps")
+      assert(jobs <= (if (local) LocalJobs else supersteps + BfsJobs),
+        s"traverse: $jobs Spark jobs for $supersteps supersteps")
     }
     assert(bfs(Set(1), es.map(e => (e._1, e._2)), 2, "out")(4) == 2) // through 9, which is not a vertex
   }
 
-  test("traverse: a seed with no edges, MAXDEPTH 0 (seeds only) and an unbounded walk around a cycle") {
+  bothPaths("traverse: a seed with no edges, MAXDEPTH 0 (seeds only) and an unbounded walk around a cycle") { local =>
     // 0 -> 1 -> 2 -> 3 -> 4 -> 0, and 4 -> 7 off the cycle
     val cycle = (0 until 5).map(i => (i, (i + 1) % 5)) :+ (4, 7)
     val edgeFrame = cycle.toDF("src", "dst")
     def run(seeds: Seq[Int], maxDepth: Int, direction: String, e: DataFrame = edgeFrame) =
-      call(pins = 1)(GraphAlgos.traverse(seeds.toDF("id"), e, maxDepth, direction)
+      call(local, pins = 1)(GraphAlgos.traverse(seeds.toDF("id"), e, maxDepth, direction)
         .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)._1
     assert(run(Seq(42), 3, "both") == Map(42 -> 0))
     assert(run(Seq(1), 3, "out", edgeFrame.filter(lit(false))) == Map(1 -> 0))
@@ -128,11 +136,11 @@ class GraphAlgosSpec extends AnyFunSuite {
     assert(bfs(Set(0), cycle, Int.MaxValue, "out")(7) == 5)
   }
 
-  test("traversePaths keeps the least path of a vertex's first reach depth, not the least path overall") {
+  bothPaths("traversePaths keeps the least path of a vertex's first reach depth, not the least path overall") { local =>
     // 5 is reached by 0 -> 5 and by 0 -> 1 -> 2 -> 5, the lexicographically
     // least path; 6 extends the path 5 keeps
     val pairs = Seq((0, 5), (0, 1), (1, 2), (2, 5), (5, 6))
-    def run(seed: Int, pairs: Seq[(Int, Int)], direction: String) = call(pins = 1) {
+    def run(seed: Int, pairs: Seq[(Int, Int)], direction: String) = call(local, pins = 1) {
       val df = GraphAlgos.traversePaths(Seq(seed).toDF("id"), pairs.toDF("src", "dst"), Int.MaxValue, direction)
       (typeOf(df, "id"), df.collect().map(r => r.getInt(0) -> r.getSeq[Long](1).map(_.toInt)).toMap)
     }._1
@@ -150,25 +158,26 @@ class GraphAlgosSpec extends AnyFunSuite {
     assert(order == Seq(0L -> 0, 1L -> 1, 2L -> 2, 5L -> 1, 6L -> 2))
   }
 
-  test("weightedSssp is least cost over paths of at most iters edges, outside vertices too") {
+  bothPaths("weightedSssp is least cost over paths of at most iters edges, outside vertices too") { local =>
     for (iters <- Seq(1, 3)) {
-      val (out, jobs) = call(pins = 1) {
+      val (out, jobs) = call(local, pins = 1) {
         val df = GraphAlgos.weightedSssp(edges, col("id") === 1, vertices, iters)
         (df, df.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap)
       }
       assert(out._2 == bellmanFord(1, iters))
       assert(typeOf(out._1, "id") == IntegerType)
-      // at most one message check per superstep, the pin and the collect
-      assert(jobs <= iters + 2, s"weightedSssp: $jobs Spark jobs")
+      // on GraphX at most one message check per superstep, the pin and
+      // the collect
+      assert(jobs <= (if (local) LocalJobs else iters + 2), s"weightedSssp: $jobs Spark jobs")
     }
     assert(bellmanFord(1, 3)(4) == 2.0) // through 9, which is not a vertex
   }
 
-  test("aStarPair finds the least cost within iters edges, and no row for an unreached target") {
+  bothPaths("aStarPair finds the least cost within iters edges, and no row for an unreached target") { local =>
     val h = (target: Int) => (v: org.apache.spark.sql.Column) =>
       when(v === target, lit(0.0)).otherwise(lit(0.25)) // no edge costs less
     for ((s, target, iters) <- Seq((1, 4, 2), (1, 4, 3), (1, 5, 3), (4, 4, 2), (1, 9, 3))) {
-      val (out, jobs) = call(pins = 0) {
+      val (out, jobs) = call(local, pins = 0) {
         val df = GraphAlgos.aStarPair(edges, s, target, h(target), iters)
         (df, df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq)
       }
@@ -176,12 +185,13 @@ class GraphAlgosSpec extends AnyFunSuite {
         s"$s -> $target in $iters")
       // the DataFrame loop's source id was a long literal
       assert(typeOf(out._1, "id") == LongType)
-      // one goal lookup per superstep; the row is built from its value
-      assert(jobs <= iters, s"aStarPair: $jobs Spark jobs")
+      // on GraphX one goal lookup per superstep; the row is built from its
+      // value, and `h` folds on the driver
+      assert(jobs <= (if (local) LocalJobs else iters), s"aStarPair: $jobs Spark jobs")
     }
   }
 
-  test("labelPropagation counts duplicate edges, breaks ties to the smaller label, keeps ids' type") {
+  bothPaths("labelPropagation counts duplicate edges, breaks ties to the smaller label, keeps ids' type") { local =>
     val inner = es.filter { case (a, b, _) => vs.contains(a) && vs.contains(b) }
     def reference(iters: Int): Map[Int, Int] = (1 to iters).foldLeft(vs.map(v => v -> v).toMap) { (lab, _) =>
       vs.map { v =>
@@ -191,29 +201,48 @@ class GraphAlgosSpec extends AnyFunSuite {
     }
     assert(reference(1)(2) == 3 && reference(1)(7) == 5) // the duplicate and the tie decide
     for (iters <- Seq(1, 3)) {
-      val (out, jobs) = call(pins = 1) {
+      val (out, jobs) = call(local, pins = 1) {
         val df = GraphAlgos.labelPropagation(vertices, edges.select("src", "dst"), iters)
         (df, df.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
       }
       assert(out._2 == reference(iters))
       assert(typeOf(out._1, "id") == IntegerType && typeOf(out._1, "lab") == IntegerType)
-      // the supersteps run lazily under the result's pin; then the collect
-      assert(jobs <= 2, s"labelPropagation: $jobs Spark jobs")
+      // on GraphX the supersteps run lazily under the result's pin; then
+      // the collect
+      assert(jobs <= (if (local) LocalJobs else 2), s"labelPropagation: $jobs Spark jobs")
     }
   }
 
-  test("walkCounts counts walks per depth, duplicate edges twice, through non-vertices") {
+  bothPaths("walkCounts counts walks per depth, duplicate edges twice, through non-vertices") { local =>
     val maxDepth = 3
     val reference = (1 to maxDepth).scanLeft(Map(1 -> 1L)) { (walks, _) =>
       es.collect { case (a, b, _) if walks.contains(a) => b -> walks(a) }.groupMapReduce(_._1)(_._2)(_ + _)
     }.zipWithIndex.drop(1).flatMap { case (walks, d) => walks.map { case (v, n) => (d, v, n) } }.toSet
-    val (out, jobs) = call(pins = 1) {
+    val (out, jobs) = call(local, pins = 1) {
       val df = GraphAlgos.walkCounts(edges.select("src", "dst"), col("id") === 1, vertices, maxDepth)
       (df, df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet)
     }
     assert(out._2 == reference)
     assert(reference.contains((2, 2, 2L)) && reference.contains((3, 9, 2L)))
     assert(typeOf(out._1, "id") == IntegerType && typeOf(out._1, "walks") == LongType)
-    assert(jobs <= 2, s"walkCounts: $jobs Spark jobs")
+    assert(jobs <= (if (local) LocalJobs else 2), s"walkCounts: $jobs Spark jobs")
+  }
+
+  test("a call runs on the driver only while the estimates of its ids and edges are within the threshold") {
+    val vs = Seq(1L, 2L, 3L).toDF("id")
+    val es = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    def estimate(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val edgeSize = estimate(es.select(col("src").cast("long"), col("dst").cast("long")))
+    assert(estimate(vs.select(col("id").cast("long"))) < edgeSize)
+    /** The components at `threshold`, and whether they came from the driver. */
+    def run(threshold: BigInt) = withThreshold(threshold.toString) {
+      val df = GraphAlgos.connectedComponents(vs, es, 5)
+      (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        df.queryExecution.optimizedPlan.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
+    }
+    val all = Map(1L -> 1L, 2L -> 1L, 3L -> 1L)
+    assert(run(edgeSize) == (all, true))
+    // the edges one byte over: GraphX, and its pinned result
+    assert(run(edgeSize - 1) == (all, false))
   }
 }

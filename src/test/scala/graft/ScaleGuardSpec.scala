@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * generator's hot-group width cap (PropertyGraph.coPairs), the MinHash
   * band-bucket cap and their cut counts, and the Materialize checkpoint
   * policy. */
-class ScaleGuardSpec extends AnyFunSuite {
+class ScaleGuardSpec extends AnyFunSuite with GraphPaths {
   import TestSession._
   import spark.implicits._
 
@@ -124,6 +124,21 @@ class ScaleGuardSpec extends AnyFunSuite {
         .toSeq
       // the one eager pin, of the loop-invariant edges; none per pass
       assert(rddDirs.size <= 1, s"checkpointed RDDs: ${rddDirs.mkString(", ")}")
+    }
+  }
+
+  test("Materialize.local: a GraphX traversal leaves no checkpoint behind") {
+    withCheckpointDir { dir =>
+      val depths = withThreshold("-1") {
+        graft.graph.GraphAlgos.traverse(Seq(0L).toDF("id"), Seq((0L, 1L), (1L, 2L)).toDF("src", "dst"), 5, "out")
+          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      }
+      assert(depths === Map(0L -> 0, 1L -> 1, 2L -> 2))
+      import scala.jdk.CollectionConverters._
+      val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .filter(p => java.nio.file.Files.isDirectory(p) && p.getFileName.toString.startsWith("rdd-"))
+        .toSeq
+      assert(rddDirs.isEmpty, s"checkpointed RDDs: ${rddDirs.mkString(", ")}")
     }
   }
 }
